@@ -272,8 +272,8 @@ object SearchQueries {
           (pmod(xxhash64(col("event_id")), lit(100)).cast("double") / 100 + 0.5).as("x1"),
           (pmod(xxhash64(col("event_id") + 7), lit(100)).cast("double") / 100 + 0.5).as("x2"))
         .withColumn("y", (col("x1") * col("x2") > lit(1.0)).cast("int"))
-        // pin partition layout: LR treeAggregate float sums are partition-
-        // order-sensitive; the gate booleans must not depend on cpus/splits
+        // pin partition layout: LR float sums run in partition order; the
+        // gate booleans must not depend on cpus/splits
         .repartition(4, col("event_id")).sortWithinPartitions("event_id")
         .drop("event_id")
       // lrTopK=0: this gate pins the AICc FINAL SELECTION over an MI-stage
@@ -283,9 +283,9 @@ object SearchQueries {
         CdfcConfig(cMax = 3, binaryOps = Seq(BinOp.Mul),
           unaryOps = Seq(UnaryOp.Minus, UnaryOp.MinMax), groupByAggs = Seq.empty,
           lrTopK = 0)).run()
-      // 3-point C subgrid of the reference's 7: each grid value costs
-      // folds x champions lbfgs fits (each fit ~25 treeAggregate JOBS on a
-      // gate-sized input — the gate is job-latency-bound, not data-bound);
+      // 3-point C subgrid of the reference's 7: all folds x champions x
+      // grid models fit in one batch (one job per Newton pass, whatever the
+      // grid size), but each grid value still adds models to every pass;
       // the full DefaultGrid stays exercised in LrScorerSpec
       val gateGrid = Seq(0.01, 1.0, 100.0).map(1.0 / _)
       val (winner, table) = LrScorer.selectByAicc(ev, res, "y",
@@ -330,8 +330,8 @@ object SearchQueries {
         .withColumn("y", when(col("g") < 4, (col("x2") * col("x3") > 1.0).cast("int"))
           .otherwise(pmod(floor((col("x1") - 0.5) * 10).cast("long"), lit(2L)).cast("int")))
         .drop("g")
-        // pin partition layout: LR treeAggregate float sums are partition-
-        // order-sensitive; the champion pick must not depend on cpus
+        // pin partition layout: LR float sums run in partition order; the
+        // champion pick must not depend on cpus
         .repartition(4, col("event_id")).sortWithinPartitions("event_id")
       val cfg = CdfcConfig(cMax = 3, binaryOps = Seq(graft.exprs.BinOp.Mul),
         unaryOps = Seq(UnaryOp.Minus, UnaryOp.MinMax), groupByAggs = Seq.empty,

@@ -133,7 +133,7 @@ object TextQueries {
 
     "q_pack" ->
       """SELECT doc_id, doc_id % 8 AS shard,
-        |       SUM(n_chars) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) - n_chars AS offset,
+        |       CAST(SUM(n_chars) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS BIGINT) - n_chars AS offset,
         |       CAST(FLOOR((SUM(n_chars) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) - n_chars) / 8000.0) AS BIGINT) AS bin
         |FROM documents""".stripMargin,
 

@@ -193,12 +193,13 @@ final class Cdfc(
     val lrScores = collection.mutable.HashMap[String, Double]()
     lazy val dfLr = df.withColumn("__cdfc_label", label)
     /** Batched LR oracle for a layer's to-score set: ONE wide
-      * `LayerBuilder.select` + cache holds every candidate's feature column,
-      * and each fit projects `dfLr.columns :+ its own feature as __lr_feat`
-      * — exactly the per-candidate matrix the old one-select-per-candidate
-      * path built (same columns, same values), so the full-row fold hash and
-      * every fitted float are unchanged, while the base lineage (scan +
-      * feature eval) is replayed once per LAYER instead of once per fit.
+      * `LayerBuilder.select` holds every candidate's feature column, and
+      * [[LrScorer.scoreAll]] fits every candidate x fold x grid model of the
+      * layer together. Each candidate's fold hash covers `dfLr.columns :+
+      * its own feature` — exactly the per-candidate matrix a
+      * one-select-per-candidate path would build (same columns, same
+      * values), so its folds do not depend on which other candidates share
+      * the layer.
       *
       * Keep EVERY input column in the fold matrix: the fold hash needs
       * full-row entropy, or a low-cardinality candidate (one-hot, group
@@ -207,30 +208,14 @@ final class Cdfc(
     def lrAucBatch(es: Seq[FeatureExpr]): Seq[(String, Double)] = {
       if (es.isEmpty) return Seq.empty
       val named = es.zipWithIndex.map { case (e, i) => s"__lr_c$i" -> e }
-      val matAll = LayerBuilder.select(dfLr, dfLr.columns.toSeq, named, fit).cache()
-      try {
-        val rows = matAll.count() // materialize once, before the concurrent fits race
-        // a gate-sized matrix makes every lbfgs fit JOB-LATENCY-bound
-        // (~dozens of sequential treeAggregate jobs per fit), so per-job
-        // task count is the lever: read the cached matrix through a
-        // coalesce sized ~50k rows/partition — derived from the data, never
-        // raised above the matrix's own width, so a big matrix keeps its
-        // parallelism (no recompute: coalesce merges cached partitions)
-        val parts = matAll.rdd.getNumPartitions
-        val k = math.max(1L, math.min(parts.toLong, rows / 50000L + 1L)).toInt
-        val matUse = if (k < parts) matAll.coalesce(k) else matAll
-        // concurrent fits (FitPool); insert in task order -> deterministic
-        FitPool.map(df.sparkSession, "cdfc-lr", named) { case (n, e) =>
-          val mat = matUse.select(dfLr.columns.map(col) :+ col(n).as("__lr_feat"): _*)
-          val auc = LrScorer.score(mat, Seq("__lr_feat"), "__cdfc_label",
-            cfg.lrFolds, cfg.lrGrid).auc
-          // stored ROUNDED (1e-9): every downstream comparison (epsilon
-          // gate, champion maxBy, AICc per-class pick) is tie-sensitive, and
-          // lbfgs AUCs wobble by ULPs run-to-run (task-completion-ordered
-          // reduction)
-          Canon.key(e) -> math.rint(auc * 1e9) / 1e9
-        }
-      } finally { matAll.unpersist(); () }
+      val matAll = LayerBuilder.select(dfLr, dfLr.columns.toSeq, named, fit)
+      val scores = LrScorer.scoreAll(matAll,
+        named.map { case (n, _) => LrScorer.Candidate(Seq(n), dfLr.columns.toSeq :+ n) },
+        "__cdfc_label", cfg.lrFolds, cfg.lrGrid)
+      // stored ROUNDED (1e-9): every downstream comparison (epsilon gate,
+      // champion maxBy, AICc per-class pick) is tie-sensitive, and an AUC
+      // moves by ULPs when the input is partitioned differently
+      es.zip(scores).map { case (e, s) => Canon.key(e) -> math.rint(s.head.auc * 1e9) / 1e9 }
     }
     // parents whose AUC participates in the LR gain: the group KEY of a
     // GroupByThen is not a feature, and a categorical raw column (a one-hot

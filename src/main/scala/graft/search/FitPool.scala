@@ -4,33 +4,37 @@ import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.Executors
 
-/** Driver-side concurrent Spark-job submission for model fits — the engine's
-  * analog of the reference's model-fit parallelism knob (`n_jobs`,
-  * `FairExp_scalability_new_parallel.py:69,224-256`) and SURVEY §2.4's
-  * "driver thread pool submitting concurrent Spark jobs (fair scheduler)".
+/** Driver-side concurrent Spark-job submission for independent actions —
+  * the engine's analog of the reference's model-fit parallelism knob
+  * (`n_jobs`, `FairExp_scalability_new_parallel.py:69,224-256`) and SURVEY
+  * §2.4's "driver thread pool submitting concurrent Spark jobs (fair
+  * scheduler)".
   *
-  * A single spark.ml fit on a gate-sized input is JOB-LATENCY-bound (an
-  * lbfgs fit is ~25 sequential treeAggregate jobs, each touching a few tiny
-  * partitions); a folds-by-grid CV or a champions table is dozens of such
-  * fits with NO data dependency between them. Submitting them from driver
-  * threads overlaps the scheduling latencies and lets the scheduler fill
-  * the executor; each task gets its own FAIR-scheduler pool (pools are
-  * fair-shared against each other, so no fit starves behind another —
-  * `spark.scheduler.mode=FAIR` is set by the entry points).
+  * Its callers hold a handful of actions with no data dependency between
+  * them, each touching a few small partitions, so each is bound by job
+  * latency rather than data: FairExp's and Boruta's spark.ml fits, the
+  * independent aggregations of one `Fitter` pass and of `MIScorer`, the
+  * checkpoint writes of a layer, and the property gates' independent
+  * checks. Submitting them from driver threads overlaps the scheduling
+  * latencies and lets the scheduler fill the executor; each task gets its
+  * own FAIR-scheduler pool (pools are fair-shared against each other, so no
+  * task starves behind another — `spark.scheduler.mode=FAIR` is set by the
+  * entry points). CV-LR scoring does not use it: [[LrScorer]] fits all
+  * its models in one batch.
   *
   * Determinism: results are collected in TASK order, not completion order —
-  * concurrency never changes which task's result lands where. It does NOT
-  * make fit floats bit-stable: spark.ml's lbfgs reduces treeAggregate
-  * partials in task-COMPLETION order (true of a sequential loop too), so an
-  * AUC can read 1.0 on one run and 1-ulp on the next. Consumers must round
-  * or epsilon-compare fit outputs before any tie-sensitive decision (see
-  * [[LrScorer]]'s rounded grid selection).
+  * concurrency never changes which task's result lands where. It does not
+  * make the floats of a task bit-stable when the task itself reduces in
+  * completion order (spark.ml's treeAggregate does, sequential or not), so
+  * consumers of such floats round or epsilon-compare them before any
+  * tie-sensitive decision.
   *
   * The pool is an unbounded daemon cached-thread pool: tasks block on Spark
-  * job results, so a bounded pool would deadlock under nested use (e.g.
-  * selectByAicc parallelizing champions whose scorer parallelizes folds);
-  * actual CPU concurrency is bounded by the Spark scheduler, not by thread
-  * count, and in-flight thread count is bounded by the caller's task list.
+  * job results, so a bounded pool would deadlock under nested use (e.g. a
+  * property gate running searches concurrently whose `Fitter` passes submit
+  * their own aggregations); actual CPU concurrency is bounded by the Spark
+  * scheduler, not by thread count, and in-flight thread count is bounded by
+  * the caller's task list.
   */
 object FitPool {
 

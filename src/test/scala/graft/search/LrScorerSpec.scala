@@ -2,6 +2,7 @@ package graft.search
 
 import graft.SparkSpec
 import graft.exprs._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class LrScorerSpec extends SparkSpec {
@@ -92,29 +93,156 @@ class LrScorerSpec extends SparkSpec {
       s"rss flickered across identical runs: ${runs.map(_.rss)}")
   }
 
-  test("concurrent fits: folds-x-grid jobs overlap in distinct FAIR pools") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
-    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
-    val pools = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val c = inFlight.incrementAndGet()
-        maxInFlight.updateAndGet(m => math.max(m, c))
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.scheduler.pool")))
-          .foreach(pools.add)
+  private def jobsDuring(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
       }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = { inFlight.decrementAndGet(); () }
     }
-    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(l)
     try {
-      val df = planted.withColumn("prod", col("x1") * col("x2"))
-      LrScorer.score(df, Seq("prod"), "y", folds = 3, grid = Seq(1.0, 100.0))
+      f
       org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val fitPools = pools.toArray.map(_.toString).filter(_.startsWith("lr-cv-"))
-    assert(fitPools.length >= 2, s"expected distinct per-fit pools, saw ${pools}")
-    assert(maxInFlight.get >= 2,
-      s"expected overlapping fit jobs, max in flight = ${maxInFlight.get}")
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  test("batched fit: jobs per score do not grow with folds x grid points") {
+    val df = planted.withColumn("prod", col("x1") * col("x2"))
+    // one packing/moments job, one job per Newton pass (the slowest model's
+    // count), one metrics job — whatever the number of models
+    def passes(grid: Seq[Double]) = LrScorer.fitAll(df, Seq(LrScorer.Candidate(Seq("prod"),
+      df.columns.toSeq)), "y", 3, grid, Seq(42)).map(_.passes).max
+    val (p1, p7) = (passes(Seq(1.0)), passes(LrScorer.DefaultGrid))
+    val j1 = jobsDuring { LrScorer.score(df, Seq("prod"), "y", folds = 3, grid = Seq(1.0)) }
+    val j7 = jobsDuring { LrScorer.score(df, Seq("prod"), "y", folds = 3, grid = LrScorer.DefaultGrid) }
+    assert(j1 == 2 + p1 && j7 == 2 + p7, s"1-point: $j1 jobs, $p1 passes; 7-point: $j7 jobs, $p7 passes")
+    assert(p7 < 21, s"$p7 Newton passes for 21 models")
+  }
+
+  /** The spark.ml route the batched scorer replaced, kept as the reference:
+    * one (grid value, fold) fit of `LogisticRegression` (maxIter 50, tol
+    * 1e-6) on the candidate's na-dropped rows, folded over its own `rowCols`,
+    * and the `BinaryClassificationEvaluator` AUC of its test fold.
+    */
+  private def reference(wide: DataFrame, c: LrScorer.Candidate, label: String, folds: Int,
+      salt: Int, reg: Double, f: Int): (Double, Seq[Double], Double) = {
+    import org.apache.spark.ml.classification.LogisticRegression
+    import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
+    import org.apache.spark.ml.feature.VectorAssembler
+    val feats = c.features
+    val df = wide.withColumn("__fold", LrScorer.foldCol(salt, folds, c.rowCols.map(col)))
+      .select(feats.map(c => col(c).cast("double").as(c)) :+
+        col(label).cast("double").as("label") :+ col("__fold"): _*)
+      .na.drop()
+    val asm = new VectorAssembler().setInputCols(feats.toArray).setOutputCol("features")
+    val model = new LogisticRegression().setRegParam(reg).setMaxIter(50).setTol(1e-6)
+      .fit(asm.transform(df.filter(col("__fold") =!= f)))
+    val auc = new BinaryClassificationEvaluator()
+      .setRawPredictionCol("probability").setMetricName("areaUnderROC")
+      .evaluate(model.transform(asm.transform(df.filter(col("__fold") === f))))
+    (model.intercept, model.coefficients.toArray.toSeq, auc)
+  }
+
+  private def assertParity(wide: DataFrame, cands: Seq[LrScorer.Candidate], label: String,
+      grid: Seq[Double]): Unit = {
+    val fits = LrScorer.fitAll(wide, cands, label, 3, grid, Seq(42))
+    fits.filter(_.passes > 0).foreach { m =>
+      val c = cands(m.cand)
+      val (b0, beta, auc) = reference(wide, c, label, 3, 42, m.reg, m.fold)
+      val ctx = s"${c.features} reg=${m.reg} fold=${m.fold}: ${(m.intercept, m.coef, m.stats.auc)} " +
+        s"vs spark.ml ${(b0, beta, auc)}"
+      assert(math.abs(m.intercept - b0) < 1e-4, ctx)
+      m.coef.zip(beta).foreach { case (a, b) => assert(math.abs(a - b) < 1e-4, ctx) }
+      assert(math.rint(m.stats.auc * 1e9) == math.rint(auc * 1e9), ctx)
+    }
+  }
+
+  test("parity with spark.ml: 2-feature, constant-feature and per-candidate null/NaN rows") {
+    val wide = planted
+      .withColumn("k", lit(3.0))
+      .withColumn("xn", when(pmod(xxhash64(col("x1"), col("x2")), lit(7)) === 0, lit(null))
+        .when(pmod(xxhash64(col("x2"), col("x1")), lit(11)) === 0, lit(Double.NaN))
+        .otherwise(col("x1")))
+    val base = Seq("x1", "x2", "y")
+    val cands = Seq(
+      LrScorer.Candidate(Seq("x1", "x2"), base),
+      LrScorer.Candidate(Seq("x1", "k"), base :+ "k"),  // sigma = 0: coefficient 0
+      LrScorer.Candidate(Seq("xn"), base :+ "xn"),      // drops its null/NaN rows only
+      LrScorer.Candidate(Seq("x2"), base))
+    val fits = LrScorer.fitAll(wide, cands, "y", 3, Seq(1.0), Seq(42))
+    assert(fits.filter(_.cand == 1).forall(_.coef(1) == 0.0))
+    val rows = fits.filter(_.fold == 0).map(m => m.cand -> m.stats.n).toMap
+    assert(rows(2) < rows(3), s"null/NaN rows must drop for xn only: $rows")
+    assertParity(wide, cands, "y", Seq(1.0))
+  }
+
+  test("parity with spark.ml: the full 7-point DefaultGrid") {
+    assertParity(planted, Seq(LrScorer.Candidate(Seq("x1"), Seq("x1", "x2", "y"))), "y",
+      LrScorer.DefaultGrid)
+  }
+
+  test("single-class and empty training folds score the constant predictor") {
+    // label = "row is in fold 0" under a hash of (x1, x2) only: fold 0's
+    // training rows are all negative (constant p = 0), folds 1 and 2 train
+    // on both classes and test on negatives only (evaluator convention: AUC 0)
+    val hashCols = Seq("x1", "x2")
+    val df = planted.withColumn("y0",
+      (LrScorer.foldCol(42, 3, hashCols.map(col)) === 0).cast("int"))
+    val cand = LrScorer.Candidate(Seq("x1"), hashCols)
+    val fits = LrScorer.fitAll(df, Seq(cand), "y0", 3, Seq(1.0), Seq(42))
+    val f0 = fits.find(_.fold == 0).get
+    assert(f0.passes == 0 && f0.intercept == 0.0 && f0.stats.auc == 0.5)
+    assert(f0.stats.rss == f0.stats.n.toDouble && f0.stats.accuracy == 0.0 && f0.stats.n > 0)
+    assert(fits.filter(_.fold > 0).forall(m => m.passes > 0 && m.stats.auc == 0.0))
+    assertParity(df, Seq(cand), "y0", Seq(1.0))
+    // a constant hash row puts every row in one fold: its training fold is
+    // empty (p = 0.5), the other two test folds are empty (vacuous stats)
+    val one = planted.withColumn("g", lit(1))
+    val e = LrScorer.fitAll(one, Seq(LrScorer.Candidate(Seq("x1"), Seq("g"))), "y", 3,
+      Seq(1.0), Seq(42))
+    val (full, empty) = e.partition(_.stats.n > 0)
+    assert(full.size == 1 && full.head.intercept == 0.5 && full.head.stats.auc == 0.5)
+    assert(full.head.stats.rss == 0.25 * full.head.stats.n)
+    assert(empty.size == 2 && empty.forall(_.stats == LrScorer.FoldStats(0.5, 0.0, 0L, 1.0, 0.0, 1.0)))
+  }
+
+  test("fold ids: each candidate's fold is foldCol over its own matrix") {
+    val wide = planted.withColumn("z", col("x1") + col("x2"))
+    val cands = Seq(LrScorer.Candidate(Seq("x1"), Seq("x1", "x2", "y")),
+      LrScorer.Candidate(Seq("z"), Seq("x1", "x2", "y", "z")))
+    val salts = Seq(42, 43)
+    val mat = LrScorer.matrix(wide, cands, "y", 3, salts).collect()
+    for ((c, ci) <- cands.zipWithIndex; (salt, si) <- salts.zipWithIndex) {
+      val own = wide.select(c.rowCols.map(col): _*)
+        .select(LrScorer.foldCol(salt, 3)).collect().map(_.getInt(0))
+      val batched = mat.map(_.getInt(1 + cands.size + ci * salts.size + si))
+      assert(batched.toSeq == own.toSeq, s"candidate $ci salt $salt")
+    }
+  }
+
+  test("AUC is exact Mann-Whitney with ties beyond the evaluator's 2000-score binning") {
+    // 9000 rows, 3 folds: ~3000 distinct scores per test fold, where
+    // BinaryClassificationEvaluator would downsample its ROC to 1000 bins
+    val df = spark.range(9000).select(
+        (pmod(xxhash64(col("id")), lit(1000003L)).cast("double") / 1000003).as("x"),
+        (pmod(xxhash64(col("id") + 5), lit(1000L)).cast("double") / 1000).as("e"))
+      .withColumn("y", (col("x") + col("e") > 1.0).cast("int"))
+      .drop("e")
+    val fits = LrScorer.fitAll(df, Seq(LrScorer.Candidate(Seq("x"), df.columns.toSeq)), "y", 3,
+      Seq(1.0), Seq(42))
+    val rows = df.withColumn("f", LrScorer.foldCol(42, 3)).collect()
+      .map(r => (r.getDouble(0), r.getInt(1), r.getInt(2)))
+    fits.foreach { m =>
+      val scored = rows.filter(_._3 == m.fold)
+        .map { case (x, y, _) => (1.0 - 1.0 / (1.0 + math.exp(x * m.coef(0) + m.intercept)), y) }
+      assert(scored.map(_._1).distinct.length > 2000)
+      val (pos, neg) = scored.partition(_._2 == 1)
+      val twiceU = pos.iterator.map { case (p, _) =>
+        neg.iterator.map { case (q, _) => if (p > q) 2L else if (p == q) 1L else 0L }.sum
+      }.sum
+      assert(m.stats.auc == twiceU.toDouble / (2.0 * pos.length * neg.length), s"fold ${m.fold}")
+    }
   }
 }

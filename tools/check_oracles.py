@@ -5,8 +5,8 @@ Usage: python3 tools/check_oracles.py <sfDir> <verifyOutDir> [query...]
 
 Loads each <verifyOutDir>/<name> parquet (Spark output), runs the oracle SQL
 from oracle_sql.json in DuckDB with the sfDir tables registered as views,
-sorts columns by name and rows by all columns, and compares cell-by-cell
-(exact for non-floats, 1e-9 tolerance for floats).
+sorts columns by name and rows by all columns, and compares column dtypes,
+then cell-by-cell (exact for non-floats, 1e-9 tolerance for floats).
 """
 import json, sys, glob, os
 import duckdb
@@ -44,6 +44,13 @@ def main():
             print(f"FAIL {name}: {e}"); n_fail += 1; continue
         if list(spark_df.columns) != list(oracle_df.columns):
             print(f"FAIL {name}: columns {list(spark_df.columns)} vs {list(oracle_df.columns)}")
+            n_fail += 1; continue
+        # a hash compare of the results sees column types too: an oracle
+        # that widens a BIGINT to HUGEINT (read back as float64) must fail
+        types = [(c, str(spark_df[c].dtype), str(oracle_df[c].dtype)) for c in spark_df.columns
+                 if spark_df[c].dtype != oracle_df[c].dtype]
+        if types:
+            print(f"FAIL {name}: dtypes (col, spark, oracle) {types}")
             n_fail += 1; continue
         if len(spark_df) != len(oracle_df):
             print(f"FAIL {name}: rows {len(spark_df)} vs {len(oracle_df)}")
