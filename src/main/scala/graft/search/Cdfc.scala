@@ -258,17 +258,17 @@ final class Cdfc(
         case BinaryE(BinOp.Add | BinOp.Sub, _, _)     => true
         case _                                        => false
       }
-      fit = Probe.time("fitter")(Fitter.fit(df, toEval ++ inherit, known = fit, label = Some(label)))
+      fit = Fitter.fit(df, toEval ++ inherit, known = fit, label = Some(label))
 
       toEval.grouped(cfg.batchSize).foreach { batch =>
         val named = batch.map(e => Lower.alias(e) -> e)
         // bin bounds: one profile agg per batch (runtime, not analytic —
         // analytic bounds are conservative and would skew the MI bins)
         val cols = named.map { case (n, e) => n -> Lower.toColumn(e, fit) }
-        val prof = Probe.time("profile")(Profiler.profileBatch(df, cols.map { case (n, cc) => n -> cc }))
+        val prof = Profiler.profileBatch(df, cols.map { case (n, cc) => n -> cc })
         val lohi = prof.map { case (n, p) => n -> (p.min, p.max) }
-        val stats = Probe.time("score")(MIScorer.scoreBatch(df, cols.map { case (n, cc) => n -> cc },
-          label, lohi, cfg.bins))
+        val stats = MIScorer.scoreBatch(df, cols.map { case (n, cc) => n -> cc },
+          label, lohi, cfg.bins)
         named.foreach { case (n, e) =>
           val st = stats(n)
           val k = Canon.key(e)

@@ -90,7 +90,7 @@ object ExploreKit {
       cfg: EkConfig = EkConfig()): (Seq[EkScored], FitStats) = {
     val rawProfiles = Profiler.profile(df, rawNumeric.map(n => n -> col(n)))
     val cands = generate(rawNumeric, groupKeys, rawProfiles, cfg)
-    val fit = Probe.time("ek-fit")(Fitter.fit(df, cands, label = Some(label)))
+    val fit = Fitter.fit(df, cands, label = Some(label))
     val seenFp = collection.mutable.HashSet[Long]()
     val scored = collection.mutable.ArrayBuffer[EkScored]()
     cands.grouped(cfg.batchSize).foreach { batch =>
@@ -99,14 +99,13 @@ object ExploreKit {
       // overflow whole-stage codegen; evaluating them twice — profile pass
       // + score pass — doubled the interpreted cost), then aggregate over
       // plain columns of the snapshot
-      val mat = Probe.time("ek-mat")(FeatureConstructor.snapshot(df.select(
+      val mat = FeatureConstructor.snapshot(df.select(
         named.map { case (n, e) => Lower.toColumn(e, fit).cast("double").as(n) } :+
-          label.cast("int").as("__y"): _*)))
+          label.cast("int").as("__y"): _*))
       val cols = named.map { case (n, _) => n -> col(n) }
-      val prof = Probe.time("ek-profile")(Profiler.profileBatch(mat, cols))
+      val prof = Profiler.profileBatch(mat, cols)
       val lohi = prof.map { case (n, p) => n -> (p.min, p.max) }
-      val stats = Probe.time("ek-score")(
-        MIScorer.scoreBatch(mat, cols, col("__y"), lohi, cfg.bins))
+      val stats = MIScorer.scoreBatch(mat, cols, col("__y"), lohi, cfg.bins)
       named.foreach { case (n, e) =>
         val st = stats(n)
         if (st.distinct > 1 && seenFp.add(st.fingerprint))

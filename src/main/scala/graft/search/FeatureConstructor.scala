@@ -76,7 +76,7 @@ object FeatureConstructor {
       groupKeys: Seq[String],
       label: Column,
       cfg: CdfcConfig = CdfcConfig()): FeatureModel = {
-    val res = Probe.time("search")(new Cdfc(df, rawNumeric, rawCategorical, groupKeys, label, cfg).run())
+    val res = new Cdfc(df, rawNumeric, rawCategorical, groupKeys, label, cfg).run()
     val passed = res.survivors.filter(_.passed)
     // Final block scaling (reference: union + global MinMaxScaler). A feature
     // already in [0,1] keeps its identity (the reference skip guard).
@@ -88,7 +88,7 @@ object FeatureConstructor {
       })
       if (needsScale) Canon.canon(Unary(UnaryOp.MinMax, s.expr)) else s.expr
     }
-    val fit2 = Probe.time("final-fit")(Fitter.fit(df, scaled, known = res.fit, label = Some(label)))
+    val fit2 = Fitter.fit(df, scaled, known = res.fit, label = Some(label))
     val named = scaled.zip(passed).map { case (e, s) => s"feat_${Lower.alias(s.expr)}" -> e }
     FeatureModel(passed, named, fit2, res)
   }

@@ -115,7 +115,7 @@ object AsOfJoin {
 
   /** Skew-resistant as-of join: event-time range buckets + carry-in stitch.
     *
-    * WHEN to use it (measured, `graft.SkewBench`, checksum-identical to
+    * WHEN to use it (measured, `graft.SideBench skew`, checksum-identical to
     * [[asOf]] in every configuration): the bucketed path pays a constant
     * stitch overhead (per-bucket aggregate + carry-in broadcast), so it
     * LOSES while the hottest key's row count still fits one core's fair
@@ -286,7 +286,7 @@ object AsOfJoin {
 
   /** Auto-planned as-of join: picks the physical shape from measured input
     * statistics, applying the measured routing rule (see [[asOfSkew]]'s
-    * scaladoc and `graft.SkewBench`):
+    * scaladoc and `graft.SideBench skew`):
     *
     *   1. right side fits a broadcast (`<= broadcastRows`) -> [[asOfBroadcast]]
     *      — the 100 TB left side never shuffles at all;

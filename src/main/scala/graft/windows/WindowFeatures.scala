@@ -179,7 +179,7 @@ object WindowFeatures {
     *  - a key holding more than a fair per-task share (`maxKey > total /
     *    defaultParallelism`) would serialize the window's single-partition
     *    sort task, so take [[groupByThenSalted]] (measured 2.12x at 60% hot
-    *    key, BENCH_SKEW_GROUPBY);
+    *    key, BENCH_SKEW_GROUPBY, `graft.SideBench skew ... groupby`);
     *  - otherwise the plain [[groupByThenWindowed]] key-partition window
     *    (measured 0.83x for salted at 20% hot — the window wins when no key
     *    dominates, and it is one exchange with zero joins).

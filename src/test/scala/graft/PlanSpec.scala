@@ -73,7 +73,7 @@ class PlanSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("flagship_in").toString
     Transcripts.synthetic(spark, 3000, 40).write.mode("overwrite").parquet(dir)
     val t = spark.read.parquet(dir)
-    val out = ScalingBench.flagshipPipeline(t)
+    val out = SideBench.flagshipPipeline(t)
     val p = plan(out)
     // ONE exchange for the whole job: the as-of union shuffles the narrow
     // encoded rows once on conv_id, and every feature window reuses that

@@ -103,7 +103,7 @@ class LrScorerSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       f
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      org.apache.spark.GraftBridge.waitUntilListenerBusEmpty(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     n.get()
   }
