@@ -7,6 +7,7 @@ import org.apache.spark.GraftBridge
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -94,23 +95,36 @@ object SideBench {
       gcMs: Long, runMs: Long, peakExecMem: Long)
 
   /** The one measurement listener: jobs and wall time per call site (the
-    * innermost `graft.` frame of the job's last stage, else the stage name),
-    * job and task counts, and task spill / GC / run time / peak execution
-    * memory. Every read drains the listener bus first, so a job that ran is
-    * never counted against the next measurement. [[close]] detaches it.
+    * innermost `graft.` frame of the job's last stage, else of its SQL
+    * execution — AQE submits stages from its own threads — else the stage
+    * name), job and task counts, and task spill / GC / run time / peak
+    * execution memory. Every read drains the listener bus first, so a job
+    * that ran is never counted against the next measurement. [[close]]
+    * detaches it.
     */
   final class Recorder(spark: SparkSession) extends SparkListener {
     private val sc = spark.sparkContext
     private val starts = new ConcurrentHashMap[Int, (String, Long)]()
     private val sites = new ConcurrentHashMap[String, (Long, Long)]()
+    private val execStacks = new ConcurrentHashMap[Long, String]()
     private val jobs, tasks, memSpilled, diskSpilled, gcMs, runMs, peak = new AtomicLong
     sc.addSparkListener(this)
 
+    private def graftFrame(stack: String): Option[String] =
+      stack.linesIterator.find(_.contains("graft.")).map(_.trim.stripPrefix("at "))
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => execStacks.put(x.executionId, x.details)
+      case x: SparkListenerSQLExecutionEnd => execStacks.remove(x.executionId)
+      case _ =>
+    }
+
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
+      def fromExec = Option(js.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(execStacks.get(id.toLong))).flatMap(graftFrame)
       val site = js.stageInfos.lastOption.fold("?") { si =>
-        si.details.linesIterator.find(_.contains("graft."))
-          .map(_.trim.stripPrefix("at ")).getOrElse(si.name)
+        graftFrame(si.details).orElse(fromExec).getOrElse(si.name)
       }
       starts.put(js.jobId, (site, System.nanoTime()))
     }

@@ -88,8 +88,6 @@ object TokenPolyHash { val P: Long = 9007199254740881L }
 object CatalystExprs {
   def asOfLessOrEqual(l: Column, r: Column): Column =
     GraftSqlBridge.column(AsOfLessOrEqual(GraftSqlBridge.expression(l), GraftSqlBridge.expression(r)))
-  def complexityScore(c: Column): Column =
-    GraftSqlBridge.column(ComplexityScore(GraftSqlBridge.expression(c)))
   def tokenPolyHash(c: Column): Column =
     GraftSqlBridge.column(TokenPolyHash(GraftSqlBridge.expression(c)))
 

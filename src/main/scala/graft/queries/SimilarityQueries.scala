@@ -46,14 +46,13 @@ object SimilarityQueries {
       Ann.lshTopK(Tables.embeddings(s, dir), k = 5, nBits = 6)),
     // Cost-based top-k routing: both regimes in one row. The brute arm
     // live-probes the corpus (small at gate scale -> nested-loop exact
-    // plan, same values as the q_cosine_topk oracle); the lsh arm forces
-    // the large-corpus route via corpusRowsHint and must reproduce the
-    // full LSH SQL replication. AnnSpec asserts each regime's plan shape.
+    // plan, same values as the q_cosine_topk oracle); the lsh arm calls the
+    // large-corpus route directly (uncapped, so it must reproduce the full
+    // LSH SQL replication). AnnSpec asserts each regime's plan shape.
     "q_topk_auto" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       val brute = Ann.topkAuto(e.filter(col("vec_id") < 20), e, k = 5)
-      val lsh = Ann.topkAuto(e, e, k = 5, nBits = 6, maxBucket = None,
-        corpusRowsHint = Some(Long.MaxValue))
+      val lsh = Ann.lshTopK2(e, e, k = 5, nBits = 6, maxBucket = None)
       brute.withColumn("route", lit("brute"))
         .unionByName(lsh.withColumn("route", lit("lsh")))
     }),

@@ -99,12 +99,12 @@ object WindowQueries {
     }),
 
     // Cost-based GroupByThen routing (the AsOfJoin.auto of group
-    // aggregates): the SAME input runs through BOTH regimes — a hint
-    // claiming a balanced histogram forces the key-partition window, a
-    // hint claiming one dominant key forces the salted two-phase route —
-    // and the union must match one oracle computing the moment formulas
-    // once (routing must never change values; GroupByAutoSpec additionally
-    // asserts the plan shape of each regime and the live probe's picks).
+    // aggregates): the SAME input runs through BOTH routes groupByThenAuto
+    // picks between — the key-partition window and the salted two-phase
+    // route — and the union must match one oracle computing the moment
+    // formulas once (routing must never change values; GroupByAutoSpec
+    // additionally asserts the plan shape of each regime and the live
+    // probe's picks).
     "q_groupby_auto" -> ((s, dir) => {
       val base = T(s, dir)
       val len = length(col("text")).cast("double")
@@ -117,10 +117,8 @@ object WindowQueries {
           col("conv_max").cast("long").as("conv_max_len"),
           col("conv_cnt").as("conv_cnt"),
           col6(col("conv_sum")).as("conv_sum_len"))
-      val windowed = WF.groupByThenAuto(base, "conv_id", len, "conv",
-        statsHint = Some((1000000L, 1L)))        // balanced -> window route
-      val salted = WF.groupByThenAuto(base, "conv_id", len, "conv",
-        salts = 8, statsHint = Some((100L, 100L))) // one hot key -> salted
+      val windowed = WF.groupByThenWindowed(base, "conv_id", len, "conv")
+      val salted = WF.groupByThenSalted(base, "conv_id", len, "conv", salts = 8)
       shaped(windowed, "window").unionByName(shaped(salted, "salted"))
     }),
 
@@ -399,7 +397,7 @@ object WindowQueries {
     s"""$cte,
        |purch AS (
        |  SELECT 'c' || CAST(user_id AS VARCHAR) AS conv_id, ts, event_id AS seq, value AS pval
-       |  FROM events WHERE event_type = 'purchase'),
+       |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL),
        |u AS (
        |  SELECT conv_id, ts, 0 AS side, seq, pval, CAST(NULL AS INT) AS turn_idx FROM purch
        |  UNION ALL

@@ -36,9 +36,7 @@ final class SqlGen {
   /** A SQL fragment valid at CTE level >= `level`; `windowed` marks text
     * containing an OVER clause (illegal inside another window's argument).
     */
-  final case class Frag(sql: String, level: Int, windowed: Boolean) {
-    def atLeast(l: Int): Frag = if (level >= l) this else copy(level = l)
-  }
+  final case class Frag(sql: String, level: Int, windowed: Boolean)
 
   def dlit(v: Double): String =
     if (v.isNaN) "CAST('nan' AS DOUBLE)"

@@ -129,28 +129,25 @@ object Ann {
         col6(col("cos")).as("cos"))
   }
 
+  /** Corpora up to this many rows take the brute-force scan in [[topkAuto]]
+    * (unmeasured: it bounds the O(queries × corpus) cartesian).
+    */
+  val BruteMaxRows = 100000L
+
   /** Cost-based top-k routing (the [[graft.windows.AsOfJoin.auto]] of
-    * similarity search): a corpus small enough to broadcast makes the
-    * brute-force nested-loop scan the FASTEST plan (no bucketing passes, no
-    * candidate shuffle, exact by construction); anything larger must never
-    * reach the cartesian — it routes to the bucket-local multi-table LSH
-    * join with a hot-bucket cap. Default entry point so no caller hits the
-    * O(Q*N) plan on a large corpus by accident ([[cosineTopK]] remains the
-    * documented correctness oracle).
-    *
-    * @param corpusRowsHint caller-known corpus row count — skips the probe
-    *                       (and, in tests, forces a regime deterministically)
+    * similarity search): one `count` of the corpus. A corpus of at most
+    * [[BruteMaxRows]] rows makes the brute-force nested-loop scan the
+    * FASTEST plan (no bucketing passes, no candidate shuffle, exact by
+    * construction); anything larger must never reach the cartesian — it
+    * routes to the bucket-local multi-table LSH join ([[lshTopK2]], 8 bits,
+    * 4 tables, hot buckets capped at 10 000 rows). Default entry point so no
+    * caller hits the O(Q*N) plan on a large corpus by accident
+    * ([[cosineTopK]] remains the documented correctness oracle).
     */
   def topkAuto(queries: DataFrame, corpus: DataFrame, k: Int = 5,
-      nBits: Int = 8, tables: Int = 4,
-      id: String = "vec_id", vec: String = "embedding",
-      bruteMaxRows: Long = 100000L,
-      maxBucket: Option[Long] = Some(10000L),
-      corpusRowsHint: Option[Long] = None): DataFrame = {
-    val n = corpusRowsHint.getOrElse(corpus.count())
-    if (n <= bruteMaxRows) cosineTopK(queries, corpus, k, id, vec)
-    else lshTopK2(queries, corpus, k, nBits, tables, id, vec, maxBucket)
-  }
+      id: String = "vec_id", vec: String = "embedding"): DataFrame =
+    if (corpus.count() <= BruteMaxRows) cosineTopK(queries, corpus, k, id, vec)
+    else lshTopK2(queries, corpus, k, nBits = 8, tables = 4, id, vec, maxBucket = Some(10000L))
 
   /** IVF (inverted-file) top-k: a coarse KMeans quantizer partitions the
     * corpus into `nlist` cells; each query probes its `nprobe` nearest

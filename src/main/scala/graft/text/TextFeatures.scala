@@ -56,17 +56,6 @@ object TextFeatures {
   def hashedTokens(docs: DataFrame, id: String = "doc_id", text: String = "text"): DataFrame =
     tokens(docs, id, text).withColumn("tid", tokenHash(col("tok")))
 
-  /** Dense token dictionary: sorted distinct tokens -> ids 1..V, via the
-    * range-bucketed ordinal rank (no single-partition window — the
-    * numbering equals a global sort because distinct tokens are unique).
-    * The hash paths (fingerprint/simhash/shingles/hashingTf) use
-    * [[tokenHash]] instead and never build a dictionary at all.
-    */
-  def tokenDict(toks: DataFrame): DataFrame =
-    graft.transforms.ColumnOps.ordinalRank(
-      toks.select(col("tok")).distinct(), Seq(col("tok")), "tid",
-      bucketBy = Some(graft.transforms.ColumnOps.stringProxy(col("tok"))))
-
   /** GPT-2-style BPE pre-tokenizer pattern, simplified to the alternation/
     * class subset shared by Java regex and RE2 (DuckDB): contractions,
     * letter runs, digit runs, punctuation runs, space runs — the standard

@@ -47,12 +47,6 @@ object Transcripts {
     StructField("tool", StringType),
     StructField("ts", TimestampType)))
 
-  /** Stable per-conversation ordering: `ts` alone is not unique, so every
-    * order-sensitive window in the engine orders by `(ts, turn_idx)` — the
-    * per-turn-text-equality invariant of the north rule depends on it.
-    */
-  def turnOrder: Seq[Column] = Seq(col("ts"), col("turn_idx"))
-
   /** Deterministic transcripts from the `events` table.
     *
     * conv_id  = "c" + user_id

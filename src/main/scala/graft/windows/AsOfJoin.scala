@@ -1,5 +1,6 @@
 package graft.windows
 
+import graft.Route
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,7 +40,7 @@ object AsOfJoin {
     *
     * @param left      left rows; must contain `entity` and `ts` columns
     * @param right     right rows; must contain `entity`, `ts`, and `valueCols`
-    * @param entity    join key column name (both sides)
+    * @param entity    join key column name (both sides); null matches nothing
     * @param valueCols right columns to attach (null when no match yet)
     * @param rightSeq  deterministic tie-break among right rows with equal
     *                  (entity, ts): the row with the greatest rightSeq wins
@@ -52,7 +53,7 @@ object AsOfJoin {
       rightSeq: Column): DataFrame = {
     val leftCols = left.columns.toSeq
     val payload = struct(valueCols.map(col): _*)
-    val r = right.select(
+    val r = right.filter(col(entity).isNotNull).select(
       col(entity), col("ts"),
       lit(0).as("__side"), rightSeq.cast("long").as("__seq"), payload.as("__asof"))
     val l = left.withColumn("__side", lit(1)).withColumn("__seq", lit(0L))
@@ -121,9 +122,8 @@ object AsOfJoin {
     * LOSES while the hottest key's row count still fits one core's fair
     * share (hot=20% of 8M rows, 8 cores: 0.65x) and wins decisively once a
     * single key dominates the stage (hot=60%: 2.16x; at real cluster widths
-    * one-task-per-key serialization makes the gap unbounded). Pick per key
-    * histogram: route to asOfSkew when max(rows per entity) exceeds roughly
-    * totalRows / parallelism.
+    * one-task-per-key serialization makes the gap unbounded). [[auto]]
+    * routes here when the left key histogram is [[graft.Route.skewed]].
     *
     * @param numBuckets number of time buckets to cut `[minTs, maxTs]` into;
     *                   the hot entity's window work fans out over up to this
@@ -136,21 +136,14 @@ object AsOfJoin {
       valueCols: Seq[String],
       rightSeq: Column,
       numBuckets: Int = 32): DataFrame = {
-    // Bucket boundaries from the union time domain (one tiny agg job).
-    // Zero rows -> NULL min/max: no time domain to bucket, so route to the
-    // plain shape (whose result is empty/trivial) instead of unboxing nulls.
-    val domain = left.select(unix_micros(col("ts")).as("t"))
-      .unionByName(right.select(unix_micros(col("ts")).as("t")))
-      .agg(min("t"), max("t")).head()
-    if (domain.isNullAt(0))
-      return asOf(left, right, entity, valueCols, rightSeq)
-    val (lo, hi) = (domain.getLong(0), domain.getLong(1))
-    val width = math.max(1L, (hi - lo) / numBuckets + 1)
+    val buckets = timeBuckets(left, right, numBuckets)
+    if (buckets.isEmpty) return asOf(left, right, entity, valueCols, rightSeq)
+    val (lo, width) = buckets.get
     def bucketOf(ts: Column): Column = ((unix_micros(ts) - lo) / width).cast("int")
 
     val leftCols = left.columns.toSeq
     val payload = struct(valueCols.map(col): _*)
-    val rb = right.select(
+    val rb = right.filter(col(entity).isNotNull).select(
       col(entity), col("ts"), bucketOf(col("ts")).as("__bucket"),
       lit(0).as("__side"), rightSeq.cast("long").as("__seq"), payload.as("__asof"))
 
@@ -185,6 +178,18 @@ object AsOfJoin {
         valueCols.map(v => col("__filled").getField(v).as(v)): _*)
   }
 
+  /** `(lo, width)` in micros of `numBuckets` buckets over both sides' time
+    * domain (one tiny agg job); None when both are empty (nothing to bucket).
+    */
+  private def timeBuckets(left: DataFrame, right: DataFrame,
+      numBuckets: Int): Option[(Long, Long)] = {
+    val d = left.select(unix_micros(col("ts")).as("t"))
+      .unionByName(right.select(unix_micros(col("ts")).as("t")))
+      .agg(min("t"), max("t")).head()
+    if (d.isNullAt(0)) None
+    else Some((d.getLong(0), math.max(1L, (d.getLong(1) - d.getLong(0)) / numBuckets + 1)))
+  }
+
   /** Time-range aggregate join (the as-of family's interval sibling): for
     * each left row, aggregate the right rows with the same entity and
     * `ts in [left.ts - windowSeconds, left.ts]` — "purchases in the last
@@ -199,9 +204,8 @@ object AsOfJoin {
     * consistent with [[asOf]].
     *
     * Skew: like any per-entity window, a hot entity serializes into one
-    * task — [[rangeAggSkew]] is the time-bucketed variant for that case.
-    * Route by the same key-histogram rule (hottest key > rows /
-    * parallelism).
+    * task — [[rangeAggSkew]] is the time-bucketed variant for that case,
+    * worth it when the key histogram is [[graft.Route.skewed]].
     *
     * @param aggs output-name -> aggregate over the right-side value column
     *             (left rows carry null in that column, so count/min/max/sum
@@ -253,15 +257,9 @@ object AsOfJoin {
       aggs: Seq[(String, Column => Column)],
       numBuckets: Int = 32): DataFrame = {
     val deltaUs = windowSeconds * 1000000L
-    // empty union time domain -> NULL min/max: short-circuit to the plain
-    // range aggregate (empty/trivial result) instead of unboxing nulls
-    val domain = left.select(unix_micros(col("ts")).as("t"))
-      .unionByName(right.select(unix_micros(col("ts")).as("t")))
-      .agg(min("t"), max("t")).head()
-    if (domain.isNullAt(0))
-      return rangeAgg(left, right, entity, valueCol, windowSeconds, aggs)
-    val (lo, hi) = (domain.getLong(0), domain.getLong(1))
-    val width = math.max(1L, (hi - lo) / numBuckets + 1)
+    val buckets = timeBuckets(left, right, numBuckets)
+    if (buckets.isEmpty) return rangeAgg(left, right, entity, valueCol, windowSeconds, aggs)
+    val (lo, width) = buckets.get
     def bucketOfUs(us: Column): Column =
       least(greatest((us - lo) / width, lit(0L)), lit(numBuckets - 1L)).cast("int")
 
@@ -284,49 +282,34 @@ object AsOfJoin {
       .select(leftCols.map(col) ++ aggs.map { case (n, _) => col(n) }: _*)
   }
 
-  /** Auto-planned as-of join: picks the physical shape from measured input
-    * statistics, applying the measured routing rule (see [[asOfSkew]]'s
-    * scaladoc and `graft.SideBench skew`):
+  /** Right sides up to this many rows take [[asOfBroadcast]] in [[auto]].
+    * Unmeasured: the one nearby measurement (`perfbench/BASELINE.md`, 1.3·10⁶
+    * right rows: broadcast 60.3 s vs [[asOf]] 5.3 s) puts the crossover lower.
+    */
+  val BroadcastRows = 4000000L
+
+  /** Auto-planned as-of join: picks the physical shape from observed input
+    * statistics (see [[asOfSkew]]'s scaladoc and `graft.SideBench skew`):
     *
-    *   1. right side fits a broadcast (`<= broadcastRows`) -> [[asOfBroadcast]]
-    *      — the 100 TB left side never shuffles at all;
-    *   2. else, if the hottest entity's row count exceeds its fair share
-    *      (`total rows / parallelism`) -> [[asOfSkew]] — a single hot key
-    *      would otherwise serialize one window task;
+    *   1. right side fits a broadcast (`<= BroadcastRows`, one `count`) ->
+    *      [[asOfBroadcast]] — the 100 TB left side never shuffles at all;
+    *   2. else, if the left key histogram ([[graft.Route.keyStats]]) is
+    *      [[graft.Route.skewed]] -> [[asOfSkew]] — a single hot key would
+    *      otherwise serialize one window task;
     *   3. else -> [[asOf]] — one hash exchange, no join node.
     *
-    * The two probe jobs are aggregation-only (a count of the right side; a
-    * map-side-combined per-entity count of the left) — key+count bytes on
-    * the wire, negligible next to the join itself and exactly what a real
-    * cost-based planner would sample. Both numbers are also available from
-    * table statistics when the caller has them; pass `rightRowsHint` /
-    * `maxEntityRowsHint` to skip the probes.
+    * Both probes are aggregation-only jobs; the broadcast route runs one.
     */
   def auto(
       left: DataFrame,
       right: DataFrame,
       entity: String,
       valueCols: Seq[String],
-      rightSeq: Column,
-      broadcastRows: Long = 4000000L,
-      numBuckets: Int = 32,
-      rightRowsHint: Option[Long] = None,
-      maxEntityRowsHint: Option[(Long, Long)] = None): DataFrame = {
-    val rightRows = rightRowsHint.getOrElse(right.count())
-    if (rightRows <= broadcastRows)
+      rightSeq: Column): DataFrame =
+    if (right.count() <= BroadcastRows)
       asOfBroadcast(left, right, entity, valueCols, rightSeq)
-    else {
-      val (total, maxKey) = maxEntityRowsHint.getOrElse {
-        val r = left.groupBy(col(entity)).agg(count(lit(1)).as("__n"))
-          .agg(sum(col("__n")), max(col("__n"))).head()
-        // empty left: aggregates are NULL; any route returns empty rows
-        if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
-      }
-      val par = math.max(left.sparkSession.sparkContext.defaultParallelism, 1).toLong
-      if (maxKey > total / par)
-        asOfSkew(left, right, entity, valueCols, rightSeq, numBuckets)
-      else
-        asOf(left, right, entity, valueCols, rightSeq)
-    }
-  }
+    else if (Route.skewed(Route.keyStats(left, entity), left.sparkSession))
+      asOfSkew(left, right, entity, valueCols, rightSeq)
+    else
+      asOf(left, right, entity, valueCols, rightSeq)
 }

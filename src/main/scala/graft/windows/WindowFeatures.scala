@@ -1,5 +1,6 @@
 package graft.windows
 
+import graft.Route
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -16,8 +17,9 @@ import org.apache.spark.sql.functions._
   * `Window.partitionBy(conv_id)` exchange — Spark reuses the hash
   * partitioning across every window function with the same partition spec,
   * so an arbitrarily wide feature select costs exactly one shuffle.
-  * Skewed conv_id is handled in [[AsOfJoin]] (salted buckets); for
-  * order-sensitive windows see the boundary-stitched range split there.
+  * Skewed conv_id is handled by event-time range buckets in [[AsOfJoin]]
+  * (carry-in stitched for as-of, fringe-replicated for range aggregates)
+  * and, for order-insensitive group aggregates, by [[groupByThenSalted]].
   *
   * Reference semantics: the group-aggregate join-back of
   * `FastGroupByThenTransformation.py:23-40` (fit = hash agg by key,
@@ -154,32 +156,33 @@ object WindowFeatures {
     * Derives mean/std from the SAME moment formulas as the salted route
     * (n, s1, s2 then `sqrt((s2 - s1^2/n)/(n-1))`), so on integer-valued
     * inputs the two routes are bit-identical and [[groupByThenAuto]] can
-    * switch between them without changing results.
+    * switch between them without changing results. A null key gets null
+    * aggregates, as the salted route's equi-join back gives it.
     */
   def groupByThenWindowed(df: DataFrame, keyCol: String, value: Column,
       prefix: String): DataFrame = {
     val w = Window.partitionBy(col(keyCol))
     val v = value.cast("double")
+    def keyed(c: Column): Column = when(col(keyCol).isNotNull, c)
     val n = count(v).over(w).cast("double")
     val s1 = sum(v).over(w)
     val s2 = sum(v * v).over(w)
-    df.withColumn(s"${prefix}_mean", s1 / n)
+    df.withColumn(s"${prefix}_mean", keyed(s1 / n))
       .withColumn(s"${prefix}_std",
-        when(n > 1, sqrt((s2 - s1 * s1 / n) / (n - 1))))
-      .withColumn(s"${prefix}_min", min(v).over(w))
-      .withColumn(s"${prefix}_max", max(v).over(w))
-      .withColumn(s"${prefix}_cnt", count(v).over(w))
-      .withColumn(s"${prefix}_sum", s1)
+        keyed(when(n > 1, sqrt((s2 - s1 * s1 / n) / (n - 1)))))
+      .withColumn(s"${prefix}_min", keyed(min(v).over(w)))
+      .withColumn(s"${prefix}_max", keyed(max(v).over(w)))
+      .withColumn(s"${prefix}_cnt", keyed(count(v).over(w)))
+      .withColumn(s"${prefix}_sum", keyed(s1))
   }
 
   /** Cost-based GroupByThen (the [[graft.windows.AsOfJoin.auto]] of group
-    * aggregates): probe the key histogram once (one cheap two-level agg, or
-    * accept caller-known stats via `statsHint`) and route —
+    * aggregates): probe the key histogram once ([[graft.Route.keyStats]],
+    * one aggregation job) and route —
     *
-    *  - a key holding more than a fair per-task share (`maxKey > total /
-    *    defaultParallelism`) would serialize the window's single-partition
-    *    sort task, so take [[groupByThenSalted]] (measured 2.12x at 60% hot
-    *    key, BENCH_SKEW_GROUPBY, `graft.SideBench skew ... groupby`);
+    *  - a [[graft.Route.skewed]] histogram would serialize the window's
+    *    hot-key sort task, so take [[groupByThenSalted]] (measured 2.12x at
+    *    60% hot key, BENCH_SKEW_GROUPBY, `graft.SideBench skew ... groupby`);
     *  - otherwise the plain [[groupByThenWindowed]] key-partition window
     *    (measured 0.83x for salted at 20% hot — the window wins when no key
     *    dominates, and it is one exchange with zero joins).
@@ -188,20 +191,11 @@ object WindowFeatures {
     * values (bit parity on integer-valued inputs; GroupByAutoSpec asserts it).
     */
   def groupByThenAuto(df: DataFrame, keyCol: String, value: Column,
-      prefix: String, salts: Int = 32, broadcastJoin: Boolean = true,
-      statsHint: Option[(Long, Long)] = None): DataFrame = {
-    val (total, maxKey) = statsHint.getOrElse {
-      val r = df.groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
-        .agg(sum(col("__n")), max(col("__n"))).head()
-      // empty input: aggregates are NULL; either route returns empty rows
-      if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
-    }
-    val par = math.max(df.sparkSession.sparkContext.defaultParallelism, 1).toLong
-    if (maxKey > total / par)
-      groupByThenSalted(df, keyCol, value, prefix, salts, broadcastJoin)
+      prefix: String): DataFrame =
+    if (Route.skewed(Route.keyStats(df, keyCol), df.sparkSession))
+      groupByThenSalted(df, keyCol, value, prefix)
     else
       groupByThenWindowed(df, keyCol, value, prefix)
-  }
 
   /** All standard per-turn features of the minimum slice (SURVEY §7.2) in one
     * select — single shuffle on `conv_id`.

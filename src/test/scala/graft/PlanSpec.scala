@@ -205,14 +205,20 @@ class PlanSpec extends SparkSpec {
     val pa = plan(AsOfJoin.auto(turns(40, 0), right, "conv_id", Seq("pval"), col("seq")))
     assert(pa.contains("BroadcastHashJoin") && pa.toLowerCase.contains("asoflessorequal"),
       s"expected the broadcast as-of shape:\n$pa")
-    // (b) big right (threshold 0), uniform keys -> plain union+window
-    val pb = plan(AsOfJoin.auto(turns(40, 0), right, "conv_id", Seq("pval"), col("seq"),
-      broadcastRows = 0))
+    // past the broadcast limit the left key histogram decides, and each
+    // route plans its shape:
+    // (b) uniform keys (75 rows each, fair share 3000/4) -> plain union+window
+    val uniform = turns(40, 0)
+    assert(Route.keyStats(uniform, "conv_id") == ((3000L, 75L)))
+    assert(!Route.skewed(Route.keyStats(uniform, "conv_id"), spark))
+    val pb = plan(AsOfJoin.asOf(uniform, right, "conv_id", Seq("pval"), col("seq")))
     assert(!pb.contains("Join") && !pb.contains("__bucket"),
       s"expected the union+window shape:\n$pb")
-    // (c) big right, one conversation owning 80% of rows -> skew buckets
-    val pc = plan(AsOfJoin.auto(turns(40, 2400), right, "conv_id", Seq("pval"), col("seq"),
-      broadcastRows = 0))
+    // (c) one conversation owning 80% of rows -> skew buckets
+    val hot = turns(40, 2400)
+    assert(Route.keyStats(hot, "conv_id") == ((3000L, 2400L)))
+    assert(Route.skewed(Route.keyStats(hot, "conv_id"), spark))
+    val pc = plan(AsOfJoin.asOfSkew(hot, right, "conv_id", Seq("pval"), col("seq")))
     assert(pc.contains("__bucket"), s"expected the skew-bucketed shape:\n$pc")
   }
 

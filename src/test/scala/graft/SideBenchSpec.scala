@@ -23,6 +23,21 @@ class SideBenchSpec extends SparkSpec {
     } finally rec.close()
   }
 
+  test("Recorder: jobs AQE launches are keyed by their SQL execution's graft. call site") {
+    import org.apache.spark.sql.functions.col
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val rec = new SideBench.Recorder(spark)
+    try {
+      rec.take()
+      spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count().collect()
+      val sites = rec.callSites()
+      // the shuffle map stage runs as its own job, submitted from AQE's pool
+      assert(sites.map(_._2).sum >= 2, sites)
+      assert(sites.forall(s => s._1.startsWith("graft.SideBenchSpec") &&
+        !s._1.contains("withThreadLocalCaptured")), sites)
+    } finally rec.close()
+  }
+
   test("queries: checksummed min-of-reps on the caller's session, which stays running") {
     val Seq((name, t, c)) = SideBench.queries(spark, sf0001, Seq("q_transcripts"), reps = 2)
     assert(name == "q_transcripts" && t.secs.size == 2 && c.jobs > 0 && c.tasks >= c.jobs, c)

@@ -41,6 +41,28 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
+  test("null entity keys match nothing on every as-of route") {
+    val l = Seq[(String, Long)](("a", 1L), ("a", 5L), (null, 3L), (null, 9L))
+      .toDF("conv_id", "turn_idx").withColumn("ts", timestamp_seconds(col("turn_idx")))
+    val r = Seq[(String, Long, Double)](("a", 0L, 10.0), ("a", 4L, 20.0), (null, 2L, 30.0),
+        (null, 8L, 40.0))
+      .toDF("conv_id", "seq", "pval").withColumn("ts", timestamp_seconds(col("seq")))
+    val expected = Seq((Option.empty[String], 3L, Option.empty[Double]), (None, 9L, None),
+      (Some("a"), 1L, Some(10.0)), (Some("a"), 5L, Some(20.0)))
+    val routes = Seq(
+      "asOf" -> AsOfJoin.asOf(l, r, "conv_id", Seq("pval"), col("seq")),
+      "asOfBroadcast" -> AsOfJoin.asOfBroadcast(l, r, "conv_id", Seq("pval"), col("seq")),
+      "auto" -> AsOfJoin.auto(l, r, "conv_id", Seq("pval"), col("seq"))) ++
+      Seq(1, 4).map(b => s"asOfSkew($b)" ->
+        AsOfJoin.asOfSkew(l, r, "conv_id", Seq("pval"), col("seq"), b))
+    for ((name, out) <- routes) {
+      val got = out.select("conv_id", "turn_idx", "pval")
+        .as[(Option[String], Long, Option[Double])]
+        .collect().sortBy(x => (x._1.getOrElse(""), x._2)).toSeq
+      assert(got == expected, name)
+    }
+  }
+
   test("asOfSkew == asOf on sf0.001 transcripts x purchases") {
     val l = Transcripts.fromEvents(Tables.events(spark, sf0001))
     val r = Tables.events(spark, sf0001)

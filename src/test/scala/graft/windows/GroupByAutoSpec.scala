@@ -52,17 +52,39 @@ class GroupByAutoSpec extends SparkSpec {
           col("g_min"), col("g_max"), col("g_cnt"), col("g_sum"))
         .orderBy("conv_id", "turn_idx").collect().toSeq
     for (input <- Seq(balanced, skewed)) {
-      val w = canon(WindowFeatures.groupByThenAuto(input, "conv_id", len, "g",
-        statsHint = Some((1000000L, 1L))))
-      val s = canon(WindowFeatures.groupByThenAuto(input, "conv_id", len, "g",
-        salts = 8, statsHint = Some((100L, 100L))))
+      val w = canon(WindowFeatures.groupByThenWindowed(input, "conv_id", len, "g"))
+      val s = canon(WindowFeatures.groupByThenSalted(input, "conv_id", len, "g", salts = 8))
       assert(w == s)
     }
   }
 
   test("empty input: probe short-circuits, both routes return zero rows") {
     val empty = balanced.filter(lit(false))
+    assert(graft.Route.keyStats(empty, "conv_id") == ((0L, 0L)))
     assert(WindowFeatures.groupByThenAuto(empty, "conv_id", len, "g").count() == 0L)
+  }
+
+  test("null keys get null aggregates on every route, as in an equi-join back") {
+    import spark.implicits._
+    val df = Seq[(String, Int, Double)](("a", 0, 1.0), ("a", 1, 5.0), (null, 0, 3.0),
+      (null, 1, 9.0)).toDF("conv_id", "turn_idx", "v")
+    val a = (Some(3.0), Some(math.sqrt(8.0)), Some(1.0), Some(5.0), Some(2L), Some(6.0))
+    val none = (None, None, None, None, None, None)
+    val expected = Seq((Option.empty[String], 0, none), (None, 1, none),
+      (Some("a"), 0, a), (Some("a"), 1, a))
+    val routes = Seq(
+      "window" -> WindowFeatures.groupByThenWindowed(df, "conv_id", col("v"), "g"),
+      "salted" -> WindowFeatures.groupByThenSalted(df, "conv_id", col("v"), "g"),
+      "auto" -> WindowFeatures.groupByThenAuto(df, "conv_id", col("v"), "g"))
+    for ((name, out) <- routes) {
+      val got = out.select("conv_id", "turn_idx", "g_mean", "g_std", "g_min", "g_max",
+          "g_cnt", "g_sum")
+        .as[(Option[String], Int, Option[Double], Option[Double], Option[Double],
+          Option[Double], Option[Long], Option[Double])]
+        .collect().map(r => (r._1, r._2, (r._3, r._4, r._5, r._6, r._7, r._8)))
+        .sortBy(r => (r._1.getOrElse(""), r._2)).toSeq
+      assert(got == expected, name)
+    }
   }
 
   // r5-verdict item 6: the one router branch with no plan assertion — the
