@@ -1,26 +1,34 @@
 package graft.checkpoint
 
 import graft.exprs.FitStats
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.profile.ColumnProfile
+import graft.search.LayerLog
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Snapshot checkpointing for the layered search — the Iceberg-snapshot
-  * analog (SURVEY §4.3): each completed layer commits
+  * analog (SURVEY §4.3): each completed layer commits ONE document,
   *
-  *   dir/layer=N/{survivors.parquet, seen.parquet, fit.parquet, manifest.json}
+  *   dir/layer=N/manifest.json
   *
-  * with manifest.json written LAST as the commit marker (a layer directory
-  * without a manifest is an aborted write and is ignored). Resume loads the
-  * newest committed layer's full search state, so a restarted job skips
-  * every completed layer and — because all fitted statistics are restored
-  * verbatim — continues on the exact float path of the original run
-  * (resume == fresh, property-tested).
+  * holding the full search state, the layer's audit rows and the run's
+  * per-partition input lineage. The driver already holds all of it, so a
+  * commit runs no Spark job: the document is written to a temporary name
+  * and published with one atomic rename (a layer directory without a
+  * manifest is an aborted write and is ignored). Every double is stored
+  * bit-exactly (finite values as JSON numbers, NaN and ±Infinity as their
+  * raw IEEE bits), so resume loads the newest committed layer's state
+  * verbatim, skips every completed layer and continues on the exact float
+  * path of the original run (resume == fresh, property-tested).
   *
-  * The audit table (dir/audit.parquet, appended per layer) carries
-  * per-candidate metrics; dir/lineage.parquet carries per-partition input
-  * lineage (partition id -> row count) per layer.
+  * [[audit]] and [[lineage]] read the committed manifests back as tables:
+  * per-candidate metrics, and per-partition input lineage (partition id ->
+  * row count) per layer.
   */
 object Checkpoint {
 
@@ -35,88 +43,150 @@ object Checkpoint {
       scores: Map[String, Double],
       survivors: Seq[SurvivorRow],
       fit: FitStats,
-      profiles: Map[String, graft.profile.ColumnProfile],
+      profiles: Map[String, ColumnProfile],
       /** CV-LR AUC channel of the two-stage oracle (empty when LR is off);
         * persisted so a resumed search selects champions from the same
         * LR-scored pool as the fresh run. */
-      lrAuc: Map[String, Double] = Map.empty)
+      lrAuc: Map[String, Double] = Map.empty,
+      /** Per-layer accounting of every layer committed so far, so a resumed
+        * search reports the same layer log as a fresh one. */
+      layers: Seq[LayerLog] = Seq.empty)
+
+  final case class AuditRow(
+      layer: Int, expr: String, score: Double, complexity: Int,
+      passed: Boolean, inherited: Boolean, duration_ms: Long)
+
+  final case class LineageRow(partition_id: Int, rows: Long, layer: Int)
 
   def layerDir(dir: String, layer: Int) = s"$dir/layer=$layer"
 
-  def save(spark: SparkSession, dir: String, st: SearchState): Unit = {
-    import spark.implicits._
-    val d = layerDir(dir, st.layer)
-    // the five state files are independent — write them CONCURRENTLY
-    // (each is a tiny local-relation write whose cost is job + commit
-    // latency, not data); the manifest commit marker still goes LAST, so
-    // the manifest-gated resume contract is unchanged
-    graft.search.FitPool.all[Unit](spark, "ckpt")(
-      () => st.survivors.toDS().write.mode(SaveMode.Overwrite).parquet(s"$d/survivors.parquet"),
-      () => st.seen.toSeq.toDS().toDF("key")
-        .join(st.scores.toSeq.toDF("key", "score"), Seq("key"), "left")
-        .write.mode(SaveMode.Overwrite).parquet(s"$d/seen.parquet"),
-      () => st.fingerprints.toSeq.toDF("fp")
-        .write.mode(SaveMode.Overwrite).parquet(s"$d/fingerprints.parquet"),
-      () => st.fit.m.toSeq.map { case (k, v) => (k, v.toArray) }.toDF("key", "stats")
-        .write.mode(SaveMode.Overwrite).parquet(s"$d/fit.parquet"),
-      () => st.profiles.values.toSeq.toDS()
-        .write.mode(SaveMode.Overwrite).parquet(s"$d/profiles.parquet"),
-      () => if (st.lrAuc.nonEmpty)
-        st.lrAuc.toSeq.toDF("key", "auc")
-          .write.mode(SaveMode.Overwrite).parquet(s"$d/lrauc.parquet"))
-    // commit marker last
-    Files.createDirectories(Paths.get(d))
-    Files.writeString(Paths.get(s"$d/manifest.json"),
-      s"""{"layer": ${st.layer}, "survivors": ${st.survivors.size}, "seen": ${st.seen.size}, "complete": true}""")
+  private val Manifest = "manifest.json"
+
+  /** Commits layer `st.layer`: `audit` holds the layer's new candidates,
+    * `lineage` the input's (partition id, rows) pairs ([[partitionRows]]).
+    */
+  def save(dir: String, st: SearchState, audit: Seq[SurvivorRow], durationMs: Long,
+      lineage: Seq[(Int, Long)]): Unit = {
+    val d = Files.createDirectories(Paths.get(layerDir(dir, st.layer)))
+    val doc = ("layer" -> st.layer) ~ ("complete" -> true) ~ ("state" -> stateJson(st)) ~
+      ("audit" -> (("duration_ms" -> durationMs) ~ ("rows" -> audit.map(rowJson)))) ~
+      ("lineage" -> lineage.map { case (p, n) => ("partition_id" -> p) ~ ("rows" -> n) })
+    val tmp = d.resolve(s"$Manifest.tmp")
+    Files.writeString(tmp, compact(render(doc)))
+    Files.move(tmp, d.resolve(Manifest), StandardCopyOption.ATOMIC_MOVE)
     ()
   }
 
   /** Newest committed layer <= maxLayer, if any. */
-  def load(spark: SparkSession, dir: String, maxLayer: Int): Option[SearchState] = {
+  def load(dir: String, maxLayer: Int): Option[SearchState] =
+    committed(dir).filter(_._1 <= maxLayer).lastOption
+      .map { case (_, m) => readState(read(m) \ "state") }
+
+  /** Per-candidate metrics of every committed layer: the columns of
+    * [[AuditRow]]. */
+  def audit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val committed = (1 to maxLayer).filter(l =>
-      Files.exists(Paths.get(s"${layerDir(dir, l)}/manifest.json")))
-    committed.lastOption.map { l =>
-      val d = layerDir(dir, l)
-      val survivors = spark.read.parquet(s"$d/survivors.parquet")
-        .as[SurvivorRow].collect().toSeq.sortBy(s => (s.layer, s.expr))
-      val seenScores = spark.read.parquet(s"$d/seen.parquet")
-        .select(col("key"), col("score")).collect()
-        .map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      val fps = spark.read.parquet(s"$d/fingerprints.parquet")
-        .as[Long].collect().toSet
-      val fit = FitStats(spark.read.parquet(s"$d/fit.parquet")
-        .select(col("key"), col("stats")).collect()
-        .map(r => r.getString(0) -> r.getSeq[Double](1).toIndexedSeq).toMap)
-      val profiles = spark.read.parquet(s"$d/profiles.parquet")
-        .as[graft.profile.ColumnProfile].collect()
-        .map(p => p.name -> p).toMap
-      val lrAuc =
-        if (Files.exists(Paths.get(s"$d/lrauc.parquet")))
-          spark.read.parquet(s"$d/lrauc.parquet")
-            .select(col("key"), col("auc")).collect()
-            .map(r => r.getString(0) -> r.getDouble(1)).toMap
-        else Map.empty[String, Double]
-      SearchState(l, seenScores.map(_._1).toSet, fps,
-        seenScores.collect { case (k, Some(s)) => k -> s }.toMap, survivors, fit,
-        profiles, lrAuc)
-    }
+    committed(dir).flatMap { case (_, m) =>
+      val doc = read(m)
+      val ms = (doc \ "audit" \ "duration_ms").extract[Long]
+      (doc \ "audit" \ "rows").children.map(readRow).map(r =>
+        AuditRow(r.layer, r.expr, r.score, r.complexity, r.passed, r.inherited, ms))
+    }.toDF()
   }
 
-  /** Append per-candidate metrics for a layer to the audit table. */
-  def appendAudit(spark: SparkSession, dir: String, rows: Seq[SurvivorRow],
-      durationMs: Long): Unit = {
+  /** Per-partition input lineage of every committed layer: the columns of
+    * [[LineageRow]]. */
+  def lineage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    if (rows.nonEmpty)
-      rows.toDS().withColumn("duration_ms", lit(durationMs))
-        .write.mode(SaveMode.Append).parquet(s"$dir/audit.parquet")
+    committed(dir).flatMap { case (l, m) =>
+      (read(m) \ "lineage").children.map(r =>
+        LineageRow((r \ "partition_id").extract[Int], (r \ "rows").extract[Long], l))
+    }.toDF()
   }
 
-  /** Append per-partition input lineage (partition id -> rows) for a layer. */
-  def appendLineage(dir: String, layer: Int, input: DataFrame): Unit = {
-    input.groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows"))
-      .withColumn("layer", lit(layer))
-      .write.mode(SaveMode.Append).parquet(s"$dir/lineage.parquet")
+  /** (partition id, rows) of `df`: one shuffle-free job counting each
+    * partition of the executed plan — the values `groupBy(
+    * spark_partition_id()).count()` gives, without its exchange. */
+  def partitionRows(df: DataFrame): Seq[(Int, Long)] =
+    df.queryExecution.toRdd
+      .mapPartitionsWithIndex((i, rows) => Iterator(i -> rows.size.toLong))
+      .collect().toSeq.filter(_._2 > 0)
+
+  // ---- manifest documents ---------------------------------------------
+
+  /** (layer, manifest path) of every committed layer directory, by layer. */
+  private def committed(dir: String): Seq[(Int, Path)] = {
+    val root = Paths.get(dir)
+    if (!Files.isDirectory(root)) return Seq.empty
+    val LayerName = "layer=(\\d+)".r
+    val dirs = Files.list(root)
+    try dirs.iterator().asScala.toSeq.flatMap { p =>
+        (p.getFileName.toString, p.resolve(Manifest)) match {
+          case (LayerName(n), m) if Files.exists(m) => Seq(n.toInt -> m)
+          case _                                    => Seq.empty
+        }
+      }.sortBy(_._1)
+    finally dirs.close()
   }
+
+  private def read(manifest: Path): JValue =
+    parse(Files.readString(manifest), useBigIntForLong = false)
+
+  private implicit val formats: Formats = DefaultFormats
+
+  /** Finite doubles are JSON numbers (shortest round-trip form); NaN and
+    * ±Infinity, which JSON cannot hold, are the hex of their raw bits. */
+  private def num(d: Double): JValue =
+    if (java.lang.Double.isFinite(d)) JDouble(d)
+    else JString(java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d)))
+
+  private def dbl(v: JValue): Double = v match {
+    case JString(s) => java.lang.Double.longBitsToDouble(java.lang.Long.parseUnsignedLong(s, 16))
+    case n          => n.extract[Double]
+  }
+
+  private def doubles(m: Map[String, Double]): JValue =
+    JObject(m.toList.sortBy(_._1).map { case (k, d) => k -> num(d) })
+
+  private def readDoubles(v: JValue): Map[String, Double] =
+    v.asInstanceOf[JObject].obj.map { case (k, d) => k -> dbl(d) }.toMap
+
+  private def rowJson(r: SurvivorRow): JValue =
+    ("layer" -> r.layer) ~ ("expr" -> r.expr) ~ ("score" -> num(r.score)) ~
+      ("complexity" -> r.complexity) ~ ("passed" -> r.passed) ~ ("inherited" -> r.inherited)
+
+  private def readRow(v: JValue): SurvivorRow = SurvivorRow((v \ "layer").extract[Int],
+    (v \ "expr").extract[String], dbl(v \ "score"), (v \ "complexity").extract[Int],
+    (v \ "passed").extract[Boolean], (v \ "inherited").extract[Boolean])
+
+  private def stateJson(st: SearchState): JValue =
+    ("layer" -> st.layer) ~ ("seen" -> st.seen.toList.sorted) ~
+      ("fingerprints" -> st.fingerprints.toList.sorted) ~ ("scores" -> doubles(st.scores)) ~
+      ("survivors" -> st.survivors.map(rowJson)) ~
+      ("fit" -> JObject(st.fit.m.toList.sortBy(_._1).map { case (k, vs) =>
+        k -> JArray(vs.map(num).toList) })) ~
+      ("profiles" -> st.profiles.toList.sortBy(_._1).map { case (k, p) =>
+        ("key" -> k) ~ ("name" -> p.name) ~ ("isNumeric" -> p.isNumeric) ~
+          ("count" -> p.count) ~ ("missing" -> p.missing) ~ ("min" -> num(p.min)) ~
+          ("max" -> num(p.max)) ~ ("hasZero" -> p.hasZero) ~ ("distinct" -> p.distinct) }) ~
+      ("lrAuc" -> doubles(st.lrAuc)) ~
+      ("layers" -> st.layers.map(l => ("complexity" -> l.complexity) ~
+        ("enumerated" -> l.enumerated) ~ ("survived" -> l.survived) ~ ("dropped" -> l.dropped)))
+
+  private def readState(v: JValue): SearchState = SearchState(
+    layer = (v \ "layer").extract[Int],
+    seen = (v \ "seen").extract[List[String]].toSet,
+    fingerprints = (v \ "fingerprints").extract[List[Long]].toSet,
+    scores = readDoubles(v \ "scores"),
+    survivors = (v \ "survivors").children.map(readRow),
+    fit = FitStats((v \ "fit").asInstanceOf[JObject].obj.map { case (k, vs) =>
+      k -> vs.children.map(dbl).toIndexedSeq }.toMap),
+    profiles = (v \ "profiles").children.map { p =>
+      (p \ "key").extract[String] -> ColumnProfile((p \ "name").extract[String],
+        (p \ "isNumeric").extract[Boolean], (p \ "count").extract[Long],
+        (p \ "missing").extract[Long], dbl(p \ "min"), dbl(p \ "max"),
+        (p \ "hasZero").extract[Boolean], (p \ "distinct").extract[Long]) }.toMap,
+    lrAuc = readDoubles(v \ "lrAuc"),
+    layers = (v \ "layers").children.map(l => LayerLog((l \ "complexity").extract[Int],
+      (l \ "enumerated").extract[Int], (l \ "survived").extract[Int], (l \ "dropped").extract[Int])))
 }

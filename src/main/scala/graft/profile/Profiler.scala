@@ -2,6 +2,9 @@ package graft.profile
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** Data-derived column properties driving applicability pruning — the analog
   * of the reference's `properties` dict (`RawFeature.py:74-92`,
@@ -119,14 +122,37 @@ object Profiler {
     }.toMap
   }
 
-  /** Distinct values of a categorical column on the fit scope, for OneHot
-    * enumeration (`generators/OneHotGenerator.py:6-21`). Capped — a column
-    * with more distinct values than `limit` is not one-hot-able.
+  /** Distinct values of each categorical column on the fit scope, in Spark's
+    * string order, for OneHot enumeration (`generators/OneHotGenerator.py:
+    * 6-21`). Capped — a column with more distinct values than `limit` is not
+    * one-hot-able and gets none. One shuffle-free job for all columns: each
+    * partition keeps only its `limit + 1` smallest values per column (a
+    * bounded sorted set), so at most that many per column and partition
+    * reach the driver, as with a `takeOrdered`.
     */
-  def distinctValues(df: DataFrame, c: Column, limit: Int = 100): Seq[String] = {
-    val vals = df.select(c.cast("string").as("v")).filter(col("v").isNotNull)
-      .groupBy("v").count().orderBy(col("v")).limit(limit + 1)
-      .collect().map(_.getString(0)).toSeq
-    if (vals.size > limit) Seq.empty else vals
+  def distinctValues(df: DataFrame, cols: Seq[Column], limit: Int = 100): Seq[Seq[String]] = {
+    if (cols.isEmpty) return Seq.empty
+    val n = cols.size
+    val perPartition = df.select(cols.map(_.cast("string")): _*).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val sets = Array.fill(n)(new java.util.TreeSet[UTF8String]())
+        rows.foreach(r => (0 until n).foreach(i =>
+          if (!r.isNullAt(i)) offerSmallest(sets(i), r.getUTF8String(i), limit + 1)))
+        Iterator(sets)
+      }
+      .collect()
+    (0 until n).map { i =>
+      val merged = new java.util.TreeSet[UTF8String]()
+      perPartition.foreach(_(i).forEach(v => offerSmallest(merged, v, limit + 1)))
+      if (merged.size > limit) Seq.empty else merged.asScala.toSeq.map(_.toString)
+    }
   }
+
+  /** Keeps `s` the `keep` smallest of `s` and `v` (`v` is copied: a row's
+    * string may point into a reused buffer). */
+  private def offerSmallest(s: java.util.TreeSet[UTF8String], v: UTF8String, keep: Int): Unit =
+    if (s.size < keep || v.compareTo(s.last) < 0) {
+      s.add(v.clone())
+      if (s.size > keep) s.pollLast()
+    }
 }

@@ -365,7 +365,7 @@ object SearchQueries {
           (pmod(xxhash64(col("event_id") + 13), lit(100)).cast("double") / 100 + 0.5).as("x2"))
         .withColumn("y", (col("x1") * col("x2") > lit(1.0)).cast("int"))
       // lrTopK=0: this gate pins checkpoint/resume bit-equality on the MI
-      // stage; resume UNDER the LR stage (lrauc.parquet round-trip) is
+      // stage; resume UNDER the LR stage (the LR AUC round-trip) is
       // spec-gated in CdfcSpec "resume under lrTopK"
       val cfg = CdfcConfig(cMax = 3, binaryOps = Seq(BinOp.Mul),
         unaryOps = Seq(UnaryOp.Minus, UnaryOp.Log, UnaryOp.MinMax), groupByAggs = Seq.empty,

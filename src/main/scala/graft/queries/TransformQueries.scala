@@ -84,7 +84,7 @@ object TransformQueries {
 
     "q_onehot" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val vals = graft.profile.Profiler.distinctValues(ev, col("event_type"))
+      val vals = graft.profile.Profiler.distinctValues(ev, Seq(col("event_type"))).head
       sel(ev, Seq("event_id"),
         vals.map(v => s"f_is_$v" -> (Unary(EqualsStr(v), RawCol("event_type")): FeatureExpr)))
     }),

@@ -201,7 +201,9 @@ object AsOfJoin {
     *
     * Equal-timestamp semantics: the range frame includes ALL rows at the
     * boundary instants, so a right row AT exactly left.ts is visible —
-    * consistent with [[asOf]].
+    * consistent with [[asOf]]. A null entity matches nothing, as in
+    * [[asOf]]: right rows with a null entity are dropped, so a null-entity
+    * left row aggregates over no rows.
     *
     * Skew: like any per-entity window, a hot entity serializes into one
     * task — [[rangeAggSkew]] is the time-bucketed variant for that case,
@@ -219,7 +221,7 @@ object AsOfJoin {
       windowSeconds: Long,
       aggs: Seq[(String, Column => Column)]): DataFrame = {
     val leftCols = left.columns.toSeq
-    val r = right.select(col(entity), col("ts"),
+    val r = right.filter(col(entity).isNotNull).select(col(entity), col("ts"),
       lit(0).as("__side"), col(valueCol).cast("double").as("__v"))
     val l = left.withColumn("__side", lit(1))
       .withColumn("__v", lit(null).cast("double"))
@@ -264,7 +266,7 @@ object AsOfJoin {
       least(greatest((us - lo) / width, lit(0L)), lit(numBuckets - 1L)).cast("int")
 
     val leftCols = left.columns.toSeq
-    val r = right.select(col(entity), col("ts"),
+    val r = right.filter(col(entity).isNotNull).select(col(entity), col("ts"),
         lit(0).as("__side"), col(valueCol).cast("double").as("__v"))
       .withColumn("__bucket", explode(sequence(
         bucketOfUs(unix_micros(col("ts"))),

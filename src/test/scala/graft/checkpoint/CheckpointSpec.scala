@@ -15,7 +15,7 @@ class CheckpointSpec extends SparkSpec {
     .withColumn("y", (col("x1") * col("x2") > lit(1.0)).cast("int"))
 
   // lrTopK=0: checkpoint MECHANICS under test (resume-under-LR incl. the
-  // lrauc.parquet round-trip is covered by CdfcSpec "resume under lrTopK")
+  // LR AUC round-trip is covered by CdfcSpec "resume under lrTopK")
   private val cfg = CdfcConfig(cMax = 3, binaryOps = Seq(BinOp.Mul),
     unaryOps = Seq(UnaryOp.Minus, UnaryOp.Log, UnaryOp.MinMax), groupByAggs = Seq.empty,
     lrTopK = 0)
@@ -39,17 +39,23 @@ class CheckpointSpec extends SparkSpec {
     assert(canon(resumed) == canon(fresh))
     assert(resumed.best.key == fresh.best.key)
     assert(math.abs(resumed.best.score - fresh.best.score) < 1e-12)
+    assert(resumed.layers == fresh.layers)
   }
 
   test("audit and lineage tables are appended per layer") {
     val dir = Files.createTempDirectory("ckpt2").toString
     new Cdfc(planted, Seq("x1", "x2"), Nil, Nil, col("y"),
       cfg.copy(cMax = 2), Some(dir)).run()
-    val audit = spark.read.parquet(s"$dir/audit.parquet")
+    val audit = Checkpoint.audit(spark, dir)
     assert(audit.count() > 0)
     assert(audit.columns.toSet ==
       Set("layer", "expr", "score", "complexity", "passed", "inherited", "duration_ms"))
-    val lineage = spark.read.parquet(s"$dir/lineage.parquet")
+    assert(audit.schema.map(f => f.name -> f.dataType.simpleString).toMap == Map(
+      "layer" -> "int", "expr" -> "string", "score" -> "double", "complexity" -> "int",
+      "passed" -> "boolean", "inherited" -> "boolean", "duration_ms" -> "bigint"))
+    val lineage = Checkpoint.lineage(spark, dir)
+    assert(lineage.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("partition_id" -> "int", "rows" -> "bigint", "layer" -> "int"))
     assert(lineage.select("layer").distinct().count() == 2)
     assert(lineage.agg(sum("rows")).head().getLong(0) == 3000L * 2)
   }
@@ -58,9 +64,58 @@ class CheckpointSpec extends SparkSpec {
     val dir = Files.createTempDirectory("ckpt3").toString
     new Cdfc(planted, Seq("x1", "x2"), Nil, Nil, col("y"),
       cfg.copy(cMax = 2), Some(dir)).run()
-    // simulate a crash mid-commit of layer 3: parquet written, no manifest
+    // simulate a crash mid-commit of layer 3: directory made, no manifest
     Files.createDirectories(Paths.get(s"$dir/layer=3"))
-    val st = Checkpoint.load(spark, dir, 5)
+    val st = Checkpoint.load(dir, 5)
     assert(st.exists(_.layer == 2))
+  }
+
+  test("a layer directory holding only the temporary manifest is ignored on load") {
+    val dir = Files.createTempDirectory("ckpt4").toString
+    new Cdfc(planted, Seq("x1", "x2"), Nil, Nil, col("y"),
+      cfg.copy(cMax = 2), Some(dir)).run()
+    // a crash between writing the temporary file and its atomic rename
+    val d3 = Files.createDirectories(Paths.get(s"$dir/layer=3"))
+    Files.copy(Paths.get(s"$dir/layer=2/manifest.json"), d3.resolve("manifest.json.tmp"))
+    assert(Checkpoint.load(dir, 5).map(_.layer) == Some(2))
+    assert(Checkpoint.audit(spark, dir).select("layer").distinct().count() == 2)
+  }
+
+  test("a search state with NaN, ±Infinity and -0.0 round-trips bit-identically") {
+    val dir = Files.createTempDirectory("ckpt5").toString
+    val odd = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0,
+      Double.MinPositiveValue, Double.MaxValue, 0.1 + 0.2, -1e-300, 1e22)
+    val st = Checkpoint.SearchState(
+      layer = 2,
+      seen = Set("x1", "mul(x1,x2)", "a \"quoted\" key"),
+      fingerprints = Set(Long.MinValue, -1L, 0L, Long.MaxValue),
+      scores = odd.zipWithIndex.map { case (d, i) => s"s$i" -> d }.toMap,
+      survivors = odd.zipWithIndex.map { case (d, i) =>
+        Checkpoint.SurvivorRow(1 + i % 2, s"e$i", d, 1 + i % 2, i % 2 == 0, i % 3 == 0) },
+      fit = FitStats(Map("minmax(x1)" -> odd.toIndexedSeq, "empty" -> IndexedSeq.empty)),
+      profiles = odd.zipWithIndex.map { case (d, i) =>
+        s"p$i" -> graft.profile.ColumnProfile(s"p$i", isNumeric = i % 2 == 0, count = i,
+          missing = 0L, min = d, max = -d, hasZero = d == 0.0, distinct = Long.MaxValue - i)
+      }.toMap,
+      lrAuc = Map("mul(x1,x2)" -> -0.0, "x1" -> Double.NaN),
+      layers = Seq(graft.search.LayerLog(2, 36, 19, 0)))
+    Checkpoint.save(dir, st, st.survivors.take(3), 17L, Seq(0 -> 5L, 3 -> 7L))
+    val back = Checkpoint.load(dir, 2).get
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def bitsOf(s: Checkpoint.SearchState) = (
+      s.scores.map { case (k, d) => k -> bits(d) },
+      s.survivors.map(r => r.copy(score = 0.0) -> bits(r.score)),
+      s.fit.m.map { case (k, vs) => k -> vs.map(bits) },
+      s.profiles.map { case (k, p) => k -> (p.copy(min = 0.0, max = 0.0), bits(p.min), bits(p.max)) },
+      s.lrAuc.map { case (k, d) => k -> bits(d) })
+    assert(bitsOf(back) == bitsOf(st))
+    assert((back.layer, back.seen, back.fingerprints, back.layers) ==
+      (st.layer, st.seen, st.fingerprints, st.layers))
+    val audit = Checkpoint.audit(spark, dir).collect()
+    assert(audit.map(r => bits(r.getAs[Double]("score"))).toSeq ==
+      st.survivors.take(3).map(r => bits(r.score)))
+    assert(audit.forall(_.getAs[Long]("duration_ms") == 17L))
+    assert(Checkpoint.lineage(spark, dir).collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2)))
+      .toSeq == Seq((0, 5L, 2), (3, 7L, 2)))
   }
 }

@@ -63,6 +63,27 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
+  test("null entity keys match nothing on every range-aggregate route") {
+    val l = Seq[(String, Long)](("a", 1L), ("a", 5L), (null, 3L), (null, 9L))
+      .toDF("conv_id", "turn_idx").withColumn("ts", timestamp_seconds(col("turn_idx")))
+    val r = Seq[(String, Long, Double)](("a", 0L, 10.0), ("a", 4L, 20.0), (null, 2L, 30.0),
+        (null, 8L, 40.0))
+      .toDF("conv_id", "seq", "pval").withColumn("ts", timestamp_seconds(col("seq")))
+    val aggs = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      "cnt" -> (c => count(c)), "mx" -> (c => max(c)))
+    val expected = Seq((Option.empty[String], 3L, 0L, Option.empty[Double]), (None, 9L, 0L, None),
+      (Some("a"), 1L, 1L, Some(10.0)), (Some("a"), 5L, 2L, Some(20.0)))
+    val routes = ("rangeAgg" -> AsOfJoin.rangeAgg(l, r, "conv_id", "pval", 3600L, aggs)) +:
+      Seq(1, 4).map(b => s"rangeAggSkew($b)" ->
+        AsOfJoin.rangeAggSkew(l, r, "conv_id", "pval", 3600L, aggs, b))
+    for ((name, out) <- routes) {
+      val got = out.select("conv_id", "turn_idx", "cnt", "mx")
+        .as[(Option[String], Long, Long, Option[Double])]
+        .collect().sortBy(x => (x._1.getOrElse(""), x._2)).toSeq
+      assert(got == expected, name)
+    }
+  }
+
   test("asOfSkew == asOf on sf0.001 transcripts x purchases") {
     val l = Transcripts.fromEvents(Tables.events(spark, sf0001))
     val r = Tables.events(spark, sf0001)
