@@ -40,6 +40,31 @@ object Applicability {
     value.isNumeric && key.distinct > 1 &&
       (key.count == 0 || key.distinct * 2 <= key.count)
 
+  /** A candidate's profile: the one `known` holds under its canonical key,
+    * else one derived analytically from its children's (and memoized into
+    * `known`); None when a leaf has no profile. The lattice and greedy
+    * searches (`Cdfc`, `Cognito`, `Traversals`) prune through this one
+    * derivation, so a guard on a composition reads the composition's
+    * derived domain, never a missing profile.
+    */
+  def profileOf(e: FeatureExpr, known: collection.mutable.Map[String, ColumnProfile])
+      : Option[ColumnProfile] = {
+    val k = Canon.key(e)
+    known.get(k).orElse {
+      val derived = e match {
+        case Unary(op, ch) => profileOf(ch, known).map(derive(op, _))
+        case BinaryE(op, l, r) =>
+          for (lp <- profileOf(l, known); rp <- profileOf(r, known)) yield derive(op, lp, rp)
+        case GroupByThenE(a, v, kk) =>
+          for (vp <- profileOf(v, known); kp <- profileOf(kk, known))
+            yield deriveGroupBy(a, vp, kp)
+        case _ => None
+      }
+      derived.foreach(known(k) = _)
+      derived
+    }
+  }
+
   /** Analytic propagation of profiles through ops (no data pass). Where a
     * bound cannot be derived analytically the result is conservative
     * (NaN bound = unknown, guards treat unknown as failing).

@@ -3,7 +3,6 @@ package graft.queries
 import graft.exprs.PortableRound.col6
 import graft.Tables
 import graft.transcripts.Transcripts
-import graft.profile.Profiler
 import graft.search._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,9 +35,7 @@ object SearchQueries {
       import s.implicits._
       val b = base(s, dir)
       val feats = Seq("text_len" -> col("text_len"), "turn_pos" -> col("turn_pos"))
-      val prof = Profiler.profile(b, feats)
-      val lohi = prof.map { case (n, p) => n -> (p.min, p.max) }
-      val st = MIScorer.scoreBatch(b, feats, col("label_next_tool"), lohi)
+      val st = MIScorer.scoreBatch(b, feats, col("label_next_tool"))
       Seq((math.rint(st("text_len").mi * 1e6) / 1e6,
         math.rint(st("turn_pos").mi * 1e6) / 1e6)).toDF("mi_text_len", "mi_turn_pos")
     }),

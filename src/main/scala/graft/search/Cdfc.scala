@@ -1,6 +1,7 @@
 package graft.search
 
 import graft.exprs._
+import graft.exprs.Applicability.profileOf
 import graft.profile.{ColumnProfile, Profiler}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -32,14 +33,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per layer, one profile and one MI-score aggregation over
   * one wide select of all candidates, then one batched LR re-score, plus
-  * the fit jobs of the layer's fitted ops. Layer 1 reuses the raw-column
-  * profile pass and reads every categorical's one-hot values in one more
-  * job; a checkpointed run counts its input lineage once; a layer commit
-  * runs no job. Measured on the `search_lr` benchmark (cMax 2, AQE on):
-  * 34 jobs per search — layer 1: profile 2, one-hot values 1, MI 4, LR 6,
-  * lineage 1; layer 2: fits 8, profile 2, MI 4, LR 6. No candidate column
-  * is ever collected; the only shuffles are the windows of GroupByThen
-  * candidates (all candidates with the same key share one exchange).
+  * the fit jobs of the layer's fitted ops. Layer 1 scores from the
+  * raw-column profile pass and reads every categorical's one-hot values in
+  * one more job; a checkpointed run counts its input lineage once; a layer
+  * commit runs no job. Measured on the `search_lr` benchmark (cMax 2, AQE
+  * on, traced seeds 7 and 108): 30 jobs per search — layer 1: profile 2,
+  * one-hot values 1, MI 2, LR 6, lineage 1; layer 2: fits 8, profile 2,
+  * MI 2, LR 6 (each aggregation is a shuffle-map job plus a result job).
+  * No candidate column is ever collected; the only shuffles are the
+  * windows of GroupByThen candidates (all candidates with the same key
+  * share one exchange).
   */
 final case class CdfcConfig(
     cMax: Int = 3,
@@ -152,31 +155,15 @@ final class Cdfc(
 
     def applicable(e: FeatureExpr): Boolean = e match {
       case Unary(op: UnaryOp.Impute, ch) => ch.isInstanceOf[RawCol] &&
-        profileOf(ch).exists(Applicability.isApplicable(op, _))
-      case Unary(op, ch) => profileOf(ch).exists(Applicability.isApplicable(op, _))
+        profileOf(ch, profiles).exists(Applicability.isApplicable(op, _))
+      case Unary(op, ch) => profileOf(ch, profiles).exists(Applicability.isApplicable(op, _))
       case BinaryE(op, l, r) =>
-        (for (lp <- profileOf(l); rp <- profileOf(r))
+        (for (lp <- profileOf(l, profiles); rp <- profileOf(r, profiles))
           yield Applicability.isApplicable(op, lp, rp)).getOrElse(false)
       case GroupByThenE(_, v, k) =>
-        (for (vp <- profileOf(v); kp <- profileOf(k))
+        (for (vp <- profileOf(v, profiles); kp <- profileOf(k, profiles))
           yield Applicability.isApplicableGroupBy(vp, kp)).getOrElse(false)
       case _ => true
-    }
-
-    def profileOf(e: FeatureExpr): Option[ColumnProfile] = {
-      val k = Canon.key(e)
-      profiles.get(k).orElse {
-        val derived = e match {
-          case Unary(op, ch) => profileOf(ch).map(Applicability.derive(op, _))
-          case BinaryE(op, l, r) =>
-            for (lp <- profileOf(l); rp <- profileOf(r)) yield Applicability.derive(op, lp, rp)
-          case GroupByThenE(a, v, kk) =>
-            for (vp <- profileOf(v); kp <- profileOf(kk)) yield Applicability.deriveGroupBy(a, vp, kp)
-          case _ => None
-        }
-        derived.foreach(p => profiles(k) = p)
-        derived
-      }
     }
 
     def parentsOf(e: FeatureExpr): Seq[FeatureExpr] = e match {
@@ -230,7 +217,7 @@ final class Cdfc(
         case GroupByThenE(_, v, _) => Seq(v)
         case other                 => parentsOf(other)
       }
-      ps.filter(p => profileOf(p).forall(_.isNumeric))
+      ps.filter(p => profileOf(p, profiles).forall(_.isNumeric))
     }
     def lrRescore(startIdx: Int, cost: Int): Unit = {
       val layerNew = (startIdx until survivors.size)
@@ -267,25 +254,20 @@ final class Cdfc(
 
       toEval.grouped(cfg.batchSize).foreach { batch =>
         val named = batch.map(e => Lower.alias(e) -> e)
-        // bin bounds: one profile agg per batch (runtime, not analytic —
-        // analytic bounds are conservative and would skew the MI bins)
         val cols = named.map { case (n, e) => n -> Lower.toColumn(e, fit) }
         // raw columns already have their profile from the layer-1 pass
-        // (`rawProfiles`, the same aggregates): profile only the others
+        // (`rawProfiles`); MIScorer profiles the others (runtime bin bounds,
+        // not analytic ones: those are conservative and would skew the bins)
         val known = named.collect { case (n, RawCol(c)) if rawProfiles.contains(c) =>
           n -> rawProfiles(c) }.toMap
-        val prof = known ++ Profiler.profileBatch(df, cols.filterNot(nc => known.contains(nc._1)))
-        val lohi = prof.map { case (n, p) => n -> (p.min, p.max) }
-        val stats = MIScorer.scoreBatch(df, cols.map { case (n, cc) => n -> cc },
-          label, lohi, cfg.bins)
+        val stats = MIScorer.scoreBatch(df, cols, label, cfg.bins, known)
         named.foreach { case (n, e) =>
           val st = stats(n)
           val k = Canon.key(e)
           seen += k
-          profiles(k) = ColumnProfile(k, isNumeric = true, count = prof(n).count,
-            missing = st.missing, min = st.min, max = st.max,
-            hasZero = st.min <= 0 && st.max >= 0, distinct = st.distinct)
-          val isConstant = st.distinct <= 1
+          profiles(k) = st.profile.copy(name = k,
+            hasZero = st.profile.min <= 0 && st.profile.max >= 0)
+          val isConstant = st.profile.distinct <= 1
           val isDup = fingerprints.contains(st.fingerprint)
           if (!isConstant && !isDup) {
             fingerprints += st.fingerprint

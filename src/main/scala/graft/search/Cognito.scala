@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.exprs._
-import graft.profile.Profiler
+import graft.profile.{ColumnProfile, Profiler}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -26,24 +26,24 @@ object Cognito {
       binaryOps: Seq[BinOp] = Seq(BinOp.Add, BinOp.Mul),
       bins: Int = 10): Seq[CogStep] = {
     val raws: Seq[FeatureExpr] = rawNumeric.map(RawCol(_))
-    val profiles = collection.mutable.HashMap[String, graft.profile.ColumnProfile]()
-    profiles ++= Profiler.profile(df, rawNumeric.map(n => n -> col(n)))
+    val rawProfiles = Profiler.profile(df, rawNumeric.map(n => n -> col(n)))
+    val profiles = collection.mutable.HashMap[String, ColumnProfile]() ++= rawProfiles
     var fit = FitStats.empty
 
     def score(cands: Seq[FeatureExpr]): Map[String, Double] = {
       if (cands.isEmpty) return Map.empty
       fit = Fitter.fit(df, cands, known = fit, label = Some(label))
       val named = cands.map(e => Lower.alias(e) -> e)
-      val cols = named.map { case (n, e) => n -> Lower.toColumn(e, fit) }
-      val prof = Profiler.profileBatch(df, cols)
-      val lohi = prof.map { case (n, p) => n -> (p.min, p.max) }
-      val st = MIScorer.scoreBatch(df, cols, label, lohi, bins)
+      val st = MIScorer.scoreBatch(df, named.map { case (n, e) => n -> Lower.toColumn(e, fit) },
+        label, bins, named.collect { case (n, RawCol(c)) => n -> rawProfiles(c) }.toMap)
       named.map { case (n, e) => Canon.key(e) -> st(n).mi }.toMap
     }
 
     def applicableUnary(op: UnaryOp, e: FeatureExpr): Boolean =
-      profiles.get(Canon.key(e))
-        .forall(p => graft.exprs.Applicability.isApplicable(op, p))
+      // a composition's guard reads its derived profile (Log over a
+      // negative-domain product is pruned, as the reference's
+      // `is_applicable` does, not scored on Spark's null for x <= 0)
+      Applicability.profileOf(e, profiles).forall(p => Applicability.isApplicable(op, p))
 
     // root: best raw feature
     val rootScores = score(raws)

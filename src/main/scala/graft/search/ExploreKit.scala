@@ -102,13 +102,11 @@ object ExploreKit {
       val mat = FeatureConstructor.snapshot(df.select(
         named.map { case (n, e) => Lower.toColumn(e, fit).cast("double").as(n) } :+
           label.cast("int").as("__y"): _*))
-      val cols = named.map { case (n, _) => n -> col(n) }
-      val prof = Profiler.profileBatch(mat, cols)
-      val lohi = prof.map { case (n, p) => n -> (p.min, p.max) }
-      val stats = MIScorer.scoreBatch(mat, cols, col("__y"), lohi, cfg.bins)
+      val stats = MIScorer.scoreBatch(mat, named.map { case (n, _) => n -> col(n) },
+        col("__y"), cfg.bins)
       named.foreach { case (n, e) =>
         val st = stats(n)
-        if (st.distinct > 1 && seenFp.add(st.fingerprint))
+        if (st.profile.distinct > 1 && seenFp.add(st.fingerprint))
           scored += EkScored(e, Canon.key(e), st.mi)
       }
     }

@@ -5,7 +5,6 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.LinearRegression
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.profile.Profiler
 
 /** Feature-selection masks over a constructed feature matrix (reference
   * `transformations/feature_selection/` + `interactiveAutoML/
@@ -20,10 +19,7 @@ object FeatureSelection {
     */
   def selectKBestMI(df: DataFrame, featureCols: Seq[String], label: Column,
       k: Int, minMi: Double = 0.0, bins: Int = 10): Seq[String] = {
-    val cols = featureCols.map(n => n -> col(n))
-    val prof = Profiler.profile(df, cols)
-    val lohi = prof.map { case (n, p) => n -> (p.min, p.max) }
-    val st = MIScorer.scoreBatch(df, cols, label, lohi, bins)
+    val st = MIScorer.scoreBatch(df, featureCols.map(n => n -> col(n)), label, bins)
     featureCols.map(n => n -> st(n).mi)
       .filter(_._2 > minMi)
       .sortBy(-_._2).take(k).map(_._1)

@@ -13,8 +13,8 @@ import java.util.concurrent.Executors
   * Its callers hold a handful of actions with no data dependency between
   * them, each touching a few small partitions, so each is bound by job
   * latency rather than data: FairExp's and Boruta's spark.ml fits, the
-  * independent aggregations of one `Fitter` pass and of `MIScorer`, and
-  * the property gates' independent checks. Submitting them from driver threads overlaps the scheduling
+  * independent aggregations of one `Fitter` pass, and the property gates'
+  * independent checks. Submitting them from driver threads overlaps the scheduling
   * latencies and lets the scheduler fill the executor; each task gets its
   * own FAIR-scheduler pool (pools are fair-shared against each other, so no
   * task starves behind another — `spark.scheduler.mode=FAIR` is set by the

@@ -1,12 +1,13 @@
 package graft.search
 
+import graft.profile.{ColumnProfile, Profiler}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Candidate gain oracle: mutual information between the equi-width-binned
   * feature and the (binary) label, computed for a whole batch of candidates
-  * in ONE aggregation job — counts are map-side partial aggregates, so no
-  * data row ever shuffles (the job moves F x (bins+1) x 2 counters per
+  * in ONE aggregation: counts are map-side partial aggregates, so no data
+  * row ever shuffles (the exchange moves F x (bins+1) x 2 counters per
   * partition, independent of table size).
   *
   * This is the cheap closed-form stand-in for the reference's per-candidate
@@ -15,48 +16,50 @@ import org.apache.spark.sql.functions._
   * (`fairexp.py:117-126`, `mutual_info_classif`). Scores are in nats,
   * normalized by H(y) so the gate threshold is scale-free.
   *
-  * The same job also returns each candidate's value fingerprint
-  * (order-insensitive sum of xxhash64 of the rounded value) and approx
-  * distinct count — feeding the runtime constant prune
-  * (`run_evaluation.py:287-290`) and value-equality dedup (`:292-298`)
-  * without extra passes.
+  * The same aggregation also returns each candidate's value fingerprint
+  * (order-insensitive xor of xxhash64 of the rounded value), for the
+  * value-equality dedup (`run_evaluation.py:292-298`). Missing, min, max
+  * and distinct come from the candidate's [[ColumnProfile]], the one
+  * profile pass that also sets the bin bounds; it feeds the runtime
+  * constant prune (`:287-290`).
   */
 object MIScorer {
 
-  final case class FeatureStats(
-      mi: Double,
-      fingerprint: Long,
-      distinct: Long,
-      min: Double,
-      max: Double,
-      missing: Long)
+  /** `profile` covers every row of the scored frame, as the bin bounds do;
+    * `mi` and `fingerprint` cover its labelled rows.
+    */
+  final case class FeatureStats(profile: ColumnProfile, mi: Double, fingerprint: Long)
 
-  /** @param label boolean/0-1 column (rows with null label are excluded)
-    * @param lohi   per-feature (min,max) for binning; names must match feats
+  /** @param label    boolean/0-1 column (rows with null label are excluded
+    *                 from the MI counts and the fingerprint)
+    * @param profiles profiles the caller already holds, keyed by feature
+    *                 name; every other feature is profiled here, all in one
+    *                 [[Profiler.profileBatch]] call
     */
   def scoreBatch(
       df: DataFrame,
       feats: Seq[(String, Column)],
       label: Column,
-      lohi: Map[String, (Double, Double)],
-      bins: Int = 10): Map[String, FeatureStats] = {
+      bins: Int = 10,
+      profiles: Map[String, ColumnProfile] = Map.empty): Map[String, FeatureStats] = {
     if (feats.isEmpty) return Map.empty
+    val prof = profiles ++ Profiler.profileBatch(df, feats.filterNot(f => profiles.contains(f._1)))
     val y = label.cast("int")
 
     // Explode the batch to (fid, v, y) rows and aggregate per fid — a wide
     // agg with F x (2*bins+7) aggregate expressions (~1700 for a 64-batch)
     // blows the codegen method limit and falls back to interpreted Janino
-    // (measured ~9s/batch at sf0.1); the exploded groupBy keeps ~27 compact
-    // aggregates, map-side partial on |F| keys (~3x faster, same results).
+    // (measured ~9s/batch at sf0.1); the exploded groupBy keeps a few
+    // compact aggregates, map-side partial on |F| keys (~3x faster).
     val pairs = feats.zipWithIndex.map { case ((_, c), i) =>
       struct(lit(i).as("fid"), c.cast("double").as("v"))
     }
-    val loArr = typedLit(feats.map { case (n, _) => lohi(n)._1 })
+    val loArr = typedLit(feats.map { case (n, _) => prof(n).min })
     val wArr = typedLit(feats.map { case (n, _) =>
-      val (lo, hi) = lohi(n)
-      if (hi > lo) (hi - lo) / bins else 1.0
+      val p = prof(n)
+      if (p.max > p.min) (p.max - p.min) / bins else 1.0
     })
-    val hiArr = typedLit(feats.map { case (n, _) => lohi(n)._2 })
+    val hiArr = typedLit(feats.map { case (n, _) => prof(n).max })
     val v = col("v")
     // right-closed equi-width bin in [0, bins-1]; null/NaN -> bin `bins`.
     // The <=lo / >=hi short-circuits equal the ceil formula for finite
@@ -68,91 +71,46 @@ object MIScorer {
       .otherwise(
         least(greatest(ceil((v - element_at(loArr, col("fid") + 1))
           / element_at(wArr, col("fid") + 1)).cast("int") - 1, lit(0)), lit(bins - 1)))
-    val ex = df.filter(y.isNotNull)
-      .select(explode(array(pairs: _*)).as("fv"), y.as("__y"))
-      .select(col("fv.fid").as("fid"), col("fv.v").as("v"), col("__y"))
-      .withColumn("__bin", binCol)
 
     // Aggregate by (fid, bin, y) — <= F x (bins+2) x |labels| tiny groups —
     // instead of a per-fid agg of 2*(bins+1) count(when(...)) expressions:
     // that wide form evaluated ~22 predicates per EXPLODED row inside the
-    // hash-agg update loop (the measured hot loop of every scoring batch).
-    // Every statistic the wide agg produced is reconstructed EXACTLY from
-    // the compact groups driver-side:
-    //  - bin/label counts: the group counts themselves;
-    //  - fingerprint: bit_xor is associative/commutative, so the per-group
-    //    xors xor-merge to the identical per-fid value;
-    //  - min/max: merged with Spark's NaN-greatest ordering (NaN in any
-    //    group max -> NaN; NaN never wins a min unless all values are NaN);
-    //  - missing: bin == `bins` iff v is null/NaN (finite values always land
-    //    in 0..bins-1), so miss = sum of those groups' counts.
-    // Only approx_count_distinct is not mergeable driver-side (HLL sketches
-    // stay in the engine), so it keeps its own per-fid aggregation job —
-    // same algorithm over the same multiset, partition-order-insensitive.
-    // the two aggregations are independent — submit them CONCURRENTLY
-    // (FitPool) so the reshape never costs sequential job latency on the
-    // many-small-batch callers (traversals, property gates)
-    val results = FitPool.all[Array[org.apache.spark.sql.Row]](df.sparkSession, "miscore")(
-      () => ex.groupBy(col("fid"), col("__bin"), col("__y"))
-        .agg(
-          count(lit(1)).as("n"),
-          call_function("bit_xor", xxhash64(round(v, 6))).as("fp"),
-          min(v).as("mn"),
-          max(v).as("mx"))
-        .collect(),
-      () => ex.groupBy(col("fid"))
-        .agg(approx_count_distinct(v).as("dist")).collect())
-    val grouped = results(0)
-    val distRows = results(1)
-    val distByFid = distRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val byFid = grouped.groupBy(_.getInt(0))
-    // a fid missing from the exploded groupBy means zero scored rows (empty
-    // fit scope / all-null labels) — the old single-row wide agg returned a
-    // row of zero counts; mirror that with a degenerate zero-stats result
-    val empty = FeatureStats(0.0, 0L, 0L, Double.NaN, Double.NaN, 0L)
+    // hash-agg update loop. The group counts are the bin/label counts, and
+    // bit_xor is associative, so the per-group xors merge to the per-fid
+    // fingerprint on the driver.
+    val grouped = df.filter(y.isNotNull)
+      .select(explode(array(pairs: _*)).as("fv"), y.as("__y"))
+      .select(col("fv.fid").as("fid"), col("fv.v").as("v"), col("__y"))
+      .withColumn("__bin", binCol)
+      .groupBy(col("fid"), col("__bin"), col("__y"))
+      .agg(count(lit(1)).as("n"), call_function("bit_xor", xxhash64(round(v, 6))).as("fp"))
+      .collect()
+    // a fid absent from the groups has no labelled row: MI 0, fingerprint 0
+    val byFid = grouped.groupBy(_.getInt(0)).withDefaultValue(Array.empty)
 
     feats.zipWithIndex.map { case ((n, _), i) =>
-      byFid.get(i) match {
-        case None => n -> empty
-        case Some(groups) =>
-          // groups: (fid, bin, y, n, fp, mn, mx); bin/y never null here
-          // (bin has the explicit null/NaN branch, y was filtered non-null)
-          val counts = (0 to bins).map { b =>
-            def cnt(yv: Int): Long = groups.iterator
-              .filter(g => g.getInt(1) == b && g.getInt(2) == yv)
-              .map(_.getLong(3)).sum
-            (cnt(0), cnt(1))
-          }
-          val total = counts.map(t => t._1 + t._2).sum.toDouble
-          val py1 = counts.map(_._2).sum / total
-          val py0 = 1.0 - py1
-          var mi = 0.0
-          counts.foreach { case (c0, c1) =>
-            val pb = (c0 + c1) / total
-            if (c0 > 0) { val p = c0 / total; mi += p * math.log(p / (pb * py0)) }
-            if (c1 > 0) { val p = c1 / total; mi += p * math.log(p / (pb * py1)) }
-          }
-          val hy = -Seq(py0, py1).filter(_ > 0).map(p => p * math.log(p)).sum
-          val fp = groups.iterator.map(g => if (g.isNullAt(4)) 0L else g.getLong(4))
-            .foldLeft(0L)(_ ^ _)
-          val mns = groups.iterator.filterNot(_.isNullAt(5)).map(_.getDouble(5)).toSeq
-          val mxs = groups.iterator.filterNot(_.isNullAt(6)).map(_.getDouble(6)).toSeq
-          val mnFinite = mns.filterNot(_.isNaN)
-          val mn =
-            if (mnFinite.nonEmpty) mnFinite.min
-            else if (mns.nonEmpty) Double.NaN else Double.NaN
-          val mx =
-            if (mxs.isEmpty) Double.NaN
-            else if (mxs.exists(_.isNaN)) Double.NaN else mxs.max
-          val miss = groups.iterator.filter(_.getInt(1) == bins).map(_.getLong(3)).sum
-          n -> FeatureStats(
-            mi = if (hy > 0) mi / hy else 0.0,
-            fingerprint = fp,
-            distinct = distByFid.getOrElse(i, 0L),
-            min = mn,
-            max = mx,
-            missing = miss)
+      // groups: (fid, bin, y, n, fp); bin/y never null here (bin has the
+      // explicit null/NaN branch, y was filtered non-null)
+      val groups = byFid(i)
+      val counts = (0 to bins).map { b =>
+        def cnt(yv: Int): Long = groups.iterator
+          .filter(g => g.getInt(1) == b && g.getInt(2) == yv)
+          .map(_.getLong(3)).sum
+        (cnt(0), cnt(1))
       }
+      val total = counts.map(t => t._1 + t._2).sum.toDouble
+      val py1 = counts.map(_._2).sum / total
+      val py0 = 1.0 - py1
+      var mi = 0.0
+      counts.foreach { case (c0, c1) =>
+        val pb = (c0 + c1) / total
+        if (c0 > 0) { val p = c0 / total; mi += p * math.log(p / (pb * py0)) }
+        if (c1 > 0) { val p = c1 / total; mi += p * math.log(p / (pb * py1)) }
+      }
+      val hy = -Seq(py0, py1).filter(_ > 0).map(p => p * math.log(p)).sum
+      val fp = groups.iterator.map(g => if (g.isNullAt(4)) 0L else g.getLong(4))
+        .foldLeft(0L)(_ ^ _)
+      n -> FeatureStats(prof(n), mi = if (hy > 0) mi / hy else 0.0, fingerprint = fp)
     }.toMap
   }
 }

@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.exprs._
-import graft.profile.Profiler
+import graft.profile.{ColumnProfile, Profiler}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -61,42 +61,22 @@ object Traversals {
       binaryOps: Seq[BinOp] = Seq(BinOp.Add, BinOp.Mul),
       bins: Int = 10): TraversalResult = {
     val raws: Seq[FeatureExpr] = rawNumeric.map(RawCol(_))
-    val profiles = collection.mutable.HashMap[String, graft.profile.ColumnProfile]()
-    profiles ++= Profiler.profile(df, rawNumeric.map(n => n -> col(n)))
+    val rawProfiles = Profiler.profile(df, rawNumeric.map(n => n -> col(n)))
+    val profiles = collection.mutable.HashMap[String, ColumnProfile]() ++= rawProfiles
     var fit = FitStats.empty
 
     def score(cands: Seq[FeatureExpr]): Map[String, Double] = {
       if (cands.isEmpty) return Map.empty
       fit = Fitter.fit(df, cands, known = fit, label = Some(label))
       val named = cands.map(e => Lower.alias(e) -> e)
-      val cols = named.map { case (n, e) => n -> Lower.toColumn(e, fit) }
-      val prof = Profiler.profileBatch(df, cols)
-      val lohi = prof.map { case (n, p) => n -> (p.min, p.max) }
-      val st = MIScorer.scoreBatch(df, cols, label, lohi, bins)
+      val st = MIScorer.scoreBatch(df, named.map { case (n, e) => n -> Lower.toColumn(e, fit) },
+        label, bins, named.collect { case (n, RawCol(c)) => n -> rawProfiles(c) }.toMap)
       named.map { case (n, e) => Canon.key(e) -> st(n).mi }.toMap
-    }
-
-    // Like Cdfc.profileOf: derive profiles for composed nodes analytically
-    // from their children so unary guards are NOT vacuously true on derived
-    // expressions (Log over a negative-domain composition must be pruned,
-    // not scored into NaN).
-    def profileOf(e: FeatureExpr): Option[graft.profile.ColumnProfile] = {
-      val k = Canon.key(e)
-      profiles.get(k).orElse {
-        val derived = e match {
-          case Unary(op, ch) => profileOf(ch).map(Applicability.derive(op, _))
-          case BinaryE(op, l, r) =>
-            for (lp <- profileOf(l); rp <- profileOf(r)) yield Applicability.derive(op, lp, rp)
-          case _ => None
-        }
-        derived.foreach(p => profiles(k) = p)
-        derived
-      }
     }
 
     def applicableUnary(op: UnaryOp, e: FeatureExpr): Boolean =
       // default to applicable only when no profile is derivable at all
-      profileOf(e).forall(p => Applicability.isApplicable(op, p))
+      Applicability.profileOf(e, profiles).forall(p => Applicability.isApplicable(op, p))
 
     val rootScores = score(raws)
     val frontier = collection.mutable.ArrayBuffer[Rep](

@@ -40,11 +40,10 @@ class CdfcSpec extends SparkSpec {
       (col("id") % 2).cast("double").as("perfect"),
       (pmod(xxhash64(col("id")), lit(1000)).cast("double") / 1000).as("noise"))
     val feats = Seq("perfect" -> col("perfect"), "noise" -> col("noise"))
-    val lohi = Map("perfect" -> (0.0, 1.0), "noise" -> (0.0, 1.0))
-    val st = MIScorer.scoreBatch(df, feats, col("y"), lohi)
+    val st = MIScorer.scoreBatch(df, feats, col("y"))
     assert(st("perfect").mi > 0.99)
     assert(st("noise").mi < 0.05)
-    assert(st("perfect").distinct == 2)
+    assert(st("perfect").profile.distinct == 2)
   }
 
   test("MI scorer fingerprint: identical value distributions collide, different do not") {
@@ -53,9 +52,8 @@ class CdfcSpec extends SparkSpec {
       col("id").cast("double").as("a"),
       col("id").cast("double").as("a2"),
       (col("id") + 1).cast("double").as("b"))
-    val lohi = Map("a" -> (0.0, 999.0), "a2" -> (0.0, 999.0), "b" -> (1.0, 1000.0))
     val st = MIScorer.scoreBatch(df,
-      Seq("a" -> col("a"), "a2" -> col("a2"), "b" -> col("b")), col("y"), lohi)
+      Seq("a" -> col("a"), "a2" -> col("a2"), "b" -> col("b")), col("y"))
     assert(st("a").fingerprint == st("a2").fingerprint)
     assert(st("a").fingerprint != st("b").fingerprint)
   }
