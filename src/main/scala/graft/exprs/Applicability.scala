@@ -21,7 +21,7 @@ object Applicability {
     case UnaryOp.MDLP => p.isNumeric && !p.hasMissing && p.distinct > 2
     case UnaryOp.DiscretizeEW(b) => p.isNumeric && p.distinct > b
     case UnaryOp.DiscretizeQ(b)  => p.isNumeric && p.distinct > b
-    case _: UnaryOp.Impute       => p.hasMissing // raw-only guard enforced by the search
+    case _: UnaryOp.Impute       => p.hasMissing // raw-only guard in `applicable`
     case UnaryOp.EqualsStr(_)    => !p.isNumeric
     case UnaryOp.Tan             => p.isNumeric
     case _                       => p.isNumeric
@@ -40,12 +40,31 @@ object Applicability {
     value.isNumeric && key.distinct > 1 &&
       (key.count == 0 || key.distinct * 2 <= key.count)
 
+  /** Whether candidate `e` may be built from its children: the op's guard on
+    * their profiles ([[profileOf]]), with Impute only over a raw column; a
+    * candidate whose child has no derivable profile is not applicable, and
+    * a leaf always is. The lattice, frontier and one-shot searches (`Cdfc`,
+    * `Traversals`, `ExploreKit`'s Div guard) all prune through this rule.
+    */
+  def applicable(e: FeatureExpr, known: collection.mutable.Map[String, ColumnProfile]): Boolean =
+    e match {
+      case Unary(op: UnaryOp.Impute, ch) => ch.isInstanceOf[RawCol] &&
+        profileOf(ch, known).exists(isApplicable(op, _))
+      case Unary(op, ch) => profileOf(ch, known).exists(isApplicable(op, _))
+      case BinaryE(op, l, r) =>
+        (for (lp <- profileOf(l, known); rp <- profileOf(r, known))
+          yield isApplicable(op, lp, rp)).getOrElse(false)
+      case GroupByThenE(_, v, k) =>
+        (for (vp <- profileOf(v, known); kp <- profileOf(k, known))
+          yield isApplicableGroupBy(vp, kp)).getOrElse(false)
+      case _ => true
+    }
+
   /** A candidate's profile: the one `known` holds under its canonical key,
     * else one derived analytically from its children's (and memoized into
-    * `known`); None when a leaf has no profile. The lattice and greedy
-    * searches (`Cdfc`, `Cognito`, `Traversals`) prune through this one
-    * derivation, so a guard on a composition reads the composition's
-    * derived domain, never a missing profile.
+    * `known`); None when a leaf has no profile. Every search prunes through
+    * this one derivation ([[applicable]]), so a guard on a composition reads
+    * the composition's derived domain, never a missing profile.
     */
   def profileOf(e: FeatureExpr, known: collection.mutable.Map[String, ColumnProfile])
       : Option[ColumnProfile] = {

@@ -10,8 +10,8 @@ import scala.jdk.CollectionConverters._
   * of the reference's `properties` dict (`RawFeature.py:74-92`,
   * `Transformation.py:47-65`): {missing, has_zero, min, max, distinct,
   * categorical}. Computed in ONE aggregation pass for all columns of a layer
-  * (the reference scans each column separately; one wide `agg` is the
-  * Spark-shaped equivalent — a single job regardless of column count).
+  * (the reference scans each column separately; [[Profiler.profile]]
+  * aggregates every column in one job regardless of column count).
   */
 final case class ColumnProfile(
     name: String,
@@ -28,97 +28,65 @@ final case class ColumnProfile(
 object Profiler {
 
   /** Profile `numericCols` (expressions given as (name -> Column)) plus
-    * `categoricalCols` in one pass. `distinct` uses approx_count_distinct —
-    * the reference uses exact nunique, but the only consumers are threshold
-    * guards (distinct <= bins, constant-column prune), where the approx
-    * sketch at default rsd is exact for small cardinalities.
+    * `categoricalCols` in one aggregation: the rows explode to one
+    * `(fid, v: double, s: string)` element per column and group by `fid`,
+    * so a 64-candidate batch is a few compact aggregates, not the F x 6
+    * expressions of a wide `agg` (which blow the codegen method limit and
+    * fall back to interpreted aggregation). A numeric column fills `v`, a
+    * categorical one `s`: its missing count is `s IS NULL`, its min and
+    * max are NaN and it never has a zero. `distinct` uses
+    * approx_count_distinct — the reference uses exact nunique, but the
+    * only consumers are threshold guards (distinct <= bins, constant-column
+    * prune), where the approx sketch at default rsd is exact for small
+    * cardinalities.
     */
   def profile(
       df: DataFrame,
       numericCols: Seq[(String, Column)],
       categoricalCols: Seq[(String, Column)] = Nil): Map[String, ColumnProfile] = {
-    if (numericCols.isEmpty && categoricalCols.isEmpty) return Map.empty
-    val aggs: Seq[Column] =
-      numericCols.flatMap { case (n, c) =>
-        val d = c.cast("double")
-        Seq(
-          count(lit(1)).as(s"${n}__cnt"),
-          count(when(d.isNull || isnan(d), 1)).as(s"${n}__miss"),
-          min(d).as(s"${n}__min"),
-          max(d).as(s"${n}__max"),
-          count(when(d === 0.0, 1)).as(s"${n}__zero"),
-          approx_count_distinct(d).as(s"${n}__dist"))
-      } ++
-      categoricalCols.flatMap { case (n, c) =>
-        Seq(
-          count(lit(1)).as(s"${n}__cnt"),
-          count(when(c.isNull, 1)).as(s"${n}__miss"),
-          approx_count_distinct(c).as(s"${n}__dist"))
-      }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    def g[T](f: String, dflt: T): T = {
-      val i = row.fieldIndex(f)
-      if (row.isNullAt(i)) dflt else row.get(i).asInstanceOf[T]
+    val cols = numericCols ++ categoricalCols
+    if (cols.isEmpty) return Map.empty
+    val nNum = numericCols.size
+    val elems = cols.zipWithIndex.map { case ((_, c), i) =>
+      val (num, str) =
+        if (i < nNum) (c.cast("double"), lit(null).cast("string"))
+        else (lit(null).cast("double"), c.cast("string"))
+      struct(lit(i).as("fid"), num.as("v"), str.as("s"))
     }
-    val nums = numericCols.map { case (n, _) =>
-      n -> ColumnProfile(n, isNumeric = true,
-        count = g(s"${n}__cnt", 0L), missing = g(s"${n}__miss", 0L),
-        min = g(s"${n}__min", Double.NaN), max = g(s"${n}__max", Double.NaN),
-        hasZero = g(s"${n}__zero", 0L) > 0, distinct = g(s"${n}__dist", 0L))
-    }
-    val cats = categoricalCols.map { case (n, _) =>
-      n -> ColumnProfile(n, isNumeric = false,
-        count = g(s"${n}__cnt", 0L), missing = g(s"${n}__miss", 0L),
-        min = Double.NaN, max = Double.NaN, hasZero = false,
-        distinct = g(s"${n}__dist", 0L))
-    }
-    (nums ++ cats).toMap
-  }
-
-  /** Explode-based numeric-only profile for wide candidate batches: same
-    * results as [[profile]], but the F x 6 wide-agg expressions (which blow
-    * the codegen method limit for a 64-candidate batch and fall back to
-    * interpreted aggregation) become 6 aggregates grouped by fid.
-    */
-  def profileBatch(
-      df: DataFrame,
-      numericCols: Seq[(String, Column)]): Map[String, ColumnProfile] = {
-    if (numericCols.isEmpty) return Map.empty
-    val pairs = numericCols.zipWithIndex.map { case ((_, c), i) =>
-      struct(lit(i).as("fid"), c.cast("double").as("v"))
-    }
-    val v = col("v")
-    val rows = df.select(explode(array(pairs: _*)).as("fv"))
-      .select(col("fv.fid").as("fid"), col("fv.v").as("v"))
+    val (v, s) = (col("v"), col("s"))
+    val rows = df.select(explode(array(elems: _*)).as("e"))
+      .select(col("e.fid").as("fid"), col("e.v").as("v"), col("e.s").as("s"))
       .groupBy(col("fid"))
       .agg(
         count(lit(1)).as("cnt"),
-        count(when(v.isNull || isnan(v), 1)).as("miss"),
+        count(when(when(col("fid") < nNum, v.isNull || isnan(v)).otherwise(s.isNull), 1))
+          .as("miss"),
         min(v).as("mn"),
         max(v).as("mx"),
         count(when(v === 0.0, 1)).as("zero"),
-        approx_count_distinct(v).as("dist"))
+        approx_count_distinct(v).as("dist_v"),
+        approx_count_distinct(s).as("dist_s"))
       .collect()
     val byFid = rows.map(r => r.getInt(r.fieldIndex("fid")) -> r).toMap
-    numericCols.zipWithIndex.map { case ((n, _), i) =>
-      byFid.get(i) match {
-        // fid absent = zero input rows (empty df): the wide-agg path would
-        // return one row of zero counts — mirror that, don't crash
+    cols.zipWithIndex.map { case ((n, _), i) =>
+      val isNumeric = i < nNum
+      n -> (byFid.get(i) match {
+        // fid absent = zero input rows (empty df): zero counts, unknown bounds
         case None =>
-          n -> ColumnProfile(n, isNumeric = true, count = 0L, missing = 0L,
+          ColumnProfile(n, isNumeric, count = 0L, missing = 0L,
             min = Double.NaN, max = Double.NaN, hasZero = false, distinct = 0L)
         case Some(r) =>
           def dbl(f: String): Double = {
             val ix = r.fieldIndex(f)
             if (r.isNullAt(ix)) Double.NaN else r.getDouble(ix)
           }
-          n -> ColumnProfile(n, isNumeric = true,
+          ColumnProfile(n, isNumeric,
             count = r.getLong(r.fieldIndex("cnt")),
             missing = r.getLong(r.fieldIndex("miss")),
             min = dbl("mn"), max = dbl("mx"),
             hasZero = r.getLong(r.fieldIndex("zero")) > 0,
-            distinct = r.getLong(r.fieldIndex("dist")))
-      }
+            distinct = r.getLong(r.fieldIndex(if (isNumeric) "dist_v" else "dist_s")))
+      })
     }.toMap
   }
 

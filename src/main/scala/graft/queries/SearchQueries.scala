@@ -23,10 +23,8 @@ object SearchQueries {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def searchBase(s: SparkSession, dir: String): DataFrame =
     snapCache.getOrElseUpdate((s, dir),
-      FeatureConstructor.snapshot(FeatureConstructor.baseFeatures(
-        Transcripts.fromEvents(Tables.events(s, dir))).select(
-        "conv_id", "turn_idx", "text_len", "gap_secs", "roll5_mean_len",
-        "run_mean_len", "turn_pos", "role", "prev_role", "label_next_tool")))
+      FeatureConstructor.snapshot(base(s, dir)
+        .select(FeatureConstructor.TranscriptsSearchColumns.map(col): _*)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Normalized binned MI of two fixed base features vs the label — the
@@ -48,8 +46,8 @@ object SearchQueries {
     "q_cdfc" -> ((s, dir) => {
       val base = searchBase(s, dir)
       val model = FeatureConstructor.fit(base,
-        rawNumeric = Seq("text_len", "gap_secs", "roll5_mean_len", "run_mean_len", "turn_pos"),
-        rawCategorical = Seq("role", "prev_role"),
+        rawNumeric = FeatureConstructor.TranscriptsNumeric,
+        rawCategorical = FeatureConstructor.TranscriptsCategorical,
         groupKeys = Seq("conv_id"),
         label = col("label_next_tool"),
         // gate-sized: full search semantics, trimmed width so the
@@ -75,7 +73,7 @@ object SearchQueries {
     "q_explorekit" -> ((s, dir) => {
       val base = searchBase(s, dir)
       val (top, fit) = ExploreKit.run(base,
-        rawNumeric = Seq("text_len", "gap_secs", "roll5_mean_len", "run_mean_len", "turn_pos"),
+        rawNumeric = FeatureConstructor.TranscriptsNumeric,
         groupKeys = Seq("conv_id"),
         label = col("label_next_tool"),
         k = 8,
@@ -154,10 +152,10 @@ object SearchQueries {
     }),
 
     // Alternative-traversal + evolutionary properties as a 1-row gate:
-    // Cognito's greedy path must improve monotonically over the transcripts
-    // base; the global best-first and harmonic-mean frontier traversals must
-    // find a planted multiplicative composition; the NSGA-II front must be
-    // non-empty and non-dominated.
+    // Cognito's greedy path (Traversals.PopRule.Greedy) must improve
+    // monotonically over the transcripts base; the global best-first and
+    // harmonic-mean frontier traversals must find a planted multiplicative
+    // composition; the NSGA-II front must be non-empty and non-dominated.
     "q_traversals" -> ((s, dir) => {
       import s.implicits._
       import graft.exprs._
@@ -176,11 +174,11 @@ object SearchQueries {
       // the 4 traversal probes are independent -> concurrent (FitPool)
       val Seq(cogOk, globalOk, harmonicOk, nsgaOk) = FitPool.all[Boolean](s, "travgate")(
         () => {
-          val path = Cognito.run(base,
+          val path = Traversals.run(base,
             Seq("text_len", "gap_secs", "roll5_mean_len", "turn_pos"),
-            col("label_next_tool"), maxDepth = 2)
+            col("label_next_tool"), Traversals.PopRule.Greedy, maxRuns = 2).popped
           path.nonEmpty &&
-            path.sliding(2).forall { case Seq(a, b) => b.mi > a.mi; case _ => true }
+            path.sliding(2).forall { case Seq(a, b) => b.score > a.score; case _ => true }
         },
         () => findsMul(Traversals.PopRule.BestScore, 3),
         () => findsMul(Traversals.PopRule.HarmonicMean, 5),

@@ -153,19 +153,6 @@ final class Cdfc(
     def enumerateLayer(cost: Int, oneHots: Seq[FeatureExpr]): Seq[FeatureExpr] =
       Cdfc.enumerate(cost, byComplexity, oneHots, groupKeys, cfg)
 
-    def applicable(e: FeatureExpr): Boolean = e match {
-      case Unary(op: UnaryOp.Impute, ch) => ch.isInstanceOf[RawCol] &&
-        profileOf(ch, profiles).exists(Applicability.isApplicable(op, _))
-      case Unary(op, ch) => profileOf(ch, profiles).exists(Applicability.isApplicable(op, _))
-      case BinaryE(op, l, r) =>
-        (for (lp <- profileOf(l, profiles); rp <- profileOf(r, profiles))
-          yield Applicability.isApplicable(op, lp, rp)).getOrElse(false)
-      case GroupByThenE(_, v, k) =>
-        (for (vp <- profileOf(v, profiles); kp <- profileOf(k, profiles))
-          yield Applicability.isApplicableGroupBy(vp, kp)).getOrElse(false)
-      case _ => true
-    }
-
     def parentsOf(e: FeatureExpr): Seq[FeatureExpr] = e match {
       case Unary(_, ch)          => Seq(ch)
       case BinaryE(_, l, r)      => Seq(l, r)
@@ -265,8 +252,7 @@ final class Cdfc(
           val st = stats(n)
           val k = Canon.key(e)
           seen += k
-          profiles(k) = st.profile.copy(name = k,
-            hasZero = st.profile.min <= 0 && st.profile.max >= 0)
+          profiles(k) = st.profile.copy(name = k)
           val isConstant = st.profile.distinct <= 1
           val isDup = fingerprints.contains(st.fingerprint)
           if (!isConstant && !isDup) {
@@ -379,7 +365,7 @@ final class Cdfc(
       val enumerated = enumerateLayer(layer, oneHots)
       val freshAll = enumerated.filter { e =>
         val k = Canon.key(e)
-        !Canon.isConstant(e) && !seen.contains(k) && applicable(e)
+        !Canon.isConstant(e) && !seen.contains(k) && Applicability.applicable(e, profiles)
       }.distinctBy(Canon.key)
       // width cap: never a silent enumeration-order truncation — overflow is
       // ordered deterministically by best-parent score (promising parents

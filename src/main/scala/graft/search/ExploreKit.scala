@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   *
   * Deviation: Div requires a no-zero denominator (the reference divides
   * blindly and carries inf/nan downstream; Spark would bin infinities and
-  * DuckDB nulls x/0, so the guard keeps results engine-portable — it is the
-  * same guard the CDFC search applies to OneDivision).
+  * DuckDB nulls x/0, so the guard keeps results engine-portable — it is
+  * [[Applicability.applicable]], the rule the CDFC search applies to
+  * OneDivision; a Fui denominator's derived profile has a zero).
   */
 object ExploreKit {
 
@@ -44,8 +45,7 @@ object ExploreKit {
       profiles: Map[String, ColumnProfile],
       cfg: EkConfig = EkConfig()): Seq[FeatureExpr] = {
     val fi: Seq[FeatureExpr] = rawNumeric.map(RawCol(_))
-    def hasZero(e: FeatureExpr): Boolean =
-      profiles.get(Canon.key(e)).forall(_.hasZero) // unknown -> assume zero
+    val known = collection.mutable.HashMap[String, ColumnProfile]() ++= profiles
     def unary(fs: Seq[FeatureExpr]): Seq[FeatureExpr] =
       for (f <- fs; op <- cfg.unaryOps) yield Unary(op, f)
     val fui = unary(fi)
@@ -62,8 +62,9 @@ object ExploreKit {
     val noncomm = (for {
       l <- base.iterator; r <- base.iterator if l != r
       op <- cfg.nonCommutativeOps.iterator
-      if op != BinOp.Div || !hasZero(r)
-    } yield BinaryE(op, l, r)).take(cap).toSeq
+      cand = BinaryE(op, l, r)
+      if op != BinOp.Div || Applicability.applicable(cand, known)
+    } yield cand).take(cap).toSeq
     val gbt = (for {
       v <- base.iterator; k <- groupKeys.iterator; agg <- cfg.groupByAggs.iterator
     } yield GroupByThenE(agg, v, RawCol(k))).take(cap).toSeq

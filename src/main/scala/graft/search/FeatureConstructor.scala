@@ -93,6 +93,15 @@ object FeatureConstructor {
     FeatureModel(passed, named, fit2, res)
   }
 
+  /** The raw numeric and categorical search inputs of the transcripts base
+    * ([[baseFeatures]]), and its narrow projection: keys, inputs, label.
+    */
+  val TranscriptsNumeric: Seq[String] =
+    Seq("text_len", "gap_secs", "roll5_mean_len", "run_mean_len", "turn_pos")
+  val TranscriptsCategorical: Seq[String] = Seq("role", "prev_role")
+  val TranscriptsSearchColumns: Seq[String] =
+    Seq("conv_id", "turn_idx") ++ TranscriptsNumeric ++ TranscriptsCategorical :+ "label_next_tool"
+
   /** The flagship transcripts pipeline: derive the per-turn numeric base
     * features (window core), then search for constructed features predicting
     * whether the NEXT turn is a tool call.
@@ -102,12 +111,10 @@ object FeatureConstructor {
     // base, and a one-time parquet snapshot beats both lineage replay
     // (window shuffle per job) and .persist() (measured ~5x slower than
     // replay here — columnar cache build/read dominates).
-    val base = snapshot(baseFeatures(transcripts).select(
-      "conv_id", "turn_idx", "text_len", "gap_secs", "roll5_mean_len",
-      "run_mean_len", "turn_pos", "role", "prev_role", "label_next_tool"))
+    val base = snapshot(baseFeatures(transcripts).select(TranscriptsSearchColumns.map(col): _*))
     val model = fit(base,
-      rawNumeric = Seq("text_len", "gap_secs", "roll5_mean_len", "run_mean_len", "turn_pos"),
-      rawCategorical = Seq("role", "prev_role"),
+      rawNumeric = TranscriptsNumeric,
+      rawCategorical = TranscriptsCategorical,
       groupKeys = Seq("conv_id"),
       label = col("label_next_tool"),
       cfg)

@@ -12,27 +12,19 @@ import org.apache.spark.sql.functions._
   * GroupByThen handling:
   *  - window-capable aggregates lower to `agg(v).over(partitionBy(key))`
   *    (one shuffle shared by every feature with the same key);
-  *  - Median (not window-capable) — and, when `preferJoin` is set, all
-  *    aggregates — materialize as `groupBy(key).agg(...)` + join-back.
-  *    The aggregate side is |distinct keys| rows: partial aggregation
-  *    happens map-side, the join is broadcast when small (AQE decides
-  *    otherwise), so for low-cardinality keys this avoids shuffling the
-  *    fact table entirely — strictly better than the window plan at scale.
+  *  - Median (not window-capable) materializes as `groupBy(key).agg(...)`
+  *    + join-back. The aggregate side is |distinct keys| rows: partial
+  *    aggregation happens map-side, and AQE broadcasts the join when the
+  *    aggregate side is small.
   */
 object LayerBuilder {
 
-  /** Select `keys` plus each feature column, handling join-back aggregates.
-    *
-    * @param preferJoin materialize ALL GroupByThen nodes via agg+join-back
-    *                   (best when keys are low-cardinality); Median always
-    *                   takes this path
-    */
+  /** Select `keys` plus each feature column, handling join-back aggregates. */
   def select(
       df: DataFrame,
       keys: Seq[String],
       feats: Seq[(String, FeatureExpr)],
       fit: FitStats = FitStats.empty,
-      preferJoin: Boolean = false,
       round6: Boolean = false): DataFrame = {
     var cur = df
     var trees: Seq[(String, FeatureExpr)] = feats.map { case (n, e) => n -> Canon.canon(e) }
@@ -50,7 +42,6 @@ object LayerBuilder {
 
     def needsJoin(e: FeatureExpr): Boolean = e match {
       case GroupByThenE(AggKind.Median, _, _) => true
-      case GroupByThenE(_, _, _)              => preferJoin
       case _                                  => false
     }
     def collectJoinNodes(e: FeatureExpr): Seq[GroupByThenE] = {

@@ -34,7 +34,7 @@ object MIScorer {
     *                 from the MI counts and the fingerprint)
     * @param profiles profiles the caller already holds, keyed by feature
     *                 name; every other feature is profiled here, all in one
-    *                 [[Profiler.profileBatch]] call
+    *                 [[Profiler.profile]] call
     */
   def scoreBatch(
       df: DataFrame,
@@ -43,7 +43,7 @@ object MIScorer {
       bins: Int = 10,
       profiles: Map[String, ColumnProfile] = Map.empty): Map[String, FeatureStats] = {
     if (feats.isEmpty) return Map.empty
-    val prof = profiles ++ Profiler.profileBatch(df, feats.filterNot(f => profiles.contains(f._1)))
+    val prof = profiles ++ Profiler.profile(df, feats.filterNot(f => profiles.contains(f._1)))
     val y = label.cast("int")
 
     // Explode the batch to (fid, v, y) rows and aggregate per fid — a wide

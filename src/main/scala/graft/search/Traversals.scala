@@ -5,16 +5,19 @@ import graft.profile.{ColumnProfile, Profiler}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Global best-first traversals — the reference's remaining traversal
-  * family (`feature_selection/GlobalTraversalCognito.py:423-507`,
-  * `HarmonicMeanTraversal.py:240-274,395-470`): instead of the greedy
-  * single-path descent ([[Cognito]]), a FRONTIER of every evaluated-but-
-  * unexpanded representation is kept, and each round pops one node, expands
-  * it (unary ops of the node + binary combinations with the raw features,
-  * canonical-dedup'd), scores the children in one batched job, and pushes
-  * them back onto the frontier.
+/** The reference's traversal family beside the CDFC lattice: each round
+  * pops one node off a frontier of evaluated-but-unexpanded
+  * representations, expands it (unary ops of the node + binary combinations
+  * with the raw features, canonical-dedup'd, pruned by
+  * [[Applicability.applicable]]), scores the children in one batched job,
+  * and pushes them onto the frontier.
   *
-  * The two reference variants differ only in the pop rule:
+  * The three reference traversals differ only in the pop rule:
+  *  - [[PopRule.Greedy]]: Cognito's depth-first descent
+  *    (`candidate_generation/TreeGenerator.py:23-258`,
+  *    `feature_selection/DepthFirstCognito.py`) — the frontier is only the
+  *    last expansion's children; pop the best child, and stop when it does
+  *    not beat the best popped so far;
   *  - [[PopRule.BestScore]]: pop the frontier's max raw score
   *    (`GlobalTraversalCognito.py:430-436`);
   *  - [[PopRule.HarmonicMean]]: pop the max harmonic mean of two rank-based
@@ -23,13 +26,14 @@ import org.apache.spark.sql.functions._
   *    accuracy/simplicity trade-off schedule.
   *
   * Scoring is the engine's batched MI gain oracle (one explode-agg job per
-  * expansion, like [[Cognito]]/CDFC); the driver loop holds only expression
-  * names and scores.
+  * expansion, like CDFC); the driver loop holds only expression names and
+  * scores.
   */
 object Traversals {
 
   sealed trait PopRule
   object PopRule {
+    case object Greedy extends PopRule
     case object BestScore extends PopRule
     case object HarmonicMean extends PopRule
   }
@@ -51,6 +55,10 @@ object Traversals {
   def hScore(current: Rep, allSeen: Seq[Rep]): Double =
     harmonicMean(simplicityScore(current, allSeen), accuracyScore(current, allSeen))
 
+  /** @param maxRuns expansions: under `Greedy`, the depth of the path, whose
+    *                last node (the best child of the last expansion, when it
+    *                improves) is popped but not expanded
+    */
   def run(
       df: DataFrame,
       rawNumeric: Seq[String],
@@ -65,57 +73,66 @@ object Traversals {
     val profiles = collection.mutable.HashMap[String, ColumnProfile]() ++= rawProfiles
     var fit = FitStats.empty
 
-    def score(cands: Seq[FeatureExpr]): Map[String, Double] = {
-      if (cands.isEmpty) return Map.empty
+    def score(cands: Seq[FeatureExpr]): Seq[Rep] = {
+      if (cands.isEmpty) return Seq.empty
       fit = Fitter.fit(df, cands, known = fit, label = Some(label))
       val named = cands.map(e => Lower.alias(e) -> e)
       val st = MIScorer.scoreBatch(df, named.map { case (n, e) => n -> Lower.toColumn(e, fit) },
         label, bins, named.collect { case (n, RawCol(c)) => n -> rawProfiles(c) }.toMap)
-      named.map { case (n, e) => Canon.key(e) -> st(n).mi }.toMap
+      named.map { case (n, e) => Rep(e, st(n).mi, e.complexity) }
     }
 
-    def applicableUnary(op: UnaryOp, e: FeatureExpr): Boolean =
-      // default to applicable only when no profile is derivable at all
-      Applicability.profileOf(e, profiles).forall(p => Applicability.isApplicable(op, p))
-
-    val rootScores = score(raws)
-    val frontier = collection.mutable.ArrayBuffer[Rep](
-      raws.map(e => Rep(e, rootScores(Canon.key(e)), e.complexity)): _*)
+    val frontier = collection.mutable.ArrayBuffer[Rep](score(raws): _*)
     val allSeen = collection.mutable.ArrayBuffer[Rep](frontier.toSeq: _*)
     val seenKeys = collection.mutable.HashSet(raws.map(Canon.key): _*)
     val popped = collection.mutable.ArrayBuffer[Rep]()
-    var best = frontier.maxBy(r => (r.score, Canon.key(r.expr)))
+    // deterministic tie-break on the canonical key (the reference's
+    // first-index argmax is list-order-dependent)
+    val byScore = (r: Rep) => (r.score, Canon.key(r.expr))
+    var best = frontier.maxBy(byScore)
 
-    var runs = 0
-    while (runs < maxRuns && frontier.nonEmpty) {
-      val pick = rule match {
-        case PopRule.BestScore =>
-          // deterministic tie-break on the canonical key (the reference's
-          // first-index argmax is list-order-dependent)
-          frontier.maxBy(r => (r.score, Canon.key(r.expr)))
+    /** The rule's next node off the frontier; None stops the traversal. */
+    def next(): Option[Rep] =
+      if (frontier.isEmpty) None
+      else rule match {
+        case PopRule.Greedy =>
+          Some(frontier.maxBy(byScore)).filter(r => popped.isEmpty || r.score > best.score)
+        case PopRule.BestScore => Some(frontier.maxBy(byScore))
         case PopRule.HarmonicMean =>
           val snapshot = allSeen.toSeq
-          frontier.maxBy(r => (hScore(r, snapshot), Canon.key(r.expr)))
+          Some(frontier.maxBy(r => (hScore(r, snapshot), Canon.key(r.expr))))
       }
-      frontier -= pick
-      popped += pick
-      if (pick.score > best.score) best = pick
+    def pop(r: Rep): Unit = {
+      frontier -= r
+      popped += r
+      if (r.score > best.score) best = r
+    }
 
+    var runs = 0
+    var pick = next()
+    while (runs < maxRuns && pick.nonEmpty) {
+      val p = pick.get
+      pop(p)
       val children = (
-        unaryOps.filter(applicableUnary(_, pick.expr)).map(op => Unary(op, pick.expr)) ++
-          (for (r <- raws; op <- binaryOps) yield BinaryE(op, pick.expr, r)) ++
-          (for (r <- raws; op <- binaryOps if !op.commutative) yield BinaryE(op, r, pick.expr))
-        ).map(Canon.canon)
+        unaryOps.map(op => Unary(op, p.expr)) ++
+          (for (r <- raws; op <- binaryOps) yield BinaryE(op, p.expr, r)) ++
+          (for (r <- raws; op <- binaryOps if !op.commutative) yield BinaryE(op, r, p.expr))
+        ).filter(Applicability.applicable(_, profiles))
+        .map(Canon.canon)
         .filterNot(Canon.isConstant)
         .distinctBy(Canon.key)
         .filterNot(e => seenKeys.contains(Canon.key(e)))
       seenKeys ++= children.map(Canon.key)
-      val scores = score(children)
-      val childReps = children.map(e => Rep(e, scores(Canon.key(e)), e.complexity))
+      val childReps = score(children)
+      if (rule == PopRule.Greedy) frontier.clear()
       frontier ++= childReps
       allSeen ++= childReps
       runs += 1
+      pick = next()
     }
+    // the greedy path ends on the last expansion's improving best child
+    // (Cognito's depth limit stops the descent after it is taken)
+    if (rule == PopRule.Greedy) pick.foreach(pop)
     TraversalResult(best, popped.toSeq, allSeen.toSeq)
   }
 }

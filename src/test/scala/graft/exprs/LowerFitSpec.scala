@@ -64,13 +64,16 @@ class LowerFitSpec extends SparkSpec {
     assert(got(3L) == 8.0)                    // median(6,8,10)
   }
 
-  test("GroupByThen window aggs match join-back aggs (preferJoin parity)") {
+  test("GroupByThen window aggs match a groupBy + join-back reference") {
     val feats = Seq(
       "mean" -> GroupByThenE(AggKind.Mean, RawCol("v"), RawCol("g")),
       "std"  -> GroupByThenE(AggKind.Std, RawCol("v"), RawCol("g")),
       "cnt"  -> GroupByThenE(AggKind.Count, RawCol("v"), RawCol("g")))
     val w = LayerBuilder.select(df, Seq("id"), feats).orderBy("id").collect().map(_.toSeq)
-    val j = LayerBuilder.select(df, Seq("id"), feats, preferJoin = true).orderBy("id").collect().map(_.toSeq)
+    val aggs = df.groupBy("g").agg(avg("v").as("mean"), stddev_pop("v").as("std"),
+      count("v").cast("double").as("cnt"))
+    val j = df.join(aggs, Seq("g"), "left").select("id", "mean", "std", "cnt")
+      .orderBy("id").collect().map(_.toSeq)
     assert(w.toSeq == j.toSeq)
   }
 

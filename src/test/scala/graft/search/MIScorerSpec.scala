@@ -29,7 +29,7 @@ class MIScorerSpec extends SparkSpec {
 
   test("profile covers every row; MI and fingerprint cover the labelled rows") {
     val st = MIScorer.scoreBatch(scoped, feats, col("y"))
-    val all = Profiler.profileBatch(scoped, feats)
+    val all = Profiler.profile(scoped, feats)
     feats.foreach { case (n, _) => assert(bits(st(n).profile) == bits(all(n)), n) }
     // the bin bounds are the all-rows profile's, so the labelled-only run
     // gets the same profiles and must give the same counts
@@ -44,13 +44,13 @@ class MIScorerSpec extends SparkSpec {
   }
 
   test("with every profile supplied, a batch runs one grouped aggregation's jobs") {
-    val prof = Profiler.profileBatch(scoped, feats)
+    val prof = Profiler.profile(scoped, feats)
     val oneAgg = jobsDuring {
       scoped.groupBy(col("y"), col("c")).agg(count(lit(1))).collect(); ()
     }
     val supplied = jobsDuring { MIScorer.scoreBatch(scoped, feats, col("y"), profiles = prof); () }
     assert(supplied == oneAgg, s"$supplied jobs vs $oneAgg for one grouped aggregation")
-    val profiling = jobsDuring { Profiler.profileBatch(scoped, feats); () }
+    val profiling = jobsDuring { Profiler.profile(scoped, feats); () }
     val unsupplied = jobsDuring { MIScorer.scoreBatch(scoped, feats, col("y")); () }
     assert(unsupplied == profiling + oneAgg,
       s"$unsupplied jobs vs $profiling for one profile pass + $oneAgg")

@@ -1,14 +1,11 @@
 package graft.search
 
 import graft.SparkSpec
-import graft.exprs.{Applicability, BinOp, BinaryE, Canon, RawCol, Unary}
-import graft.profile.{ColumnProfile, Profiler}
 import org.apache.spark.sql.functions._
 
 /** Planted-signal checks for the selector/baseline residue (SURVEY §2.5
   * rows: RFE, Boruta, ReliefF, SISSO, SMOTE, CNN instance selection,
-  * NSGA-II, Cognito traversal). Data is fully deterministic (hash/trig
-  * pseudo-noise, no RNG).
+  * NSGA-II). Data is fully deterministic (hash/trig pseudo-noise, no RNG).
   */
 class SelectorsSpec extends SparkSpec {
   import spark.implicits._
@@ -121,41 +118,6 @@ class SelectorsSpec extends SparkSpec {
         seed = seed, initPop = all)
         .filter(_.mask.exists(identity)).map(_.mask).toSet
       assert(got == brute, s"seed $seed: $got vs $brute")
-    }
-  }
-
-  // label depends on the PRODUCT x1*x2 — a composed feature beats any raw
-  private def productFixture = (0 until 1000).map { i =>
-    val x1 = (i % 25).toDouble - 12
-    val x2 = ((i * 7) % 25).toDouble - 12
-    val y = if (x1 * x2 > 0) 1.0 else 0.0
-    (i.toLong, x1, x2, y)
-  }.toDF("id", "x1", "x2", "y")
-
-  test("Cognito traversal descends a strictly improving path to a composition") {
-    val path = Cognito.run(productFixture, Seq("x1", "x2"), col("y"), maxDepth = 3)
-    assert(path.size >= 2, s"should improve past the raw root: $path")
-    assert(path.sliding(2).forall { case Seq(a, b) => b.mi > a.mi; case _ => true })
-    assert(path.last.mi > path.head.mi + 0.1,
-      s"composition should add real MI: ${path.map(_.mi)}")
-  }
-
-  test("Cognito guards a composed champion's unary children by its derived profile") {
-    // the champion x1*x2 has a negative derived min, so log/sqrt of it are
-    // not applicable; Spark's log gives null for x <= 0, and that null
-    // would carry the label (y = 1 iff x1*x2 > 0) into the missing bin
-    val df = productFixture
-    val path = Cognito.run(df, Seq("x1", "x2"), col("y"), maxDepth = 3)
-    val known = collection.mutable.HashMap[String, ColumnProfile]() ++=
-      Profiler.profile(df, Seq("x1", "x2").map(n => n -> col(n)))
-    val prod = BinaryE(BinOp.Mul, RawCol("x1"), RawCol("x2"))
-    assert(path.exists(s => Canon.key(s.expr) == Canon.key(prod)), path.toString)
-    assert(Applicability.profileOf(prod, known).exists(_.min < 0))
-    path.map(_.expr).foreach {
-      case e @ Unary(op, ch) =>
-        assert(Applicability.profileOf(ch, known).exists(Applicability.isApplicable(op, _)),
-          s"$e was scored outside its domain: path $path")
-      case _ =>
     }
   }
 }
