@@ -3,6 +3,7 @@ package graft.checkpoint
 import graft.exprs.FitStats
 import graft.profile.ColumnProfile
 import graft.search.LayerLog
+import org.apache.spark.GraftBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.JsonDSL._
@@ -108,9 +109,7 @@ object Checkpoint {
     * partition of the executed plan — the values `groupBy(
     * spark_partition_id()).count()` gives, without its exchange. */
   def partitionRows(df: DataFrame): Seq[(Int, Long)] =
-    df.queryExecution.toRdd
-      .mapPartitionsWithIndex((i, rows) => Iterator(i -> rows.size.toLong))
-      .collect().toSeq.filter(_._2 > 0)
+    GraftBridge.foldPartitions(df)((i, rows) => i -> rows.size.toLong).toSeq.filter(_._2 > 0)
 
   // ---- manifest documents ---------------------------------------------
 

@@ -1,7 +1,12 @@
 package graft.profile
 
+import org.apache.spark.GraftBridge
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
@@ -9,9 +14,9 @@ import scala.jdk.CollectionConverters._
 /** Data-derived column properties driving applicability pruning — the analog
   * of the reference's `properties` dict (`RawFeature.py:74-92`,
   * `Transformation.py:47-65`): {missing, has_zero, min, max, distinct,
-  * categorical}. Computed in ONE aggregation pass for all columns of a layer
-  * (the reference scans each column separately; [[Profiler.profile]]
-  * aggregates every column in one job regardless of column count).
+  * categorical}. Computed in ONE row pass for all columns of a layer (the
+  * reference scans each column separately; [[Profiler.profile]] profiles
+  * every column in one job regardless of column count).
   */
 final case class ColumnProfile(
     name: String,
@@ -28,16 +33,18 @@ final case class ColumnProfile(
 object Profiler {
 
   /** Profile `numericCols` (expressions given as (name -> Column)) plus
-    * `categoricalCols` in one aggregation: the rows explode to one
-    * `(fid, v: double, s: string)` element per column and group by `fid`,
-    * so a 64-candidate batch is a few compact aggregates, not the F x 6
-    * expressions of a wide `agg` (which blow the codegen method limit and
-    * fall back to interpreted aggregation). A numeric column fills `v`, a
-    * categorical one `s`: its missing count is `s IS NULL`, its min and
-    * max are NaN and it never has a zero. `distinct` uses
-    * approx_count_distinct — the reference uses exact nunique, but the
-    * only consumers are threshold guards (distinct <= bins, constant-column
-    * prune), where the approx sketch at default rsd is exact for small
+    * `categoricalCols` in one shuffle-free row pass
+    * ([[org.apache.spark.GraftBridge.foldPartitions]]): each partition folds
+    * plain per-column accumulators, merged on the driver in partition
+    * order, so a 64-candidate batch is one job with no aggregate to plan or
+    * compile. A numeric column is read as a double, a categorical one as a
+    * string: its missing count is `IS NULL`, its min and max are NaN and it
+    * never has a zero. Min and max follow Spark's `min`/`max` (NaN is the
+    * greatest value, -0.0 equals 0.0 and the first one seen is kept).
+    * `distinct` is Spark's HyperLogLog++ sketch at `approx_count_distinct`'s
+    * default rsd, the same value that aggregate gives — the reference uses
+    * exact nunique, but the only consumers are threshold guards (distinct
+    * <= bins, constant-column prune), where the sketch is exact for small
     * cardinalities.
     */
   def profile(
@@ -47,47 +54,75 @@ object Profiler {
     val cols = numericCols ++ categoricalCols
     if (cols.isEmpty) return Map.empty
     val nNum = numericCols.size
-    val elems = cols.zipWithIndex.map { case ((_, c), i) =>
-      val (num, str) =
-        if (i < nNum) (c.cast("double"), lit(null).cast("string"))
-        else (lit(null).cast("double"), c.cast("string"))
-      struct(lit(i).as("fid"), num.as("v"), str.as("s"))
-    }
-    val (v, s) = (col("v"), col("s"))
-    val rows = df.select(explode(array(elems: _*)).as("e"))
-      .select(col("e.fid").as("fid"), col("e.v").as("v"), col("e.s").as("s"))
-      .groupBy(col("fid"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        count(when(when(col("fid") < nNum, v.isNull || isnan(v)).otherwise(s.isNull), 1))
-          .as("miss"),
-        min(v).as("mn"),
-        max(v).as("mx"),
-        count(when(v === 0.0, 1)).as("zero"),
-        approx_count_distinct(v).as("dist_v"),
-        approx_count_distinct(s).as("dist_s"))
-      .collect()
-    val byFid = rows.map(r => r.getInt(r.fieldIndex("fid")) -> r).toMap
+    val rows = df.select(cols.zipWithIndex.map { case ((_, c), i) =>
+      if (i < nNum) c.cast("double") else c.cast("string")
+    }: _*)
+    val types = rows.schema.fields.map(_.dataType)
+    val acc = GraftBridge.foldPartitions(rows) { (_, it) =>
+      val a = new ProfileAcc(types, nNum)
+      it.foreach(a.add)
+      a
+    }.foldLeft(new ProfileAcc(types, nNum))(_ merge _)
     cols.zipWithIndex.map { case ((n, _), i) =>
-      val isNumeric = i < nNum
-      n -> (byFid.get(i) match {
-        // fid absent = zero input rows (empty df): zero counts, unknown bounds
-        case None =>
-          ColumnProfile(n, isNumeric, count = 0L, missing = 0L,
-            min = Double.NaN, max = Double.NaN, hasZero = false, distinct = 0L)
-        case Some(r) =>
-          def dbl(f: String): Double = {
-            val ix = r.fieldIndex(f)
-            if (r.isNullAt(ix)) Double.NaN else r.getDouble(ix)
-          }
-          ColumnProfile(n, isNumeric,
-            count = r.getLong(r.fieldIndex("cnt")),
-            missing = r.getLong(r.fieldIndex("miss")),
-            min = dbl("mn"), max = dbl("mx"),
-            hasZero = r.getLong(r.fieldIndex("zero")) > 0,
-            distinct = r.getLong(r.fieldIndex(if (isNumeric) "dist_v" else "dist_s")))
-      })
+      n -> ColumnProfile(n, isNumeric = i < nNum, count = acc.rows, missing = acc.missing(i),
+        min = if (acc.seen(i)) acc.min(i) else Double.NaN,
+        max = if (acc.seen(i)) acc.max(i) else Double.NaN,
+        hasZero = acc.zeros(i) > 0, distinct = acc.distinct(i))
     }.toMap
+  }
+
+  /** The relative error of `approx_count_distinct`'s default sketch. */
+  private val DistinctRsd = 0.05
+
+  /** One partition's profile counters over the projected columns (`types`,
+    * numeric ones first): counts, Spark-ordered min/max, zero counts and one
+    * HyperLogLog++ register block per column. */
+  private final class ProfileAcc(types: Array[DataType], nNum: Int) extends Serializable {
+    private val n = types.length
+    private val hll = new HyperLogLogPlusPlusHelper(DistinctRsd)
+    private val words = hll.numWords
+    private val sketch = new SpecificInternalRow(Seq.fill(n * words)(LongType))
+    var rows = 0L
+    val missing, zeros = new Array[Long](n)
+    val min, max = new Array[Double](n)
+    val seen = new Array[Boolean](n)
+    (0 until n * words).foreach(sketch.setLong(_, 0L))
+
+    private def offer(i: Int, v: Double): Unit = {
+      if (!seen(i) || compareDoubles(v, min(i)) < 0) min(i) = v
+      if (!seen(i) || compareDoubles(v, max(i)) > 0) max(i) = v
+      seen(i) = true
+    }
+
+    def add(r: InternalRow): Unit = {
+      rows += 1
+      var i = 0
+      while (i < n) {
+        if (r.isNullAt(i)) missing(i) += 1
+        else if (i < nNum) {
+          val v = r.getDouble(i)
+          if (v.isNaN) missing(i) += 1
+          if (v == 0.0) zeros(i) += 1
+          offer(i, v)
+          hll.update(sketch, i * words, v, types(i))
+        } else hll.update(sketch, i * words, r.getUTF8String(i), types(i))
+        i += 1
+      }
+    }
+
+    /** Folds `o`, a later partition, into this one. */
+    def merge(o: ProfileAcc): ProfileAcc = {
+      rows += o.rows
+      (0 until n).foreach { i =>
+        missing(i) += o.missing(i)
+        zeros(i) += o.zeros(i)
+        if (o.seen(i)) { offer(i, o.min(i)); offer(i, o.max(i)) }
+        hll.merge(sketch, o.sketch, i * words, i * words)
+      }
+      this
+    }
+
+    def distinct(i: Int): Long = hll.query(sketch, i * words)
   }
 
   /** Distinct values of each categorical column on the fit scope, in Spark's
@@ -101,14 +136,13 @@ object Profiler {
   def distinctValues(df: DataFrame, cols: Seq[Column], limit: Int = 100): Seq[Seq[String]] = {
     if (cols.isEmpty) return Seq.empty
     val n = cols.size
-    val perPartition = df.select(cols.map(_.cast("string")): _*).queryExecution.toRdd
-      .mapPartitions { rows =>
+    val perPartition = GraftBridge.foldPartitions(df.select(cols.map(_.cast("string")): _*)) {
+      (_, rows) =>
         val sets = Array.fill(n)(new java.util.TreeSet[UTF8String]())
         rows.foreach(r => (0 until n).foreach(i =>
           if (!r.isNullAt(i)) offerSmallest(sets(i), r.getUTF8String(i), limit + 1)))
-        Iterator(sets)
-      }
-      .collect()
+        sets
+    }
     (0 until n).map { i =>
       val merged = new java.util.TreeSet[UTF8String]()
       perPartition.foreach(_(i).forEach(v => offerSmallest(merged, v, limit + 1)))

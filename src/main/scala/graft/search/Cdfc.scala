@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * [p, c-1-p] (`:163-170`), GroupByThen over (value, key) pairs. Each
   * candidate is canonicalized ([[Canon]]) and deduped against the seen-set
   * (`:142-160`), pruned by property applicability ([[Applicability]]),
-  * then the surviving layer is scored in O(few) aggregation jobs
+  * then the surviving layer is scored in two shuffle-free row passes
   * ([[MIScorer]]): runtime constant prune + value-fingerprint dedup
   * (`run_evaluation.py:287-298`) + gain scoring. The epsilon gate passes a
   * candidate iff it is raw/one-hot or its gain per added complexity exceeds
@@ -31,15 +31,16 @@ import org.apache.spark.sql.functions._
   * the Spark-shaped concession: the reference fits LR for every candidate,
   * which at lattice width is strictly dominated by prefilter + top-K exact.
   *
-  * Scale shape: per layer, one profile and one MI-score aggregation over
-  * one wide select of all candidates, then one batched LR re-score, plus
-  * the fit jobs of the layer's fitted ops. Layer 1 scores from the
-  * raw-column profile pass and reads every categorical's one-hot values in
-  * one more job; a checkpointed run counts its input lineage once; a layer
-  * commit runs no job. Measured on the `search_lr` benchmark (cMax 2, AQE
-  * on, traced seeds 7 and 108): 30 jobs per search — layer 1: profile 2,
-  * one-hot values 1, MI 2, LR 6, lineage 1; layer 2: fits 8, profile 2,
-  * MI 2, LR 6 (each aggregation is a shuffle-map job plus a result job).
+  * Scale shape: per layer, one profile pass and one MI-score pass over
+  * one wide select of all candidates (each a shuffle-free row pass: one
+  * job, no exchange), then one batched LR re-score, plus the fit jobs of
+  * the layer's fitted ops. Layer 1 scores from the raw-column profile pass
+  * and reads every categorical's one-hot values in one more job; a
+  * checkpointed run counts its input lineage once; a layer commit runs no
+  * job. Measured on the `search_lr` benchmark (cMax 2, AQE on, traced
+  * seeds 7 and 108): 26 jobs per search — layer 1: profile 1, one-hot
+  * values 1, MI 1, LR 6, lineage 1; layer 2: fits 8, profile 1, MI 1,
+  * LR 6.
   * No candidate column is ever collected; the only shuffles are the
   * windows of GroupByThen candidates (all candidates with the same key
   * share one exchange).

@@ -1,14 +1,19 @@
 package graft.search
 
 import graft.profile.{ColumnProfile, Profiler}
+import org.apache.spark.GraftBridge
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 
 /** Candidate gain oracle: mutual information between the equi-width-binned
   * feature and the (binary) label, computed for a whole batch of candidates
-  * in ONE aggregation: counts are map-side partial aggregates, so no data
-  * row ever shuffles (the exchange moves F x (bins+1) x 2 counters per
-  * partition, independent of table size).
+  * in ONE shuffle-free row pass
+  * ([[org.apache.spark.GraftBridge.foldPartitions]]): each partition counts
+  * its rows by (feature, bin, label) into a plain F x (bins+1) x 2 array,
+  * merged on the driver. No row shuffles and no aggregate is planned or
+  * compiled per batch; the bin is computed in the row loop from the
+  * profile bounds, so no per-batch literal enters generated code.
   *
   * This is the cheap closed-form stand-in for the reference's per-candidate
   * CV grid-search LR scoring (`run_evaluation.py:142-243`) used to prune;
@@ -16,9 +21,11 @@ import org.apache.spark.sql.functions._
   * (`fairexp.py:117-126`, `mutual_info_classif`). Scores are in nats,
   * normalized by H(y) so the gate threshold is scale-free.
   *
-  * The same aggregation also returns each candidate's value fingerprint
-  * (order-insensitive xor of xxhash64 of the rounded value), for the
-  * value-equality dedup (`run_evaluation.py:292-298`). Missing, min, max
+  * The same pass also returns each candidate's value fingerprint, the
+  * wrapping Long sum of xxhash64 of the rounded value over the labelled
+  * rows, for the value-equality dedup (`run_evaluation.py:292-298`). A sum
+  * is order-free like an xor, but a value that occurs an even number of
+  * times does not cancel out of it. Missing, min, max
   * and distinct come from the candidate's [[ColumnProfile]], the one
   * profile pass that also sets the bin bounds; it feeds the runtime
   * constant prune (`:287-290`).
@@ -45,58 +52,46 @@ object MIScorer {
     if (feats.isEmpty) return Map.empty
     val prof = profiles ++ Profiler.profile(df, feats.filterNot(f => profiles.contains(f._1)))
     val y = label.cast("int")
-
-    // Explode the batch to (fid, v, y) rows and aggregate per fid — a wide
-    // agg with F x (2*bins+7) aggregate expressions (~1700 for a 64-batch)
-    // blows the codegen method limit and falls back to interpreted Janino
-    // (measured ~9s/batch at sf0.1); the exploded groupBy keeps a few
-    // compact aggregates, map-side partial on |F| keys (~3x faster).
-    val pairs = feats.zipWithIndex.map { case ((_, c), i) =>
-      struct(lit(i).as("fid"), c.cast("double").as("v"))
-    }
-    val loArr = typedLit(feats.map { case (n, _) => prof(n).min })
-    val wArr = typedLit(feats.map { case (n, _) =>
+    val nF = feats.size
+    val bounds = feats.map { case (n, _) =>
       val p = prof(n)
-      if (p.max > p.min) (p.max - p.min) / bins else 1.0
-    })
-    val hiArr = typedLit(feats.map { case (n, _) => prof(n).max })
-    val v = col("v")
-    // right-closed equi-width bin in [0, bins-1]; null/NaN -> bin `bins`.
-    // The <=lo / >=hi short-circuits equal the ceil formula for finite
-    // values AND absorb +-Infinity (whose ceil->int cast throws under ANSI;
-    // infs arise from unguarded Div/Inv candidates in one-shot generators).
-    val binCol = when(v.isNull || isnan(v), lit(bins))
-      .when(v <= element_at(loArr, col("fid") + 1), lit(0))
-      .when(v >= element_at(hiArr, col("fid") + 1), lit(bins - 1))
-      .otherwise(
-        least(greatest(ceil((v - element_at(loArr, col("fid") + 1))
-          / element_at(wArr, col("fid") + 1)).cast("int") - 1, lit(0)), lit(bins - 1)))
-
-    // Aggregate by (fid, bin, y) — <= F x (bins+2) x |labels| tiny groups —
-    // instead of a per-fid agg of 2*(bins+1) count(when(...)) expressions:
-    // that wide form evaluated ~22 predicates per EXPLODED row inside the
-    // hash-agg update loop. The group counts are the bin/label counts, and
-    // bit_xor is associative, so the per-group xors merge to the per-fid
-    // fingerprint on the driver.
-    val grouped = df.filter(y.isNotNull)
-      .select(explode(array(pairs: _*)).as("fv"), y.as("__y"))
-      .select(col("fv.fid").as("fid"), col("fv.v").as("v"), col("__y"))
-      .withColumn("__bin", binCol)
-      .groupBy(col("fid"), col("__bin"), col("__y"))
-      .agg(count(lit(1)).as("n"), call_function("bit_xor", xxhash64(round(v, 6))).as("fp"))
-      .collect()
-    // a fid absent from the groups has no labelled row: MI 0, fingerprint 0
-    val byFid = grouped.groupBy(_.getInt(0)).withDefaultValue(Array.empty)
+      (p.min, p.max, if (p.max > p.min) (p.max - p.min) / bins else 1.0)
+    }.toArray
+    // per labelled row: y, then each feature's value and its fingerprint
+    // hash (filtered before the select, so no feature is evaluated on an
+    // unlabelled row)
+    val rows = df.filter(y.isNotNull).select(y +: feats.flatMap { case (_, c) =>
+      val v = c.cast("double")
+      Seq(v, xxhash64(round(v, 6)))
+    }: _*)
+    // per partition: counts by (feature, bin, y in {0, 1}) and each
+    // feature's fingerprint, the wrapping Long sum of its hashes (order-free,
+    // so the partitions' sums add up to the feature's fingerprint)
+    def zero = (new Array[Long](nF * (bins + 1) * 2), new Array[Long](nF))
+    val (cnt, fps) = GraftBridge.foldPartitions(rows) { (_, it) =>
+      val (cnt, fp) = zero
+      it.foreach { r =>
+        val yv = r.getInt(0)
+        var i = 0
+        while (i < nF) {
+          val (lo, hi, w) = bounds(i)
+          val b = if (r.isNullAt(2 * i + 1)) bins else bin(r.getDouble(2 * i + 1), lo, hi, w, bins)
+          if (yv == 0 || yv == 1) cnt((i * (bins + 1) + b) * 2 + yv) += 1
+          fp(i) += r.getLong(2 * i + 2)
+          i += 1
+        }
+      }
+      (cnt, fp)
+    }.foldLeft(zero) { (a, b) =>
+      a._1.indices.foreach(k => a._1(k) += b._1(k))
+      a._2.indices.foreach(k => a._2(k) += b._2(k))
+      a
+    }
 
     feats.zipWithIndex.map { case ((n, _), i) =>
-      // groups: (fid, bin, y, n, fp); bin/y never null here (bin has the
-      // explicit null/NaN branch, y was filtered non-null)
-      val groups = byFid(i)
       val counts = (0 to bins).map { b =>
-        def cnt(yv: Int): Long = groups.iterator
-          .filter(g => g.getInt(1) == b && g.getInt(2) == yv)
-          .map(_.getLong(3)).sum
-        (cnt(0), cnt(1))
+        val k = (i * (bins + 1) + b) * 2
+        (cnt(k), cnt(k + 1))
       }
       val total = counts.map(t => t._1 + t._2).sum.toDouble
       val py1 = counts.map(_._2).sum / total
@@ -108,9 +103,21 @@ object MIScorer {
         if (c1 > 0) { val p = c1 / total; mi += p * math.log(p / (pb * py1)) }
       }
       val hy = -Seq(py0, py1).filter(_ > 0).map(p => p * math.log(p)).sum
-      val fp = groups.iterator.map(g => if (g.isNullAt(4)) 0L else g.getLong(4))
-        .foldLeft(0L)(_ ^ _)
-      n -> FeatureStats(prof(n), mi = if (hy > 0) mi / hy else 0.0, fingerprint = fp)
+      n -> FeatureStats(prof(n), mi = if (hy > 0) mi / hy else 0.0, fingerprint = fps(i))
     }.toMap
   }
+
+  /** The right-closed equi-width bin in [0, bins-1] of a non-null `v` over
+    * [lo, hi] with width `w`; NaN -> bin `bins`. Compares in Spark's order
+    * (NaN is the greatest value, -0.0 equals 0.0). The <= lo / >= hi
+    * short-circuits equal the ceil formula for finite values and absorb
+    * +-Infinity (infs arise from unguarded Div/Inv candidates in one-shot
+    * generators). An index past the Int range (NaN beside an infinity: max
+    * NaN, width 1) clamps to the last bin.
+    */
+  private def bin(v: Double, lo: Double, hi: Double, w: Double, bins: Int): Int =
+    if (v.isNaN) bins
+    else if (compareDoubles(v, lo) <= 0) 0
+    else if (compareDoubles(v, hi) >= 0) bins - 1
+    else math.min(math.max(math.ceil((v - lo) / w).toLong - 1, 0L), bins - 1L).toInt
 }

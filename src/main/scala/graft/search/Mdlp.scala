@@ -1,6 +1,8 @@
 package graft.search
 
+import org.apache.spark.GraftBridge
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 
 /** Fayyad-Irani MDLP supervised discretization, reference-faithful
@@ -105,9 +107,10 @@ object Mdlp {
     * it is pre-bucketed into at most `min(maxDistinct, 2048)` weighted
     * quantile bins (pd.qcut semantics, computed FROM the cached histogram,
     * no extra scan of `df`) and MDLP runs over bucket representatives, with
-    * accepted cuts mapped back to real value midpoints. A genuinely
-    * continuous column at 100x scale therefore degrades to quantile-MDLP
-    * instead of blowing up the driver on collect.
+    * accepted cuts mapped back to real value midpoints. All over-bound
+    * nodes share one quantile aggregation and one bucketing pass, whatever
+    * their number. A genuinely continuous column at 100x scale therefore
+    * degrades to quantile-MDLP instead of blowing up the driver on collect.
     */
   def fitCutsBatch(df: DataFrame, nodes: Seq[(String, Column)], label: Column,
       maxDistinct: Int = 100000): Map[String, IndexedSeq[Double]] = {
@@ -141,53 +144,77 @@ object Mdlp {
               .map(r => (r.getDouble(1), r.getString(2), r.getLong(3))), maxDistinct)
           }.toMap
         }
-      val bucketed: Map[String, IndexedSeq[Double]] = big.map { case ((key, _), i) =>
-        key -> quantileBucketedCuts(hist.filter(col("nid") === i), maxDistinct)
-      }.toMap
-      exact ++ bucketed
+      exact ++ quantileBucketedCuts(hist, big.map { case ((key, _), i) => key -> i }, maxDistinct)
     } finally { hist.unpersist(); () }
   }
 
-  /** The over-bound route of [[fitCutsBatch]]: weighted quantile bins from
-    * the (v, y, n) histogram of ONE node, MDLP over bucket indices, cuts
+  /** The over-bound route of [[fitCutsBatch]] for all its `nodes` ((key,
+    * nid) pairs) at once: weighted quantile bins per node from ONE
+    * percentile aggregation grouped by `nid` over the (nid, v, y, n)
+    * histogram, ONE shuffle-free row pass that buckets each node's rows by
+    * its own bounds (Bucketizer semantics) and keeps each bucket's real
+    * extremes and class counts, then per node MDLP over bucket indices, cuts
     * mapped back to midpoints between adjacent occupied buckets' real
     * extremes (so `binColumn`'s `v > cut` classifies every data row exactly
     * as the index-space recursion decided).
     */
-  private def quantileBucketedCuts(hist: DataFrame, maxDistinct: Int): IndexedSeq[Double] = {
+  private def quantileBucketedCuts(hist: DataFrame, nodes: Seq[(String, Int)],
+      maxDistinct: Int): Map[String, IndexedSeq[Double]] = {
+    if (nodes.isEmpty) return Map.empty
     val bins = math.min(maxDistinct, 2048)
     val probs = (1 until bins).map(_.toDouble / bins)
-    val bRow = hist.agg(
-      percentile(col("v"), typedLit(probs), col("n")).as("bounds")).head()
-    if (bRow.isNullAt(0)) return IndexedSeq.empty
-    val bounds = bRow.getSeq[Double](0).distinct.sorted
-    if (bounds.isEmpty) return IndexedSeq.empty
-    val splits = (Double.NegativeInfinity +: bounds :+ Double.PositiveInfinity).toArray
-    val bz = new org.apache.spark.ml.feature.Bucketizer()
-      .setSplits(splits).setInputCol("v").setOutputCol("__b")
-    val h2 = bz.transform(hist.select(col("v"), col("y"), col("n")))
-      .groupBy(col("__b"))
-      .agg(min(col("v")).as("lo"), max(col("v")).as("hi"),
-        collect_list(struct(col("y"), col("n"))).as("ys"))
-      .collect()
-    val byBucket = h2.map { r =>
-      val b = r.getDouble(0)
-      val ys = r.getSeq[org.apache.spark.sql.Row](3)
-        .groupBy(_.getString(0)).map { case (y, rs) => (y, rs.map(_.getLong(1)).sum) }
-      (b, r.getDouble(1), r.getDouble(2), ys)
-    }.sortBy(_._1)
-    val idxHist = byBucket.flatMap { case (b, _, _, ys) =>
-      ys.map { case (y, n) => (b, y, n) }
+    val nodeHist = hist.filter(col("nid").isin(nodes.map(_._2): _*))
+    val splits: Map[Int, Array[Double]] = nodeHist.groupBy(col("nid"))
+      .agg(percentile(col("v"), typedLit(probs), col("n")))
+      .collect().flatMap { r =>
+        val bounds = if (r.isNullAt(1)) Seq.empty else r.getSeq[Double](1).distinct.sorted
+        if (bounds.isEmpty) None
+        else Some(r.getInt(0) -> (Double.NegativeInfinity +: bounds :+ Double.PositiveInfinity).toArray)
+      }.toMap
+    // (nid, bucket) -> (lowest v, highest v, count per class)
+    type Buckets = collection.mutable.HashMap[(Int, Int), (Double, Double, Map[String, Long])]
+    def add(bs: Buckets, k: (Int, Int), lo: Double, hi: Double, ys: Map[String, Long]): Unit =
+      bs(k) = bs.get(k).fold((lo, hi, ys)) { case (l, h, y0) =>
+        (if (compareDoubles(lo, l) < 0) lo else l, if (compareDoubles(hi, h) > 0) hi else h,
+          ys.foldLeft(y0) { case (m, (y, n)) => m.updated(y, m.getOrElse(y, 0L) + n) })
+      }
+    val buckets = GraftBridge.foldPartitions(
+        nodeHist.filter(col("nid").isin(splits.keys.toSeq: _*))
+          .select(col("nid"), col("v"), col("y"), col("n"))) { (_, rows) =>
+      val bs: Buckets = collection.mutable.HashMap.empty
+      rows.foreach { r =>
+        val (nid, v) = (r.getInt(0), r.getDouble(1))
+        add(bs, nid -> bucketOf(splits(nid), v), v, v, Map(r.getUTF8String(2).toString -> r.getLong(3)))
+      }
+      bs
+    }.foldLeft(collection.mutable.HashMap.empty: Buckets) { (acc, bs) =>
+      bs.foreach { case (k, (lo, hi, ys)) => add(acc, k, lo, hi, ys) }
+      acc
     }
-    val idxCuts = cutsFromHistogram(idxHist, maxDistinct = bins + 1)
-    val occupied = byBucket.map(t => t._1 -> (t._2, t._3)).toMap
-    val occIdx = byBucket.map(_._1).sorted
-    idxCuts.map { c =>
-      val below = occIdx.filter(_ < c).last
-      val above = occIdx.filter(_ > c).head
-      (occupied(below)._2 + occupied(above)._1) / 2.0
-    }
+    val byNode = buckets.toSeq.groupBy(_._1._1)
+    nodes.map { case (key, nid) =>
+      val byBucket = byNode.getOrElse(nid, Seq.empty)
+        .map { case ((_, b), (lo, hi, ys)) => (b.toDouble, lo, hi, ys) }.sortBy(_._1).toArray
+      val idxHist = byBucket.flatMap { case (b, _, _, ys) => ys.map { case (y, n) => (b, y, n) } }
+      val idxCuts = cutsFromHistogram(idxHist, maxDistinct = bins + 1)
+      val occupied = byBucket.map(t => t._1 -> (t._2, t._3)).toMap
+      val occIdx = byBucket.map(_._1)
+      key -> idxCuts.map { c =>
+        val below = occIdx.filter(_ < c).last
+        val above = occIdx.filter(_ > c).head
+        (occupied(below)._2 + occupied(above)._1) / 2.0
+      }
+    }.toMap
   }
+
+  /** Bucketizer's bucket of a non-NaN `v` over `splits` (from -Infinity to
+    * +Infinity): `splits(b) <= v < splits(b + 1)`, the last bucket closed. */
+  private def bucketOf(splits: Array[Double], v: Double): Int =
+    if (v == splits.last) splits.length - 2
+    else {
+      val i = java.util.Arrays.binarySearch(splits, v)
+      if (i >= 0) i else -i - 2
+    }
 
   /** Driver-side MDLP recursion over a (value, class, count) histogram. */
   private def cutsFromHistogram(hist: Array[(Double, String, Long)],

@@ -242,10 +242,10 @@ class CdfcSpec extends SparkSpec {
 
   test("a raw column that spans zero without holding a zero keeps Inv in layer 2") {
     // x in {-2, -1, 1, 2}: min <= 0 <= max, but no row is zero, so the
-    // profile pass's exact zero count must reach the layer-2 guards. 401
-    // rows: were every value's count even, the xor value fingerprint of x
-    // and of each bijection of it would be 0, and all would dedup as one
-    val df = spark.range(401).select(
+    // profile pass's exact zero count must reach the layer-2 guards. Every
+    // value's count is even: were even counts to cancel out of the value
+    // fingerprint, x and each bijection of it would dedup as one
+    val df = spark.range(400).select(
       element_at(typedLit(Seq(-2.0, -1.0, 1.0, 2.0)), (pmod(col("id"), lit(4)) + 1).cast("int"))
         .as("x"),
       (pmod(col("id"), lit(3)) === 0).cast("int").as("y"))

@@ -43,4 +43,35 @@ class MdlpScaleSpec extends SparkSpec {
     assert(cuts("cont").exists(c => c > 28000 && c < 32000),
       s"routed node missed the planted boundary: ${cuts("cont")}")
   }
+
+  test("over-bound nodes share one quantile route and keep their per-node cuts") {
+    // three continuous nodes over the bound with their planted boundaries
+    // in different places, and one exact node
+    val df = spark.range(60000L).select(
+      col("id").cast("double").as("up"),
+      (col("id") * 2 + 7).cast("double").as("scaled"),
+      (lit(0) - col("id")).cast("double").as("down"),
+      (col("id") % 5).cast("double").as("disc"),
+      (col("id") >= 30000L).cast("int").as("y"))
+    val names = Seq("up", "scaled", "down")
+    def jobs(f: => Unit): Long = {
+      val rec = new graft.SideBench.Recorder(spark)
+      try { rec.take(); f; rec.take().jobs } finally rec.close()
+    }
+    var cuts = Map.empty[String, IndexedSeq[Double]]
+    val batchJobs = jobs {
+      cuts = Mdlp.fitCutsBatch(df, (names :+ "disc").map(n => n -> col(n)), col("y"),
+        maxDistinct = 5000)
+    }
+    names.foreach { n =>
+      assert(cuts(n) == Mdlp.fitCuts(df, col(n), col("y"), maxDistinct = 5000), n)
+    }
+    assert(cuts("up").exists(c => c > 29000 && c < 31000), cuts("up"))
+    assert(cuts("scaled").exists(c => c > 58000 && c < 62000), cuts("scaled"))
+    assert(cuts("down").exists(c => c > -31000 && c < -29000), cuts("down"))
+    assert(cuts("disc").isEmpty || cuts("disc").forall(c => c > 0 && c < 5))
+    val oneJobs = jobs { Mdlp.fitCutsBatch(df, Seq("up" -> col("up"), "disc" -> col("disc")),
+      col("y"), maxDistinct = 5000); () }
+    assert(batchJobs == oneJobs, s"$batchJobs jobs for three over-bound nodes, $oneJobs for one")
+  }
 }
