@@ -21,8 +21,7 @@ object Fitter {
   /** @param label required when any expression contains a supervised fit op
     *              (MDLP) — its histogram job needs the class column
     */
-  def fit(fitDf: DataFrame, exprs: Seq[FeatureExpr],
-      raw: String => Column = col, known: FitStats = FitStats.empty,
+  def fit(fitDf: DataFrame, exprs: Seq[FeatureExpr], known: FitStats = FitStats.empty,
       label: Option[Column] = None): FitStats = {
     // All distinct fit-requiring Unary nodes across the canon'd forest.
     def fitNodes(e: FeatureExpr): Seq[Unary] = {
@@ -70,13 +69,13 @@ object Fitter {
         val y = label.getOrElse(throw new IllegalArgumentException(
           s"MDLP fit requires a label column (nodes: ${mdlpReady.keys})"))
         val nodes = mdlpReady.toSeq.map { case (key, u) =>
-          key -> Lower.toColumn(u.child, stats, raw).cast("double")
+          key -> Lower.toColumn(u.child, stats).cast("double")
         }
         batchJobs += (() => FitStats(graft.search.Mdlp.fitCutsBatch(fitDf, nodes, y)))
       }
       if (modeReady.nonEmpty) {
         val nodes = modeReady.toSeq.map { case (key, u) =>
-          key -> Lower.toColumn(u.child, stats, raw).cast("double")
+          key -> Lower.toColumn(u.child, stats).cast("double")
         }
         batchJobs += (() => FitStats(modeBatch(fitDf, nodes)))
       }
@@ -93,51 +92,39 @@ object Fitter {
       })
       if (pctlReady.nonEmpty) {
         val nodes = pctlReady.toSeq.map { case (key, u) =>
-          key -> Lower.toColumn(u.child, stats, raw).cast("double")
+          key -> Lower.toColumn(u.child, stats).cast("double")
         }
         val specs = nodes.map { case (k, c) => (k, c, pending(k).op) }
         batchJobs += (() => FitStats(percentileBatch(fitDf, specs)))
       }
       if (plainReady.nonEmpty) {
-      val ready2 = plainReady
-      val aggsAndDecode: Seq[(String, Seq[Column], org.apache.spark.sql.Row => IndexedSeq[Double])] =
-        ready2.toSeq.map { case (key, u) =>
-          val c = Lower.toColumn(u.child, stats, raw).cast("double")
-          val p = s"s${key.hashCode.toHexString}"
-          def dbl(row: org.apache.spark.sql.Row, f: String): Double = {
-            val i = row.fieldIndex(f)
-            if (row.isNullAt(i)) Double.NaN else row.getDouble(i)
+        val aggsAndDecode: Seq[(String, Seq[Column], org.apache.spark.sql.Row => IndexedSeq[Double])] =
+          plainReady.toSeq.map { case (key, u) =>
+            val c = Lower.toColumn(u.child, stats).cast("double")
+            val p = s"s${key.hashCode.toHexString}"
+            def dbl(row: org.apache.spark.sql.Row, f: String): Double = {
+              val i = row.fieldIndex(f)
+              if (row.isNullAt(i)) Double.NaN else row.getDouble(i)
+            }
+            u.op match {
+              case UnaryOp.MinMax | UnaryOp.DiscretizeEW(_) =>
+                (key, Seq(min(c).as(s"${p}_a"), max(c).as(s"${p}_b")),
+                  (r: org.apache.spark.sql.Row) => IndexedSeq(dbl(r, s"${p}_a"), dbl(r, s"${p}_b")))
+              case UnaryOp.StdScale | UnaryOp.ZScore =>
+                (key, Seq(avg(c).as(s"${p}_a"), stddev_pop(c).as(s"${p}_b")),
+                  (r: org.apache.spark.sql.Row) => IndexedSeq(dbl(r, s"${p}_a"), dbl(r, s"${p}_b")))
+              case UnaryOp.ImputeMean =>
+                (key, Seq(avg(c).as(s"${p}_a")),
+                  (r: org.apache.spark.sql.Row) => IndexedSeq(dbl(r, s"${p}_a")))
+              case other =>
+                throw new IllegalStateException(s"unexpected fit op $other")
+            }
           }
-          u.op match {
-            case UnaryOp.MinMax | UnaryOp.DiscretizeEW(_) =>
-              (key, Seq(min(c).as(s"${p}_a"), max(c).as(s"${p}_b")),
-                (r: org.apache.spark.sql.Row) => IndexedSeq(dbl(r, s"${p}_a"), dbl(r, s"${p}_b")))
-            case UnaryOp.StdScale | UnaryOp.ZScore =>
-              (key, Seq(avg(c).as(s"${p}_a"), stddev_pop(c).as(s"${p}_b")),
-                (r: org.apache.spark.sql.Row) => IndexedSeq(dbl(r, s"${p}_a"), dbl(r, s"${p}_b")))
-            case UnaryOp.ImputeMean =>
-              (key, Seq(avg(c).as(s"${p}_a")),
-                (r: org.apache.spark.sql.Row) => IndexedSeq(dbl(r, s"${p}_a")))
-            case UnaryOp.ImputeMedian =>
-              (key, Seq(median(c).as(s"${p}_a")),
-                (r: org.apache.spark.sql.Row) => IndexedSeq(dbl(r, s"${p}_a")))
-            case UnaryOp.DiscretizeQ(b) =>
-              val qs = (1 until b).map(_.toDouble / b)
-              (key, Seq(percentile(c, typedLit(qs)).as(s"${p}_q")),
-                (r: org.apache.spark.sql.Row) => {
-                  val i = r.fieldIndex(s"${p}_q")
-                  if (r.isNullAt(i)) IndexedSeq.fill(b - 1)(Double.NaN)
-                  else r.getSeq[Double](i).toIndexedSeq
-                })
-            case other =>
-              throw new IllegalStateException(s"unexpected fit op $other")
-          }
-        }
-      batchJobs += (() => {
-        val row = fitDf.agg(
-          aggsAndDecode.flatMap(_._2).head, aggsAndDecode.flatMap(_._2).tail: _*).head()
-        FitStats(aggsAndDecode.map { case (k, _, dec) => k -> dec(row) }.toMap)
-      })
+        batchJobs += (() => {
+          val row = fitDf.agg(
+            aggsAndDecode.flatMap(_._2).head, aggsAndDecode.flatMap(_._2).tail: _*).head()
+          FitStats(aggsAndDecode.map { case (k, _, dec) => k -> dec(row) }.toMap)
+        })
       }
       graft.search.FitPool.all(fitDf.sparkSession, "fitter")(batchJobs.result(): _*)
         .foreach { s => stats = stats ++ s }

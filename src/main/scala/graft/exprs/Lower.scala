@@ -20,8 +20,11 @@ object FitStats { val empty: FitStats = FitStats(Map.empty) }
 
 /** Lowers a [[FeatureExpr]] to a Catalyst `Column`. All scalar ops stay
   * inside whole-stage codegen (built-in functions only, no UDFs); GroupByThen
-  * lowers to an unordered window over the key partition (one shuffle shared
-  * by every GroupByThen of a layer with the same key).
+  * lowers to an unordered window over the key partition for all nine
+  * aggregates, exact median included (one shuffle shared by every
+  * GroupByThen of a layer with the same key; a null key is one partition).
+  * Callers outside the fit go through [[graft.search.LayerBuilder.columns]],
+  * which canonicalizes first.
   *
   * Null semantics: strict SQL null propagation. The reference's nan-aware
   * ops (`nansum` etc.) only matter for parents with missing values, which
@@ -107,13 +110,7 @@ object Lower {
         case AggKind.Mean   => avg(v).over(w)
         case AggKind.Max    => max(v).over(w)
         case AggKind.Min    => min(v).over(w)
-        case AggKind.Median =>
-          // Exact median is not window-capable in Spark (and a
-          // collect_list-based window would materialize the group array per
-          // ROW — quadratic memory). GroupByThen(Median) is materialized by
-          // [[graft.search.LayerBuilder]] as groupBy().agg(median) + join-back.
-          throw new IllegalArgumentException(
-            "GroupByThen(Median) must be materialized via LayerBuilder.select")
+        case AggKind.Median => median(v).over(w)
         case AggKind.Std    => stddev_pop(v).over(w)  // np.nanstd: ddof=0
         case AggKind.Var    => var_pop(v).over(w)
         case AggKind.Count  => count(v).over(w).cast("double")

@@ -39,8 +39,9 @@ object Profiler {
     * order, so a 64-candidate batch is one job with no aggregate to plan or
     * compile. A numeric column is read as a double, a categorical one as a
     * string: its missing count is `IS NULL`, its min and max are NaN and it
-    * never has a zero. Min and max follow Spark's `min`/`max` (NaN is the
-    * greatest value, -0.0 equals 0.0 and the first one seen is kept).
+    * never has a zero. A NaN counts as missing and never bounds the range:
+    * min and max are Spark's `min`/`max` over the non-NaN values (-0.0
+    * equals 0.0 and the first one seen is kept), NaN when there is none.
     * `distinct` is Spark's HyperLogLog++ sketch at `approx_count_distinct`'s
     * default rsd, the same value that aggregate gives — the reference uses
     * exact nunique, but the only consumers are threshold guards (distinct
@@ -75,7 +76,7 @@ object Profiler {
   private val DistinctRsd = 0.05
 
   /** One partition's profile counters over the projected columns (`types`,
-    * numeric ones first): counts, Spark-ordered min/max, zero counts and one
+    * numeric ones first): counts, Spark-ordered non-NaN min/max, zero counts and one
     * HyperLogLog++ register block per column. */
   private final class ProfileAcc(types: Array[DataType], nNum: Int) extends Serializable {
     private val n = types.length
@@ -102,8 +103,8 @@ object Profiler {
         else if (i < nNum) {
           val v = r.getDouble(i)
           if (v.isNaN) missing(i) += 1
+          else offer(i, v)
           if (v == 0.0) zeros(i) += 1
-          offer(i, v)
           hll.update(sketch, i * words, v, types(i))
         } else hll.update(sketch, i * words, r.getUTF8String(i), types(i))
         i += 1

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.exprs._
+import graft.exprs.PortableRound.col6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +19,8 @@ object TransformQueries {
   private def sel(df: DataFrame, keys: Seq[String], feats: Seq[(String, FeatureExpr)],
       fitDf: DataFrame = null): DataFrame = {
     val fit = Fitter.fit(if (fitDf == null) df else fitDf, feats.map(_._2))
-    graft.search.LayerBuilder.select(df, keys, feats, fit, round6 = true)
+    graft.search.LayerBuilder.select(df, keys, feats, fit)
+      .select(keys.map(col) ++ feats.map { case (n, _) => col6(col(n)).as(n) }: _*)
   }
 
   import UnaryOp._

@@ -217,11 +217,9 @@ final class Cdfc(
       lrScores ++= lrAucBatch(need)
       top.foreach { case (i, s) =>
         val auc = lrScores(s.key)
-        val isRawOrOneHot = s.expr.isInstanceOf[RawCol] ||
-          (s.expr match { case Unary(UnaryOp.EqualsStr(_), _) => true; case _ => false })
         val parentAuc = lrGainParents(s.expr).flatMap(p => lrScores.get(Canon.key(p)))
           .maxOption.getOrElse(0.5)
-        val pass = isRawOrOneHot || auc - parentAuc > cfg.epsilon
+        val pass = Cdfc.isRawOrOneHot(s.expr) || auc - parentAuc > cfg.epsilon
         survivors(i) = s.copy(score = auc, passed = pass)
         if (!pass)
           byComplexity(cost) = byComplexity(cost).filterNot(ee => Canon.key(ee) == s.key)
@@ -242,7 +240,7 @@ final class Cdfc(
 
       toEval.grouped(cfg.batchSize).foreach { batch =>
         val named = batch.map(e => Lower.alias(e) -> e)
-        val cols = named.map { case (n, e) => n -> Lower.toColumn(e, fit) }
+        val cols = LayerBuilder.columns(df, named, fit)
         // raw columns already have their profile from the layer-1 pass
         // (`rawProfiles`); MIScorer profiles the others (runtime bin bounds,
         // not analytic ones: those are conservative and would skew the bins)
@@ -259,10 +257,8 @@ final class Cdfc(
           if (!isConstant && !isDup) {
             fingerprints += st.fingerprint
             scores(k) = st.mi
-            val isRawOrOneHot = e.isInstanceOf[RawCol] ||
-              (e match { case Unary(UnaryOp.EqualsStr(_), _) => true; case _ => false })
             val gain = st.mi - maxParentScore(e)
-            val passed = isRawOrOneHot || gain > cfg.epsilon
+            val passed = Cdfc.isRawOrOneHot(e) || gain > cfg.epsilon
             if (passed) {
               survivors += Scored(e, k, cost, st.mi, passed = true, inherited = false)
               byComplexity(cost) = byComplexity(cost) :+ e
@@ -325,8 +321,6 @@ final class Cdfc(
       val pool = survivors.filter(_.complexity <= upTo)
       if (pool.isEmpty) 0.0 else pool.count(_.complexity >= comp).toDouble / pool.size
     }
-    def harmonicMean(a: Double, b: Double): Double =
-      if (a + b == 0) 0.0 else 2 * a * b / (a + b)
 
     // champion channel: with the LR stage on, the champion is the best
     // LR-SCORED candidate by AUC (the LR set = each layer's top-K + their
@@ -390,7 +384,7 @@ final class Cdfc(
       if (cfg.harmonicStop && layer > 2) {
         val hms = (0 to 2).map { hI =>
           bestAfterLayer.get(layer - hI).map { ch =>
-            harmonicMean(
+            Traversals.harmonicMean(
               simplicityScore(ch.complexity, layer),
               accuracyScore(ch.score, layer))
           }.getOrElse(0.0)
@@ -407,6 +401,13 @@ final class Cdfc(
 }
 
 object Cdfc {
+  /** Raw columns and one-hots always pass the epsilon gate
+    * (`run_evaluation.py:370`). */
+  private def isRawOrOneHot(e: FeatureExpr): Boolean = e match {
+    case RawCol(_) | Unary(UnaryOp.EqualsStr(_), _) => true
+    case _                                          => false
+  }
+
   /** Layer enumeration, exposed for direct testing: all candidates of
     * exactly `cost` nodes from the per-complexity pools.
     */

@@ -101,7 +101,7 @@ object ExploreKit {
       // + score pass — doubled the interpreted cost), then aggregate over
       // plain columns of the snapshot
       val mat = FeatureConstructor.snapshot(df.select(
-        named.map { case (n, e) => Lower.toColumn(e, fit).cast("double").as(n) } :+
+        LayerBuilder.columns(df, named, fit).map { case (n, c) => c.as(n) } :+
           label.cast("int").as("__y"): _*))
       val stats = MIScorer.scoreBatch(mat, named.map { case (n, _) => n -> col(n) },
         col("__y"), cfg.bins)

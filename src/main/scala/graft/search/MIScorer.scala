@@ -108,12 +108,12 @@ object MIScorer {
   }
 
   /** The right-closed equi-width bin in [0, bins-1] of a non-null `v` over
-    * [lo, hi] with width `w`; NaN -> bin `bins`. Compares in Spark's order
-    * (NaN is the greatest value, -0.0 equals 0.0). The <= lo / >= hi
-    * short-circuits equal the ceil formula for finite values and absorb
-    * +-Infinity (infs arise from unguarded Div/Inv candidates in one-shot
-    * generators). An index past the Int range (NaN beside an infinity: max
-    * NaN, width 1) clamps to the last bin.
+    * [lo, hi] with width `w`; NaN -> bin `bins`. [lo, hi] is the profile's
+    * non-NaN range, so one NaN row does not widen it. Compares in Spark's
+    * order (-0.0 equals 0.0). The <= lo / >= hi short-circuits equal the
+    * ceil formula for finite values and absorb +-Infinity (infs arise from
+    * unguarded Div/Inv candidates in one-shot generators); an index past
+    * the Int range clamps to the last bin.
     */
   private def bin(v: Double, lo: Double, hi: Double, w: Double, bins: Int): Int =
     if (v.isNaN) bins

@@ -235,10 +235,6 @@ object Mdlp {
     runMdlp(values, counts, k)
   }
 
-  /** Lower the fitted cuts to a bin column: bin = #cuts below x (right-
-    * closed at cuts), null/NaN -> -1; no accepted cuts -> constant 0
-    * (dies in the search's constant prune, reference raises).
-    */
   /** The top-level Fayyad-Irani decision WITHOUT recursion: the best
     * boundary midpoint over the full range and whether MDLP accepts it.
     * Unlike the search's internal recursion (which keeps the reference's
@@ -298,6 +294,10 @@ object Mdlp {
     Some(((values(bestI - 1) + values(bestI)) / 2.0, bestGain > threshold))
   }
 
+  /** Lower the fitted cuts to a bin column: bin = #cuts below x (right-
+    * closed at cuts), null/NaN -> -1; no accepted cuts -> constant 0
+    * (dies in the search's constant prune, reference raises).
+    */
   def binColumn(c: Column, cuts: IndexedSeq[Double]): Column =
     if (cuts.isEmpty) lit(0)
     else {

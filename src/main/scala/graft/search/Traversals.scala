@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   *    P(complexity >= current) (`HarmonicMeanTraversal.py:240-274`) — the
   *    accuracy/simplicity trade-off schedule.
   *
-  * Scoring is the engine's batched MI gain oracle (one explode-agg job per
-  * expansion, like CDFC); the driver loop holds only expression names and
-  * scores.
+  * Scoring is the engine's batched MI gain oracle over the children's
+  * [[LayerBuilder.columns]] (a profile pass and an MI pass per expansion,
+  * each one shuffle-free row-pass job, like CDFC); the driver loop holds
+  * only expression names and scores.
   */
 object Traversals {
 
@@ -77,7 +78,7 @@ object Traversals {
       if (cands.isEmpty) return Seq.empty
       fit = Fitter.fit(df, cands, known = fit, label = Some(label))
       val named = cands.map(e => Lower.alias(e) -> e)
-      val st = MIScorer.scoreBatch(df, named.map { case (n, e) => n -> Lower.toColumn(e, fit) },
+      val st = MIScorer.scoreBatch(df, LayerBuilder.columns(df, named, fit),
         label, bins, named.collect { case (n, RawCol(c)) => n -> rawProfiles(c) }.toMap)
       named.map { case (n, e) => Rep(e, st(n).mi, e.complexity) }
     }

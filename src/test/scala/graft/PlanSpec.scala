@@ -139,13 +139,30 @@ class PlanSpec extends SparkSpec {
       .select(col("conv_id"), col("turn_idx"), length(col("text")).cast("double").as("len"))
     val out = graft.search.LayerBuilder.select(t, Seq("conv_id", "turn_idx"),
       Seq("f_med" -> GroupByThenE(AggKind.Median, RawCol("len"), RawCol("conv_id"))))
-    // the ENGINE must not force a broadcast hint — whether the planner then
-    // picks a broadcast from size statistics (it does at test scale, and
-    // correctly would not at 10^9 groups) is the optimizer's call, which a
-    // forced hint would override
+    // Median no longer joins back (it is a key-partition window), but the
+    // ENGINE must still force no broadcast hint on a high-cardinality key:
+    // any broadcast is the optimizer's call from size statistics
     val logical = out.queryExecution.analyzed.toString()
     assert(!logical.contains("ResolvedHint") && !logical.contains("UnresolvedHint"),
       s"join-back must not force a broadcast hint:\n$logical")
+  }
+
+  test("GroupByThen Median and Mean over a high-cardinality key: one exchange, no join, no hint") {
+    import graft.exprs._
+    val t = Transcripts.fromEvents(Tables.events(spark, sf0001))
+      .select(col("conv_id"), col("turn_idx"), length(col("text")).cast("double").as("len"))
+    val out = graft.search.LayerBuilder.select(t, Seq("conv_id", "turn_idx"), Seq(
+      "f_med" -> GroupByThenE(AggKind.Median, RawCol("len"), RawCol("conv_id")),
+      "f_mean" -> GroupByThenE(AggKind.Mean, RawCol("len"), RawCol("conv_id"))))
+    // exact median is a window aggregate like the others: both features
+    // share the key partition's one exchange, and nothing joins back
+    val p = plan(out)
+    assert(countOccurrences(p, "Exchange hashpartitioning(conv_id") == 1,
+      s"expected one exchange on the key:\n$p")
+    assert(!p.contains("Join"), s"GroupByThen must not plan a join:\n$p")
+    val logical = out.queryExecution.analyzed.toString()
+    assert(!logical.contains("ResolvedHint") && !logical.contains("UnresolvedHint"),
+      s"GroupByThen must not force a hint:\n$logical")
   }
 
   test("global rank plans have no single-partition exchange") {

@@ -57,7 +57,7 @@ class LowerFitSpec extends SparkSpec {
     assert(row2.getDouble(2) == 3.0)  // median of 1,3,8
   }
 
-  test("GroupByThen Median via LayerBuilder join-back is exact per group") {
+  test("GroupByThen Median as a key-partition window is exact per group") {
     val e = GroupByThenE(AggKind.Median, RawCol("v"), RawCol("g"))
     val got = one(e)
     assert(got(1L) == 3.0 && got(2L) == 3.0)  // median(2,4)

@@ -254,4 +254,29 @@ class CdfcSpec extends SparkSpec {
     val inv = Canon.key(Unary(UnaryOp.Inv, RawCol("x")))
     assert(res.survivors.exists(s => s.key == inv && s.passed), res.survivors.map(_.key))
   }
+
+  test("GroupByThen(Median) candidates are MI-scored as a window, equal to a join-back") {
+    // g: six string groups plus a null-key group; even group sizes make the
+    // median interpolate; y depends on the group
+    val df = spark.range(840).select(
+      when(pmod(col("id"), lit(7)) === 6, lit(null))
+        .otherwise(concat(lit("g"), pmod(col("id"), lit(7)).cast("string"))).as("g"),
+      (pmod(xxhash64(col("id")), lit(1000)).cast("double") / 10).as("x1"),
+      (pmod(col("id") * 31, lit(17)) + pmod(col("id"), lit(7))).cast("double").as("x2"),
+      (pmod(col("id"), lit(7)) < 3).cast("int").as("y"))
+    val res = new Cdfc(df, Seq("x1", "x2"), Seq("g"), Seq("g"), col("y"),
+      CdfcConfig(cMax = 3, epsilon = -1, unaryOps = Seq.empty, binaryOps = Seq.empty,
+        groupByAggs = Seq(AggKind.Median), lrTopK = 0)).run()
+    val meds = Seq("x1", "x2").map(v => v -> GroupByThenE(AggKind.Median, RawCol(v), RawCol("g")))
+    // the reference column: groupBy(g) + median + null-safe join-back
+    val agg = df.groupBy(col("g").as("k"))
+      .agg(median(col("x1")).as("m_x1"), median(col("x2")).as("m_x2"))
+    val joined = df.join(agg, col("g") <=> col("k"), "left")
+    val want = MIScorer.scoreBatch(joined, meds.map { case (v, _) => v -> col(s"m_$v") }, col("y"))
+    meds.foreach { case (v, e) =>
+      val got = res.survivors.find(_.key == Canon.key(e))
+      assert(got.exists(s => s.complexity == 3 && s.passed), s"$v: ${res.survivors.map(_.key)}")
+      assert(got.get.score == want(v).mi, v)
+    }
+  }
 }

@@ -57,7 +57,8 @@ class MIScorerSpec extends SparkSpec {
       assert(st(n).mi == labelled(n).mi, n)
       assert(st(n).fingerprint == labelled(n).fingerprint, n)
     }
-    assert(all("b").min == -100.0 && all("c").distinct == 1 && all("a").max.isNaN)
+    // `a`'s NaN rows (199 among them) are missing and do not bound its range
+    assert(all("b").min == -100.0 && all("c").distinct == 1 && all("a").max == 198.0)
     assert(st("a").mi > 0 && st("c").mi == 0.0)
   }
 
@@ -122,13 +123,27 @@ class MIScorerSpec extends SparkSpec {
     val st = MIScorer.scoreBatch(df, numeric, col("y"))
     assert(st("a").mi > 0 && st("const").mi == 0.0 && st("const").profile.distinct == 1)
     assert(st("inf").profile.min == Double.NegativeInfinity && st("none").profile.min.isNaN)
-    // NaN beside an infinity: max NaN, width 1, so the bin index of an
-    // infinity overflows int. The explode scorer's ANSI cast threw here;
-    // the row pass clamps it into the last bin
-    val mixed = when(every(5), lit(Double.NaN)).when(every(7), lit(Double.PositiveInfinity))
-      .otherwise(id.cast("double"))
-    val nanInf = MIScorer.scoreBatch(df, Seq("m" -> mixed), col("y"))("m")
-    assert(nanInf.profile.max.isNaN && nanInf.mi > 0)
+    // NaN beside an infinity: the bounds are the non-NaN range [1, Inf], so
+    // every finite value bins at 0 and the infinities at the last bin
+    val mixed = Seq("m" -> when(every(5), lit(Double.NaN))
+      .when(every(7), lit(Double.PositiveInfinity)).otherwise(id.cast("double")))
+    val nanInf = MIScorer.scoreBatch(df, mixed, col("y"))("m")
+    val nanInfRef = ExplodeReference.scoreBatch(df, mixed, col("y"), bins = 10)("m")
+    assert(nanInf.profile.max == Double.PositiveInfinity && nanInf.profile.min == 1.0)
+    assert(nanInf.mi == nanInfRef.mi && nanInf.mi > 0)
+  }
+
+  test("one NaN row does not widen the bin range") {
+    // x = 0..999 with y = (x > 500): the bins split the range at 500, so MI
+    // is near 1. A NaN in the bounds (max NaN, width 1) put every x above 9
+    // into the last bin and the MI near 0
+    val clean = spark.range(1000).select(col("id").cast("double").as("x"),
+      (col("id") > 500).cast("int").as("y"))
+    val withNaN = clean.union(Seq((Double.NaN, 0)).toDF("x", "y"))
+    val a = MIScorer.scoreBatch(clean, Seq("x" -> col("x")), col("y"))("x")
+    val b = MIScorer.scoreBatch(withNaN, Seq("x" -> col("x")), col("y"))("x")
+    assert(a.mi > 0.99 && b.mi > 0.98, s"clean ${a.mi}, one NaN ${b.mi}")
+    assert(b.profile.min == 0.0 && b.profile.max == 999.0 && b.profile.missing == 1)
   }
 }
 
@@ -158,7 +173,7 @@ object ExplodeReference {
       .agg(
         count(lit(1)).as("cnt"),
         count(when(when(col("fid") < nNum, v.isNull || isnan(v)).otherwise(s.isNull), 1)),
-        min(v), max(v), count(when(v === 0.0, 1)),
+        min(when(!isnan(v), v)), max(when(!isnan(v), v)), count(when(v === 0.0, 1)),
         approx_count_distinct(v), approx_count_distinct(s))
       .collect()
     val byFid = rows.map(r => r.getInt(0) -> r).toMap
