@@ -1,8 +1,8 @@
 package graft.checkpoint
 
-import graft.exprs.FitStats
+import graft.exprs.{FeatureExprParser, FitStats}
 import graft.profile.ColumnProfile
-import graft.search.LayerLog
+import graft.search.{LayerLog, Scored}
 import org.apache.spark.GraftBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
@@ -17,15 +17,17 @@ import scala.jdk.CollectionConverters._
   *
   *   dir/layer=N/manifest.json
   *
-  * holding the full search state, the layer's audit rows and the run's
-  * per-partition input lineage. The driver already holds all of it, so a
-  * commit runs no Spark job: the document is written to a temporary name
-  * and published with one atomic rename (a layer directory without a
+  * holding the [[SearchState]] after layer N, the layer's duration and the
+  * run's per-partition input lineage. The driver already holds all of it,
+  * so a commit runs no Spark job: the document is written to a temporary
+  * name and published with one atomic rename (a layer directory without a
   * manifest is an aborted write and is ignored). Every double is stored
   * bit-exactly (finite values as JSON numbers, NaN and ±Infinity as their
-  * raw IEEE bits), so resume loads the newest committed layer's state
-  * verbatim, skips every completed layer and continues on the exact float
-  * path of the original run (resume == fresh, property-tested).
+  * raw IEEE bits), and a [[Scored]] as its canonical key, parsed back with
+  * [[FeatureExprParser]]. The search's layer loop starts from
+  * [[SearchState.empty]] or from [[load]] alike, so a resumed search takes
+  * the same steps, and stops at the same layer, as a fresh one
+  * (resume == fresh, property-tested).
   *
   * [[audit]] and [[lineage]] read the committed manifests back as tables:
   * per-candidate metrics, and per-partition input lineage (partition id ->
@@ -33,25 +35,36 @@ import scala.jdk.CollectionConverters._
   */
 object Checkpoint {
 
-  final case class SurvivorRow(
-      layer: Int, expr: String, score: Double, complexity: Int,
-      passed: Boolean, inherited: Boolean)
-
+  /** The whole state of a CDFC search after layer `layer`; each layer is a
+    * step from one state to the next, and nothing else carries over.
+    *
+    * @param seen      canonical keys of every evaluated candidate
+    * @param scores    gain baseline per key (MI, or the inherited score)
+    * @param survivors every kept candidate in evaluation order; the
+    *                  enumeration pool is the passed or inherited ones
+    * @param lrAuc     CV-LR AUC channel of the two-stage oracle (empty when
+    *                  LR is off)
+    * @param layers    accounting of layers 2..`layer`
+    * @param champions the champion after each layer 1..`layer` (none before
+    *                  one exists): the stop rules and `best` derive from it
+    */
   final case class SearchState(
       layer: Int,
       seen: Set[String],
       fingerprints: Set[Long],
       scores: Map[String, Double],
-      survivors: Seq[SurvivorRow],
+      survivors: Vector[Scored],
       fit: FitStats,
       profiles: Map[String, ColumnProfile],
-      /** CV-LR AUC channel of the two-stage oracle (empty when LR is off);
-        * persisted so a resumed search selects champions from the same
-        * LR-scored pool as the fresh run. */
-      lrAuc: Map[String, Double] = Map.empty,
-      /** Per-layer accounting of every layer committed so far, so a resumed
-        * search reports the same layer log as a fresh one. */
-      layers: Seq[LayerLog] = Seq.empty)
+      lrAuc: Map[String, Double],
+      layers: Seq[LayerLog],
+      champions: Seq[Option[Scored]])
+
+  object SearchState {
+    /** Before layer 1: where a fresh search starts. */
+    val empty = SearchState(0, Set.empty, Set.empty, Map.empty, Vector.empty, FitStats.empty,
+      Map.empty, Map.empty, Seq.empty, Seq.empty)
+  }
 
   final case class AuditRow(
       layer: Int, expr: String, score: Double, complexity: Int,
@@ -63,14 +76,13 @@ object Checkpoint {
 
   private val Manifest = "manifest.json"
 
-  /** Commits layer `st.layer`: `audit` holds the layer's new candidates,
-    * `lineage` the input's (partition id, rows) pairs ([[partitionRows]]).
+  /** Commits layer `st.layer`; `lineage` holds the input's (partition id,
+    * rows) pairs ([[partitionRows]]).
     */
-  def save(dir: String, st: SearchState, audit: Seq[SurvivorRow], durationMs: Long,
-      lineage: Seq[(Int, Long)]): Unit = {
+  def save(dir: String, st: SearchState, durationMs: Long, lineage: Seq[(Int, Long)]): Unit = {
     val d = Files.createDirectories(Paths.get(layerDir(dir, st.layer)))
     val doc = ("layer" -> st.layer) ~ ("complete" -> true) ~ ("state" -> stateJson(st)) ~
-      ("audit" -> (("duration_ms" -> durationMs) ~ ("rows" -> audit.map(rowJson)))) ~
+      ("duration_ms" -> durationMs) ~
       ("lineage" -> lineage.map { case (p, n) => ("partition_id" -> p) ~ ("rows" -> n) })
     val tmp = d.resolve(s"$Manifest.tmp")
     Files.writeString(tmp, compact(render(doc)))
@@ -84,14 +96,15 @@ object Checkpoint {
       .map { case (_, m) => readState(read(m) \ "state") }
 
   /** Per-candidate metrics of every committed layer: the columns of
-    * [[AuditRow]]. */
+    * [[AuditRow]], one row per survivor the layer added (`layer` is its
+    * complexity). */
   def audit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    committed(dir).flatMap { case (_, m) =>
+    committed(dir).flatMap { case (l, m) =>
       val doc = read(m)
-      val ms = (doc \ "audit" \ "duration_ms").extract[Long]
-      (doc \ "audit" \ "rows").children.map(readRow).map(r =>
-        AuditRow(r.layer, r.expr, r.score, r.complexity, r.passed, r.inherited, ms))
+      val ms = (doc \ "duration_ms").extract[Long]
+      (doc \ "state" \ "survivors").children.map(readScored).filter(_.complexity == l).map(s =>
+        AuditRow(s.complexity, s.key, s.score, s.complexity, s.passed, s.inherited, ms))
     }.toDF()
   }
 
@@ -150,18 +163,20 @@ object Checkpoint {
   private def readDoubles(v: JValue): Map[String, Double] =
     v.asInstanceOf[JObject].obj.map { case (k, d) => k -> dbl(d) }.toMap
 
-  private def rowJson(r: SurvivorRow): JValue =
-    ("layer" -> r.layer) ~ ("expr" -> r.expr) ~ ("score" -> num(r.score)) ~
-      ("complexity" -> r.complexity) ~ ("passed" -> r.passed) ~ ("inherited" -> r.inherited)
+  private def scoredJson(s: Scored): JValue =
+    ("expr" -> s.key) ~ ("score" -> num(s.score)) ~ ("complexity" -> s.complexity) ~
+      ("passed" -> s.passed) ~ ("inherited" -> s.inherited)
 
-  private def readRow(v: JValue): SurvivorRow = SurvivorRow((v \ "layer").extract[Int],
-    (v \ "expr").extract[String], dbl(v \ "score"), (v \ "complexity").extract[Int],
-    (v \ "passed").extract[Boolean], (v \ "inherited").extract[Boolean])
+  private def readScored(v: JValue): Scored = {
+    val key = (v \ "expr").extract[String]
+    Scored(FeatureExprParser.parse(key), key, (v \ "complexity").extract[Int], dbl(v \ "score"),
+      (v \ "passed").extract[Boolean], (v \ "inherited").extract[Boolean])
+  }
 
   private def stateJson(st: SearchState): JValue =
     ("layer" -> st.layer) ~ ("seen" -> st.seen.toList.sorted) ~
       ("fingerprints" -> st.fingerprints.toList.sorted) ~ ("scores" -> doubles(st.scores)) ~
-      ("survivors" -> st.survivors.map(rowJson)) ~
+      ("survivors" -> st.survivors.map(scoredJson)) ~
       ("fit" -> JObject(st.fit.m.toList.sortBy(_._1).map { case (k, vs) =>
         k -> JArray(vs.map(num).toList) })) ~
       ("profiles" -> st.profiles.toList.sortBy(_._1).map { case (k, p) =>
@@ -170,14 +185,15 @@ object Checkpoint {
           ("max" -> num(p.max)) ~ ("hasZero" -> p.hasZero) ~ ("distinct" -> p.distinct) }) ~
       ("lrAuc" -> doubles(st.lrAuc)) ~
       ("layers" -> st.layers.map(l => ("complexity" -> l.complexity) ~
-        ("enumerated" -> l.enumerated) ~ ("survived" -> l.survived) ~ ("dropped" -> l.dropped)))
+        ("enumerated" -> l.enumerated) ~ ("survived" -> l.survived) ~ ("dropped" -> l.dropped))) ~
+      ("champions" -> st.champions.map(_.fold[JValue](JNull)(scoredJson)))
 
   private def readState(v: JValue): SearchState = SearchState(
     layer = (v \ "layer").extract[Int],
     seen = (v \ "seen").extract[List[String]].toSet,
     fingerprints = (v \ "fingerprints").extract[List[Long]].toSet,
     scores = readDoubles(v \ "scores"),
-    survivors = (v \ "survivors").children.map(readRow),
+    survivors = (v \ "survivors").children.map(readScored).toVector,
     fit = FitStats((v \ "fit").asInstanceOf[JObject].obj.map { case (k, vs) =>
       k -> vs.children.map(dbl).toIndexedSeq }.toMap),
     profiles = (v \ "profiles").children.map { p =>
@@ -187,5 +203,6 @@ object Checkpoint {
         (p \ "hasZero").extract[Boolean], (p \ "distinct").extract[Long]) }.toMap,
     lrAuc = readDoubles(v \ "lrAuc"),
     layers = (v \ "layers").children.map(l => LayerLog((l \ "complexity").extract[Int],
-      (l \ "enumerated").extract[Int], (l \ "survived").extract[Int], (l \ "dropped").extract[Int])))
+      (l \ "enumerated").extract[Int], (l \ "survived").extract[Int], (l \ "dropped").extract[Int])),
+    champions = (v \ "champions").children.map(c => Option.when(c != JNull)(readScored(c))))
 }

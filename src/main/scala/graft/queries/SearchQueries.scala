@@ -351,7 +351,7 @@ object SearchQueries {
     // Checkpoint resumability under the driver gate (north rule: resumable
     // from snapshot checkpoints): a search stopped after layer 2 and resumed
     // from its manifest must land on the BIT-IDENTICAL survivor set, scores,
-    // and champion as an uninterrupted run.
+    // layer log and champion as an uninterrupted run.
     "q_resume" -> ((s, dir) => {
       import s.implicits._
       import graft.exprs._
@@ -381,7 +381,7 @@ object SearchQueries {
         def canon(r: CdfcResult) = r.survivors
           .map(sc => (sc.key, sc.complexity, math.rint(sc.score * 1e9), sc.passed, sc.inherited))
           .sortBy(_._1)
-        val resumeOk = canon(resumed) == canon(fresh)
+        val resumeOk = canon(resumed) == canon(fresh) && resumed.layers == fresh.layers
         val bestOk = resumed.best.key == fresh.best.key &&
           math.abs(resumed.best.score - fresh.best.score) < 1e-12
         Seq((b2l(resumeOk), b2l(bestOk))).toDF("resume_ok", "best_ok")

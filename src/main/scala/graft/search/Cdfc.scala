@@ -31,16 +31,25 @@ import org.apache.spark.sql.functions._
   * the Spark-shaped concession: the reference fits LR for every candidate,
   * which at lattice width is strictly dominated by prefilter + top-K exact.
   *
+  * The search state is one value, [[graft.checkpoint.Checkpoint.SearchState]],
+  * and each layer is a step from state to state. A fresh run starts from
+  * the empty state, a resumed run from the newest committed one, and both
+  * take the same loop, which tests the stop rules before every layer after
+  * the first: a resume skips every completed layer, the raw-column profile
+  * pass and, past layer 2, the one-hot values job, and stops where the
+  * fresh run stops. The pool derives from the state's survivors; the stop
+  * rules and the result's `best` from the champion recorded per layer.
+  *
   * Scale shape: per layer, one profile pass and one MI-score pass over
   * one wide select of all candidates (each a shuffle-free row pass: one
   * job, no exchange), then one batched LR re-score, plus the fit jobs of
-  * the layer's fitted ops. Layer 1 scores from the raw-column profile pass
-  * and reads every categorical's one-hot values in one more job; a
-  * checkpointed run counts its input lineage once; a layer commit runs no
-  * job. Measured on the `search_lr` benchmark (cMax 2, AQE on, traced
-  * seeds 7 and 108): 26 jobs per search — layer 1: profile 1, one-hot
-  * values 1, MI 1, LR 6, lineage 1; layer 2: fits 8, profile 1, MI 1,
-  * LR 6.
+  * the layer's fitted ops. Layer 1 scores from the raw-column profile
+  * pass; layer 2 reads every categorical's one-hot values in one more
+  * job; a checkpointed run counts its input lineage once; a layer commit
+  * runs no job. Measured on the `search_lr` benchmark (cMax 2, AQE on,
+  * traced seeds 7 and 108): 26 jobs per search — layer 1: profile 1, MI
+  * 1, LR 6, lineage 1; layer 2: one-hot values 1, fits 8, profile 1, MI
+  * 1, LR 6.
   * No candidate column is ever collected; the only shuffles are the
   * windows of GroupByThen candidates (all candidates with the same key
   * share one exchange).
@@ -119,7 +128,7 @@ final class Cdfc(
     checkpointDir: Option[String] = None) {
 
   import graft.checkpoint.Checkpoint
-  import graft.checkpoint.Checkpoint.{SearchState, SurvivorRow}
+  import graft.checkpoint.Checkpoint.SearchState
 
   // NOTE on persisting the base: measured 4x SLOWER at sf0.1 (239s vs 55s
   // for the flagship search) — the columnar cache build + per-job decompress
@@ -127,286 +136,252 @@ final class Cdfc(
   // rows the caller should persist the base input itself; the search does
   // not force it.
   def run(): CdfcResult = {
-    val seen = collection.mutable.HashSet[String]()
-    val fingerprints = collection.mutable.HashSet[Long]()
-    val scores = collection.mutable.HashMap[String, Double]()
-    val profiles = collection.mutable.HashMap[String, ColumnProfile]()
-    var fit = FitStats.empty
-    val survivors = collection.mutable.ArrayBuffer[Scored]()
-    val layerLog = collection.mutable.ArrayBuffer[LayerLog]()
-    // per-complexity candidate pool for enumeration (passed candidates only,
-    // reference buckets `cost_2_*`, `ComplexityDrivenFeatureConstruction.py:572-589`)
-    val byComplexity = collection.mutable.HashMap[Int, Vector[FeatureExpr]]().withDefaultValue(Vector.empty)
+    // the input's per-partition row counts, counted once per run: every
+    // layer's manifest carries the same lineage
+    lazy val lineage = Checkpoint.partitionRows(df)
+    var st = checkpointDir.flatMap(d => Checkpoint.load(d, cfg.cMax)).getOrElse(SearchState.empty)
+    // layer 1 runs whatever the stop rules say
+    while (st.layer == 0 || !Cdfc.stops(st, cfg)) {
+      val t0 = System.nanoTime()
+      st = step(st)
+      checkpointDir.foreach(d =>
+        Checkpoint.save(d, st, (System.nanoTime() - t0) / 1000000L, lineage))
+    }
+    val best = st.champions(st.champions.size - 1 - Cdfc.nonImproving(st))
+      .getOrElse(throw new IllegalStateException("no candidate survived"))
+    CdfcResult(best, st.survivors, st.layers, st.fit, st.lrAuc)
+  }
 
-    // ---- layer 1: raw numeric features -------------------------------
-    val rawProfiles = Profiler.profile(df,
-      rawNumeric.map(n => n -> col(n)), rawCategorical.map(n => n -> col(n)))
-    profiles ++= rawProfiles
-    val layer1 = rawNumeric.map(RawCol(_))
+  /** Layer `st.layer + 1`: from the state committed after one layer to the
+    * state after the next. Layer 1 profiles the raw columns and scores the
+    * raw numerics; layer c > 1 enumerates from the pool (layer 2 adds the
+    * raw categoricals' one-hots), filters and caps, then scores.
+    */
+  private def step(st: SearchState): SearchState = {
+    val layer = st.layer + 1
+    val next =
+      if (layer == 1) {
+        val raw = Profiler.profile(df,
+          rawNumeric.map(n => n -> col(n)), rawCategorical.map(n => n -> col(n)))
+        evaluate(st.copy(layer = 1, profiles = st.profiles ++ raw), rawNumeric.map(RawCol(_)))
+      } else {
+        // the pool of complexity c: survivors that passed the gate or were
+        // inherited, in survivor order (reference buckets `cost_2_*`,
+        // `ComplexityDrivenFeatureConstruction.py:572-589`); an LR-rejected
+        // survivor does not compose further
+        val pool = st.survivors.filter(s => s.passed || s.inherited).groupBy(_.complexity)
+          .map { case (c, ss) => c -> ss.map(_.expr) }.withDefaultValue(Vector.empty)
+        // one-hots: generated once from raw categoricals (OneHotGenerator),
+        // complexity 2, always pass the gate (`run_evaluation.py:370`)
+        val oneHots =
+          if (layer != 2) Seq.empty
+          else rawCategorical.zip(Profiler.distinctValues(df, rawCategorical.map(col), limit = 32))
+            .flatMap { case (n, vs) => vs.map(v => Unary(UnaryOp.EqualsStr(v), RawCol(n))) }
+        val enumerated = Cdfc.enumerate(layer, pool, oneHots, groupKeys, cfg)
+        // the applicability rule memoizes the profiles it derives
+        val known = collection.mutable.HashMap[String, ColumnProfile]() ++= st.profiles
+        val freshAll = enumerated.filter { e =>
+          val k = Canon.key(e)
+          !Canon.isConstant(e) && !st.seen.contains(k) && Applicability.applicable(e, known)
+        }.distinctBy(Canon.key)
+        // width cap: never a silent enumeration-order truncation — overflow is
+        // ordered deterministically by best-parent score (promising parents
+        // first, canonical key as the tie-break), and the drop is counted in
+        // the layer log and announced
+        val fresh =
+          if (freshAll.size <= cfg.maxLayerWidth) freshAll
+          else freshAll.sortBy(e => (-Cdfc.maxParentScore(e, st.scores), Canon.key(e)))
+            .take(cfg.maxLayerWidth)
+        val dropped = freshAll.size - fresh.size
+        if (dropped > 0)
+          System.err.println(s"[cdfc] layer $layer: maxLayerWidth=${cfg.maxLayerWidth} " +
+            s"dropped $dropped of ${freshAll.size} candidates (kept top by parent score)")
+        val after = evaluate(st.copy(layer = layer, profiles = known.toMap), fresh)
+        after.copy(layers = after.layers :+
+          LayerLog(layer, enumerated.size, after.survivors.size - st.survivors.size, dropped))
+      }
+    next.copy(champions = next.champions :+ champion(next))
+  }
 
-    // one-hots: generated once from raw categoricals (OneHotGenerator),
-    // complexity 2, always pass the gate (`run_evaluation.py:370`)
-    val oneHots: Seq[FeatureExpr] =
-      rawCategorical.zip(Profiler.distinctValues(df, rawCategorical.map(col), limit = 32))
-        .flatMap { case (n, vs) => vs.map(v => Unary(UnaryOp.EqualsStr(v), RawCol(n))) }
+  /** Scores `candidates` of complexity `st.layer` into `st`: MI-gated in
+    * batches, the affine ones inherited, then (with `lrTopK > 0`) the
+    * layer's top survivors re-scored by the LR oracle.
+    */
+  private def evaluate(st: SearchState, candidates: Seq[FeatureExpr]): SearchState = {
+    if (candidates.isEmpty) return st
+    val cost = st.layer
+    var seen = st.seen
+    var fingerprints = st.fingerprints
+    var scores = st.scores
+    var profiles = st.profiles
+    var survivors = st.survivors
+    // affine-invariance skip rule (`run_evaluation.py:313-330`): -x, a+b,
+    // a-b inherit the best parent score without evaluation
+    val (inherit, toEval) = candidates.partition {
+      case Unary(UnaryOp.Minus, _)                  => true
+      case BinaryE(BinOp.Add | BinOp.Sub, _, _)     => true
+      case _                                        => false
+    }
+    val fit = Fitter.fit(df, toEval ++ inherit, known = st.fit, label = Some(label))
 
-    // ---- helpers -----------------------------------------------------
-    def enumerateLayer(cost: Int, oneHots: Seq[FeatureExpr]): Seq[FeatureExpr] =
-      Cdfc.enumerate(cost, byComplexity, oneHots, groupKeys, cfg)
-
-    def parentsOf(e: FeatureExpr): Seq[FeatureExpr] = e match {
-      case Unary(_, ch)          => Seq(ch)
-      case BinaryE(_, l, r)      => Seq(l, r)
-      case GroupByThenE(_, v, k) => Seq(v, k)
-      case _                     => Seq.empty
+    toEval.grouped(cfg.batchSize).foreach { batch =>
+      val named = batch.map(e => Lower.alias(e) -> e)
+      val cols = LayerBuilder.columns(df, named, fit)
+      // raw columns already have their profile from layer 1's raw-column
+      // pass; MIScorer profiles the others (runtime bin bounds, not
+      // analytic ones: those are conservative and would skew the bins)
+      val known = named.collect { case (n, RawCol(c)) if st.profiles.contains(c) =>
+        n -> st.profiles(c) }.toMap
+      val stats = MIScorer.scoreBatch(df, cols, label, cfg.bins, known)
+      named.foreach { case (n, e) =>
+        val fs = stats(n)
+        val k = Canon.key(e)
+        seen += k
+        profiles += k -> fs.profile.copy(name = k)
+        val isConstant = fs.profile.distinct <= 1
+        val isDup = fingerprints.contains(fs.fingerprint)
+        if (!isConstant && !isDup) {
+          fingerprints += fs.fingerprint
+          scores += k -> fs.mi
+          val gain = fs.mi - Cdfc.maxParentScore(e, scores)
+          if (Cdfc.isRawOrOneHot(e) || gain > cfg.epsilon)
+            survivors :+= Scored(e, k, cost, fs.mi, passed = true, inherited = false)
+        }
+      }
     }
 
-    def maxParentScore(e: FeatureExpr): Double = {
-      val ss = parentsOf(e).flatMap(p => scores.get(Canon.key(p)))
-      if (ss.isEmpty) 0.0 else ss.max
+    inherit.foreach { e =>
+      val k = Canon.key(e)
+      seen += k
+      val s = Cdfc.maxParentScore(e, scores)
+      scores += k -> s
+      // inherited candidates stay in the pool but cannot pass the epsilon
+      // gate themselves (gain 0); reference keeps them for composition
+      survivors :+= Scored(e, k, cost, s, passed = false, inherited = true)
     }
 
-    // ---- exact LR oracle for the layer's top survivors ----------------
-    // (two-stage: MI gates the lattice, CV-LR AUC re-scores and re-gates
-    // the top-K survivors per layer; lrScores memoizes candidate AND
-    // parent AUCs so gains compare like with like)
-    val lrScores = collection.mutable.HashMap[String, Double]()
-    lazy val dfLr = df.withColumn("__cdfc_label", label)
-    /** Batched LR oracle for a layer's to-score set: ONE wide
-      * `LayerBuilder.select` holds every candidate's feature column, and
-      * [[LrScorer.scoreAll]] fits every candidate x fold x grid model of the
-      * layer together. Each candidate's fold hash covers `dfLr.columns :+
-      * its own feature` — exactly the per-candidate matrix a
-      * one-select-per-candidate path would build (same columns, same
-      * values), so its folds do not depend on which other candidates share
-      * the layer.
-      *
-      * Keep EVERY input column in the fold matrix: the fold hash needs
-      * full-row entropy, or a low-cardinality candidate (one-hot, group
-      * mean over few keys) collapses whole value-groups into one fold.
-      */
-    def lrAucBatch(es: Seq[FeatureExpr]): Seq[(String, Double)] = {
-      if (es.isEmpty) return Seq.empty
-      val named = es.zipWithIndex.map { case (e, i) => s"__lr_c$i" -> e }
-      val matAll = LayerBuilder.select(dfLr, dfLr.columns.toSeq, named, fit)
-      val scores = LrScorer.scoreAll(matAll,
-        named.map { case (n, _) => LrScorer.Candidate(Seq(n), dfLr.columns.toSeq :+ n) },
-        "__cdfc_label", cfg.lrFolds, cfg.lrGrid)
-      // stored ROUNDED (1e-9): every downstream comparison (epsilon gate,
-      // champion maxBy, AICc per-class pick) is tie-sensitive, and an AUC
-      // moves by ULPs when the input is partitioned differently
-      es.zip(scores).map { case (e, s) => Canon.key(e) -> math.rint(s.head.auc * 1e9) / 1e9 }
-    }
+    val scored = st.copy(seen = seen, fingerprints = fingerprints, scores = scores,
+      survivors = survivors, fit = fit, profiles = profiles)
+    if (cfg.lrTopK > 0) lrRescore(scored, st.survivors.size) else scored
+  }
+
+  // ---- exact LR oracle for the layer's top survivors ----------------
+  // (two-stage: MI gates the lattice, CV-LR AUC re-scores and re-gates
+  // the top-K survivors per layer; lrAuc memoizes candidate AND parent
+  // AUCs so gains compare like with like)
+  private lazy val dfLr = df.withColumn("__cdfc_label", label)
+
+  /** Batched LR oracle for a layer's to-score set: ONE wide
+    * `LayerBuilder.select` holds every candidate's feature column, and
+    * [[LrScorer.scoreAll]] fits every candidate x fold x grid model of the
+    * layer together. Each candidate's fold hash covers `dfLr.columns :+
+    * its own feature` — exactly the per-candidate matrix a
+    * one-select-per-candidate path would build (same columns, same
+    * values), so its folds do not depend on which other candidates share
+    * the layer.
+    *
+    * Keep EVERY input column in the fold matrix: the fold hash needs
+    * full-row entropy, or a low-cardinality candidate (one-hot, group
+    * mean over few keys) collapses whole value-groups into one fold.
+    */
+  private def lrAucBatch(es: Seq[FeatureExpr], fit: FitStats): Seq[(String, Double)] = {
+    if (es.isEmpty) return Seq.empty
+    val named = es.zipWithIndex.map { case (e, i) => s"__lr_c$i" -> e }
+    val matAll = LayerBuilder.select(dfLr, dfLr.columns.toSeq, named, fit)
+    val scores = LrScorer.scoreAll(matAll,
+      named.map { case (n, _) => LrScorer.Candidate(Seq(n), dfLr.columns.toSeq :+ n) },
+      "__cdfc_label", cfg.lrFolds, cfg.lrGrid)
+    // stored ROUNDED (1e-9): every downstream comparison (epsilon gate,
+    // champion maxBy, AICc per-class pick) is tie-sensitive, and an AUC
+    // moves by ULPs when the input is partitioned differently
+    es.zip(scores).map { case (e, s) => Canon.key(e) -> math.rint(s.head.auc * 1e9) / 1e9 }
+  }
+
+  /** Re-scores the top-`lrTopK` passed survivors from index `startIdx` on
+    * (the layer's new ones) by CV-LR AUC and re-gates them on AUC gain. */
+  private def lrRescore(st: SearchState, startIdx: Int): SearchState = {
+    val known = collection.mutable.HashMap[String, ColumnProfile]() ++= st.profiles
     // parents whose AUC participates in the LR gain: the group KEY of a
     // GroupByThen is not a feature, and a categorical raw column (a one-hot
     // child) cannot be LR-fitted — both are excluded from gain baselines
     def lrGainParents(e: FeatureExpr): Seq[FeatureExpr] = {
       val ps = e match {
         case GroupByThenE(_, v, _) => Seq(v)
-        case other                 => parentsOf(other)
+        case other                 => Cdfc.parentsOf(other)
       }
-      ps.filter(p => profileOf(p, profiles).forall(_.isNumeric))
+      ps.filter(p => profileOf(p, known).forall(_.isNumeric))
     }
-    def lrRescore(startIdx: Int, cost: Int): Unit = {
-      val layerNew = (startIdx until survivors.size)
-        .map(i => i -> survivors(i)).filter { case (_, s) => s.passed && !s.inherited }
-      if (layerNew.isEmpty) return
-      val top = layerNew.sortBy { case (_, s) => (-s.score, s.key) }.take(cfg.lrTopK)
-      val need = (top.map(_._2.expr) ++ top.flatMap(t => lrGainParents(t._2.expr)))
-        .distinctBy(Canon.key).filterNot(e => lrScores.contains(Canon.key(e)))
-      lrScores ++= lrAucBatch(need)
-      top.foreach { case (i, s) =>
-        val auc = lrScores(s.key)
-        val parentAuc = lrGainParents(s.expr).flatMap(p => lrScores.get(Canon.key(p)))
-          .maxOption.getOrElse(0.5)
-        val pass = Cdfc.isRawOrOneHot(s.expr) || auc - parentAuc > cfg.epsilon
-        survivors(i) = s.copy(score = auc, passed = pass)
-        if (!pass)
-          byComplexity(cost) = byComplexity(cost).filterNot(ee => Canon.key(ee) == s.key)
-      }
+    val layerNew = (startIdx until st.survivors.size)
+      .map(i => i -> st.survivors(i)).filter { case (_, s) => s.passed && !s.inherited }
+    if (layerNew.isEmpty) return st
+    val top = layerNew.sortBy { case (_, s) => (-s.score, s.key) }.take(cfg.lrTopK)
+    val need = (top.map(_._2.expr) ++ top.flatMap(t => lrGainParents(t._2.expr)))
+      .distinctBy(Canon.key).filterNot(e => st.lrAuc.contains(Canon.key(e)))
+    val lrAuc = st.lrAuc ++ lrAucBatch(need, st.fit)
+    val survivors = top.foldLeft(st.survivors) { case (ss, (i, s)) =>
+      val auc = lrAuc(s.key)
+      val parentAuc = lrGainParents(s.expr).flatMap(p => lrAuc.get(Canon.key(p)))
+        .maxOption.getOrElse(0.5)
+      ss.updated(i, s.copy(score = auc,
+        passed = Cdfc.isRawOrOneHot(s.expr) || auc - parentAuc > cfg.epsilon))
     }
-
-    def evaluate(candidates: Seq[FeatureExpr], cost: Int): Unit = {
-      if (candidates.isEmpty) return
-      val startIdx = survivors.size
-      // affine-invariance skip rule (`run_evaluation.py:313-330`): -x, a+b,
-      // a-b inherit the best parent score without evaluation
-      val (inherit, toEval) = candidates.partition {
-        case Unary(UnaryOp.Minus, _)                  => true
-        case BinaryE(BinOp.Add | BinOp.Sub, _, _)     => true
-        case _                                        => false
-      }
-      fit = Fitter.fit(df, toEval ++ inherit, known = fit, label = Some(label))
-
-      toEval.grouped(cfg.batchSize).foreach { batch =>
-        val named = batch.map(e => Lower.alias(e) -> e)
-        val cols = LayerBuilder.columns(df, named, fit)
-        // raw columns already have their profile from the layer-1 pass
-        // (`rawProfiles`); MIScorer profiles the others (runtime bin bounds,
-        // not analytic ones: those are conservative and would skew the bins)
-        val known = named.collect { case (n, RawCol(c)) if rawProfiles.contains(c) =>
-          n -> rawProfiles(c) }.toMap
-        val stats = MIScorer.scoreBatch(df, cols, label, cfg.bins, known)
-        named.foreach { case (n, e) =>
-          val st = stats(n)
-          val k = Canon.key(e)
-          seen += k
-          profiles(k) = st.profile.copy(name = k)
-          val isConstant = st.profile.distinct <= 1
-          val isDup = fingerprints.contains(st.fingerprint)
-          if (!isConstant && !isDup) {
-            fingerprints += st.fingerprint
-            scores(k) = st.mi
-            val gain = st.mi - maxParentScore(e)
-            val passed = Cdfc.isRawOrOneHot(e) || gain > cfg.epsilon
-            if (passed) {
-              survivors += Scored(e, k, cost, st.mi, passed = true, inherited = false)
-              byComplexity(cost) = byComplexity(cost) :+ e
-            }
-          }
-        }
-      }
-
-      inherit.foreach { e =>
-        val k = Canon.key(e)
-        seen += k
-        val s = maxParentScore(e)
-        scores(k) = s
-        // inherited candidates stay in the pool but cannot pass the epsilon
-        // gate themselves (gain 0); reference keeps them for composition
-        byComplexity(cost) = byComplexity(cost) :+ e
-        survivors += Scored(e, k, cost, s, passed = false, inherited = true)
-      }
-
-      if (cfg.lrTopK > 0) lrRescore(startIdx, cost)
-    }
-
-    // ---- checkpoint hooks --------------------------------------------
-    def toRow(s: Scored): SurvivorRow =
-      SurvivorRow(s.complexity, s.key, s.score, s.complexity, s.passed, s.inherited)
-    // the input's per-partition row counts, counted once per run: every
-    // layer's manifest carries the same lineage
-    lazy val lineage = Checkpoint.partitionRows(df)
-    def commitLayer(layer: Int, newRows: Seq[Scored], t0: Long): Unit =
-      checkpointDir.foreach { d =>
-        Checkpoint.save(d, SearchState(layer, seen.toSet, fingerprints.toSet,
-            scores.toMap, survivors.map(toRow).toSeq, fit, profiles.toMap, lrScores.toMap,
-            layerLog.toSeq),
-          newRows.map(toRow), (System.nanoTime() - t0) / 1000000L, lineage)
-      }
-    val restored = checkpointDir.flatMap(d => Checkpoint.load(d, cfg.cMax))
-    restored.foreach { st =>
-      seen ++= st.seen; fingerprints ++= st.fingerprints; scores ++= st.scores
-      fit = st.fit; profiles ++= st.profiles; lrScores ++= st.lrAuc
-      layerLog ++= st.layers
-      st.survivors.foreach { r =>
-        val e = FeatureExprParser.parse(r.expr)
-        survivors += Scored(e, r.expr, r.complexity, r.score, r.passed, r.inherited)
-        // pool membership mirrors the fresh run: passed candidates and
-        // inherited (affine) ones compose further; an LR-rejected survivor
-        // (passed=false, not inherited) was REMOVED from the pool by
-        // lrRescore and must stay out after a resume too
-        if (r.passed || r.inherited)
-          byComplexity(r.complexity) = byComplexity(r.complexity) :+ e
-      }
-    }
-
-    // harmonic-mean auto-stop machinery (reference `:266-318`, over the
-    // cumulative per-complexity candidate buckets = our survivor pool)
-    def accuracyScore(score: Double, upTo: Int): Double = {
-      val pool = survivors.filter(_.complexity <= upTo)
-      if (pool.isEmpty) 0.0 else pool.count(_.score <= score).toDouble / pool.size
-    }
-    def simplicityScore(comp: Int, upTo: Int): Double = {
-      val pool = survivors.filter(_.complexity <= upTo)
-      if (pool.isEmpty) 0.0 else pool.count(_.complexity >= comp).toDouble / pool.size
-    }
-
-    // champion channel: with the LR stage on, the champion is the best
-    // LR-SCORED candidate by AUC (the LR set = each layer's top-K + their
-    // gain parents) — an AUC is never compared against an MI value, which
-    // would let a non-rescored or inherited candidate win on the wrong
-    // scale. Without LR, it is the best MI survivor as before.
-    def champion: Option[Scored] =
-      if (cfg.lrTopK > 0)
-        survivors.flatMap(s => lrScores.get(s.key).map(a => s.copy(score = a)))
-          .maxByOption(s => (s.score, s.key))
-      else survivors.maxByOption(_.score)
-
-    // ---- layer loop --------------------------------------------------
-    if (restored.isEmpty) {
-      val t0 = System.nanoTime()
-      evaluate(layer1, 1)
-      commitLayer(1, survivors.toSeq, t0)
-    }
-    var best = champion
-    var nonImproving = 0
-    // champion (global best) snapshot after each layer, for harmonic stop
-    val bestAfterLayer = collection.mutable.HashMap[Int, Scored]()
-    best.foreach(b => bestAfterLayer(1) = b)
-    // on resume, reconstruct per-layer champions from the restored
-    // survivors (champion after layer L = best score at complexity <= L) so
-    // the harmonic-stop decision after resume matches a fresh run
-    restored.foreach { st =>
-      (1 to st.layer).foreach { l =>
-        survivors.filter(_.complexity <= l).maxByOption(_.score)
-          .foreach(b => bestAfterLayer(l) = b)
-      }
-    }
-    var harmonicStopHit = false
-    var layer = restored.map(_.layer + 1).getOrElse(2)
-    while (layer <= cfg.cMax && nonImproving < cfg.stopAfterNonImproving && !harmonicStopHit) {
-      val t0 = System.nanoTime()
-      val enumerated = enumerateLayer(layer, oneHots)
-      val freshAll = enumerated.filter { e =>
-        val k = Canon.key(e)
-        !Canon.isConstant(e) && !seen.contains(k) && Applicability.applicable(e, profiles)
-      }.distinctBy(Canon.key)
-      // width cap: never a silent enumeration-order truncation — overflow is
-      // ordered deterministically by best-parent score (promising parents
-      // first, canonical key as the tie-break), and the drop is counted in
-      // the layer log and announced
-      val fresh =
-        if (freshAll.size <= cfg.maxLayerWidth) freshAll
-        else freshAll.sortBy(e => (-maxParentScore(e), Canon.key(e))).take(cfg.maxLayerWidth)
-      val dropped = freshAll.size - fresh.size
-      if (dropped > 0)
-        System.err.println(s"[cdfc] layer $layer: maxLayerWidth=${cfg.maxLayerWidth} " +
-          s"dropped $dropped of ${freshAll.size} candidates (kept top by parent score)")
-      val survivedBefore = survivors.size
-      evaluate(fresh, layer)
-      layerLog += LayerLog(layer, enumerated.size, survivors.size - survivedBefore, dropped)
-      commitLayer(layer, survivors.drop(survivedBefore).toSeq, t0)
-      val newBest = champion
-      if (newBest.map(_.score) == best.map(_.score)) nonImproving += 1
-      else { nonImproving = 0; best = newBest }
-      newBest.foreach(b => bestAfterLayer(layer) = b)
-      if (cfg.harmonicStop && layer > 2) {
-        val hms = (0 to 2).map { hI =>
-          bestAfterLayer.get(layer - hI).map { ch =>
-            Traversals.harmonicMean(
-              simplicityScore(ch.complexity, layer),
-              accuracyScore(ch.score, layer))
-          }.getOrElse(0.0)
-        }
-        // hms(2) = champion two layers back; dominance => stop
-        if (hms(2) >= hms(1) && hms(2) >= hms(0)) harmonicStopHit = true
-      }
-      layer += 1
-    }
-
-    val b = best.getOrElse(throw new IllegalStateException("no candidate survived"))
-    CdfcResult(b, survivors.toSeq, layerLog.toSeq, fit, lrScores.toMap)
+    st.copy(survivors = survivors, profiles = known.toMap, lrAuc = lrAuc)
   }
+
+  // champion channel: with the LR stage on, the champion is the best
+  // LR-SCORED candidate by AUC (the LR set = each layer's top-K + their
+  // gain parents) — an AUC is never compared against an MI value, which
+  // would let a non-rescored or inherited candidate win on the wrong
+  // scale. Without LR, it is the best MI survivor as before.
+  private def champion(st: SearchState): Option[Scored] =
+    if (cfg.lrTopK > 0)
+      st.survivors.flatMap(s => st.lrAuc.get(s.key).map(a => s.copy(score = a)))
+        .maxByOption(s => (s.score, s.key))
+    else st.survivors.maxByOption(_.score)
 }
 
 object Cdfc {
+  import graft.checkpoint.Checkpoint.SearchState
+
   /** Raw columns and one-hots always pass the epsilon gate
     * (`run_evaluation.py:370`). */
   private def isRawOrOneHot(e: FeatureExpr): Boolean = e match {
     case RawCol(_) | Unary(UnaryOp.EqualsStr(_), _) => true
     case _                                          => false
   }
+
+  private def parentsOf(e: FeatureExpr): Seq[FeatureExpr] = e match {
+    case Unary(_, ch)          => Seq(ch)
+    case BinaryE(_, l, r)      => Seq(l, r)
+    case GroupByThenE(_, v, k) => Seq(v, k)
+    case _                     => Seq.empty
+  }
+
+  private def maxParentScore(e: FeatureExpr, scores: Map[String, Double]): Double =
+    parentsOf(e).flatMap(p => scores.get(Canon.key(p))).maxOption.getOrElse(0.0)
+
+  /** Trailing layers whose champion score equals the previous layer's. */
+  private def nonImproving(st: SearchState): Int = {
+    val s = st.champions.map(_.map(_.score))
+    s.zip(s.drop(1)).reverseIterator.takeWhile { case (a, b) => a == b }.size
+  }
+
+  /** The stop rules, tested on the state after layer `st.layer`: the layer
+    * cap, `stopAfterNonImproving` non-improving layers, and the reference's
+    * harmonic-mean auto-stop (`ComplexityDrivenFeatureConstruction.py:
+    * 660-676`): after layer c > 2, stop when the champion two layers back
+    * dominates both later champions in harmonic mean of simplicity and
+    * accuracy over the survivor pool (`:266-318`).
+    */
+  private def stops(st: SearchState, cfg: CdfcConfig): Boolean =
+    st.layer >= cfg.cMax || nonImproving(st) >= cfg.stopAfterNonImproving ||
+      cfg.harmonicStop && st.layer > 2 && {
+        val pool = st.survivors.map(s => Traversals.Rep(s.expr, s.score, s.complexity))
+        val hms = st.champions.takeRight(3).map(_.fold(0.0)(ch =>
+          Traversals.hScore(Traversals.Rep(ch.expr, ch.score, ch.complexity), pool)))
+        // hms(0) = champion two layers back; dominance => stop
+        hms(0) >= hms(1) && hms(0) >= hms(2)
+      }
 
   /** Layer enumeration, exposed for direct testing: all candidates of
     * exactly `cost` nodes from the per-complexity pools.

@@ -209,6 +209,8 @@ class CdfcSpec extends SparkSpec {
         .sortBy(_._1)
       assert(canon(resumed) == canon(fresh))
       assert(resumed.best.key == fresh.best.key)
+      assert(resumed.best.score == fresh.best.score)
+      assert(resumed.layers == fresh.layers)
     } finally rmrf(ckdir)
   }
 
