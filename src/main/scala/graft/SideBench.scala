@@ -4,6 +4,7 @@ import graft.exprs.PortableRound.col6
 import graft.transcripts.Transcripts
 import graft.windows.{AsOfJoin, WindowFeatures}
 import org.apache.spark.GraftBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -90,15 +91,19 @@ object SideBench {
     Timed(rs.last._1, rs.map(_._2))
   }
 
-  /** Sums since the previous [[Recorder.take]]; `peakExecMem` is a max. */
+  /** Sums since the previous [[Recorder.take]]; `peakExecMem` is a max;
+    * `compiles` counts generated classes compiled (codegen cache misses).
+    */
   final case class Counts(jobs: Long, tasks: Long, memSpilled: Long, diskSpilled: Long,
-      gcMs: Long, runMs: Long, peakExecMem: Long)
+      gcMs: Long, runMs: Long, peakExecMem: Long, compiles: Long)
 
   /** The one measurement listener: jobs and wall time per call site (the
     * innermost `graft.` frame of the job's last stage, else of its SQL
     * execution — AQE submits stages from its own threads — else the stage
-    * name), job and task counts, and task spill / GC / run time / peak
-    * execution memory. Every read drains the listener bus first, so a job
+    * name), job and task counts, task spill / GC / run time / peak
+    * execution memory, and the JVM's generated-class compiles (Spark's
+    * `CodegenMetrics`: when the codegen cache thrashes, a run compiles its
+    * classes again). Every read drains the listener bus first, so a job
     * that ran is never counted against the next measurement. [[close]]
     * detaches it.
     */
@@ -108,6 +113,7 @@ object SideBench {
     private val sites = new ConcurrentHashMap[String, (Long, Long)]()
     private val execStacks = new ConcurrentHashMap[Long, String]()
     private val jobs, tasks, memSpilled, diskSpilled, gcMs, runMs, peak = new AtomicLong
+    private var compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     sc.addSparkListener(this)
 
     private def graftFrame(stack: String): Option[String] =
@@ -148,8 +154,12 @@ object SideBench {
 
     def take(): Counts = {
       GraftBridge.waitUntilListenerBusEmpty(sc)
-      Counts(jobs.getAndSet(0L), tasks.getAndSet(0L), memSpilled.getAndSet(0L),
-        diskSpilled.getAndSet(0L), gcMs.getAndSet(0L), runMs.getAndSet(0L), peak.getAndSet(0L))
+      val compiledNow = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val c = Counts(jobs.getAndSet(0L), tasks.getAndSet(0L), memSpilled.getAndSet(0L),
+        diskSpilled.getAndSet(0L), gcMs.getAndSet(0L), runMs.getAndSet(0L), peak.getAndSet(0L),
+        compiledNow - compiled)
+      compiled = compiledNow
+      c
     }
 
     /** (call site, jobs, seconds), most time first. */
@@ -173,9 +183,10 @@ object SideBench {
   }
 
   /** Times declared queries on the caller's session (left running): prints
-    * reps, checksum and jobs/tasks per run, then the 40 costliest call sites;
-    * returns timings and listener sums over reps + warm-up (a failed query
-    * prints its error and is skipped). `plansDir` gets each plan's explain.
+    * reps, checksum and jobs/generated-class compiles/tasks per run, then
+    * the 40 costliest call sites; returns timings and listener sums over
+    * reps + warm-up (a failed query prints its error and is skipped).
+    * `plansDir` gets each plan's explain.
     */
   def queries(spark: SparkSession, sfDir: String, names: Seq[String], reps: Int,
       plansDir: Option[String] = None): Seq[(String, Timed, Counts)] = {
@@ -196,8 +207,8 @@ object SideBench {
           val t = minOf(reps)(Bench.force(fn(spark, sfDir)))
           val c = rec.take()
           // the warm-up is one more run of the same query
-          val (jn, tn) = (c.jobs / (reps + 1), c.tasks / (reps + 1))
-          println(f"[queries] $name%-28s min=${t.min}%7.3f jobs/rep=$jn%4d tasks/rep=$tn%5d " +
+          val (jn, tn, cn) = (c.jobs / (reps + 1), c.tasks / (reps + 1), c.compiles / (reps + 1))
+          println(f"[queries] $name%-28s min=${t.min}%7.3f jobs/rep=$jn%4d compiles/rep=$cn%4d tasks/rep=$tn%5d " +
             s"chk=${java.lang.Long.toHexString(t.checksum)} reps=${t.secs.map(s => f"$s%.3f").mkString(",")}")
           Some((name, t, c))
         } catch { case e: Exception =>

@@ -130,6 +130,15 @@ object Dedup {
     sh.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** One row per (input row, band): `keep` plus the fields of that band's
+    * struct. One `explode` of the band structs, so the input is scanned once
+    * and the band self-join shuffles one relation, not a union of one
+    * select per band.
+    */
+  private def bandRows(sigs: DataFrame, keep: Seq[Column], bandStructs: Seq[Column]): DataFrame =
+    sigs.select(keep :+ explode(array(bandStructs: _*)).as("__band"): _*)
+      .select(col("*"), col("__band.*")).drop("__band")
+
   /** LSH candidate pairs: band the signature (bands x rowsPerBand = k),
     * bucket-join on (band index, band signature), dedup pairs (a < b).
     *
@@ -142,11 +151,10 @@ object Dedup {
     */
   def lshCandidates(sigs: DataFrame, bands: Int = 4, rowsPerBand: Int = 4,
       id: String = "doc_id", maxBucket: Option[Long] = None): DataFrame = {
-    val banded0 = (0 until bands).map { b =>
-      val sig = concat_ws("_",
-        (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}").cast("string")): _*)
-      sigs.select(col(id), lit(b).as("band"), sig.as("sig"))
-    }.reduce(_ unionByName _)
+    val banded0 = bandRows(sigs, Seq(col(id)), (0 until bands).map { b =>
+      struct(lit(b).as("band"), concat_ws("_",
+        (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}").cast("string")): _*).as("sig"))
+    })
     val banded = maxBucket.fold(banded0) { m =>
       // count window shares the (band, sig) partitioning with the join
       banded0.withColumn("__df", count(lit(1)).over(
@@ -169,10 +177,9 @@ object Dedup {
   def simhashPairs(sigs: DataFrame, maxHamming: Int = 3,
       id: String = "doc_id"): DataFrame = {
     require(maxHamming <= 3, "4 byte-bands only guarantee recall for hamming <= 3")
-    val banded = (0 until 4).map { b =>
-      sigs.select(col(id), col("simhash"), lit(b).as("band"),
-        shiftright(col("simhash"), b * 8).bitwiseAND(255).as("byte"))
-    }.reduce(_ unionByName _)
+    val banded = bandRows(sigs, Seq(col(id), col("simhash")), (0 until 4).map { b =>
+      struct(lit(b).as("band"), shiftright(col("simhash"), b * 8).bitwiseAND(255).as("byte"))
+    })
     val l = banded.as("l"); val r = banded.as("r")
     l.join(r, col("l.band") === col("r.band") && col("l.byte") === col("r.byte") &&
         col(s"l.$id") < col(s"r.$id"))

@@ -153,9 +153,9 @@ object WindowQueries {
 
     "q_asof_join" -> ((s, dir) => asofResult(s, dir, Variant.Shuffle)),
     "q_asof_skew" -> ((s, dir) => asofResult(s, dir, Variant.Skew)),
-    // auto-planned route (cost-based pick from measured stats; on this
-    // fixture the purchase side is dimension-sized -> broadcast shape);
-    // values must equal the same as-of SQL regardless of route
+    // auto-planned route (the left key histogram picks skew buckets or
+    // the plain union+window); values must equal the same as-of SQL
+    // regardless of route
     "q_asof_auto" -> ((s, dir) => asofResult(s, dir, Variant.Auto)),
 
     // time-range aggregate join: purchases in the trailing hour per turn

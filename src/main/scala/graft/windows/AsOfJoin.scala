@@ -2,8 +2,10 @@ package graft.windows
 
 import graft.Route
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /** Point-in-time (as-of) join: for each left row (entity, ts), attach the
   * latest right row with the same entity and `right.ts <= left.ts`.
@@ -84,6 +86,11 @@ object AsOfJoin {
     * executing inside the plan. Semantics identical to [[asOf]] (equal-ts
     * rows visible, greatest `rightSeq` wins); PlanSpec asserts the executed
     * plan has a broadcast join, no left-side exchange, and the expression.
+    *
+    * Not a route of [[auto]]: each left row filters its entity's whole
+    * right array, and that lost to [[asOf]] on measured inputs (see
+    * [[auto]]). It stays for stream-static joins, where it is a
+    * stateless projection that needs no state store, and `q_asof_broadcast`.
     */
   def asOfBroadcast(
       left: DataFrame,
@@ -228,11 +235,7 @@ object AsOfJoin {
     val w = Window.partitionBy(col(entity))
       .orderBy(unix_micros(col("ts")))
       .rangeBetween(-windowSeconds * 1000000L, 0L)
-    aggs.foldLeft(r.unionByName(l, allowMissingColumns = true)) {
-        case (df, (name, agg)) => df.withColumn(name, agg(col("__v")).over(w))
-      }
-      .filter(col("__side") === 1)
-      .select(leftCols.map(col) ++ aggs.map { case (n, _) => col(n) }: _*)
+    windowLeftRows(r.unionByName(l, allowMissingColumns = true), leftCols, w, aggs)
   }
 
   /** Skew-resistant [[rangeAgg]]: event-time buckets + Δ-FRINGE REPLICATION.
@@ -277,30 +280,37 @@ object AsOfJoin {
     val w = Window.partitionBy(col(entity), col("__bucket"))
       .orderBy(unix_micros(col("ts")))
       .rangeBetween(-deltaUs, 0L)
-    aggs.foldLeft(r.unionByName(l, allowMissingColumns = true)) {
-        case (df, (name, agg)) => df.withColumn(name, agg(col("__v")).over(w))
-      }
-      .filter(col("__side") === 1)
-      .select(leftCols.map(col) ++ aggs.map { case (n, _) => col(n) }: _*)
+    windowLeftRows(r.unionByName(l, allowMissingColumns = true), leftCols, w, aggs)
   }
 
-  /** Right sides up to this many rows take [[asOfBroadcast]] in [[auto]].
-    * Unmeasured: the one nearby measurement (`perfbench/BASELINE.md`, 1.3·10⁶
-    * right rows: broadcast 60.3 s vs [[asOf]] 5.3 s) puts the crossover lower.
+  /** Every aggregate of `__v` over `w` in ONE projection, then the left
+    * rows: the window's order expression is extracted once, so all
+    * aggregates share one Sort and one Window operator (a projection per
+    * aggregate re-extracts it and plans a Sort and a Window each).
     */
-  val BroadcastRows = 4000000L
+  private def windowLeftRows(union: DataFrame, leftCols: Seq[String], w: WindowSpec,
+      aggs: Seq[(String, Column => Column)]): DataFrame =
+    union.withColumns(ListMap(aggs.map { case (name, agg) => name -> agg(col("__v")).over(w) }: _*))
+      .filter(col("__side") === 1)
+      .select(leftCols.map(col) ++ aggs.map { case (n, _) => col(n) }: _*)
 
-  /** Auto-planned as-of join: picks the physical shape from observed input
-    * statistics (see [[asOfSkew]]'s scaladoc and `graft.SideBench skew`):
+  /** Auto-planned as-of join: picks the physical shape from the left key
+    * histogram ([[graft.Route.keyStats]], one aggregation job):
     *
-    *   1. right side fits a broadcast (`<= BroadcastRows`, one `count`) ->
-    *      [[asOfBroadcast]] — the 100 TB left side never shuffles at all;
-    *   2. else, if the left key histogram ([[graft.Route.keyStats]]) is
-    *      [[graft.Route.skewed]] -> [[asOfSkew]] — a single hot key would
+    *   1. [[graft.Route.skewed]] -> [[asOfSkew]] — a single hot key would
     *      otherwise serialize one window task;
-    *   3. else -> [[asOf]] — one hash exchange, no join node.
+    *   2. else -> [[asOf]] — one hash exchange, no join node.
     *
-    * Both probes are aggregation-only jobs; the broadcast route runs one.
+    * [[asOfBroadcast]] is not a route. Measured at pit_dedup's left size
+    * (4·10⁴ turns over 200 conversations, `local[3]`, medians of 7–11 runs;
+    * `PERF_backfill_ops.json`), it lost to [[asOf]] from 2·10² right rows
+    * on: 0.243 against 0.196 s at 10³, 0.625 against 0.247 s at 1.3·10⁴,
+    * 2.9 against 0.28 s at 10⁵; and 60.3 against 5.3 s at 4·10⁶ left and
+    * 1.3·10⁶ right rows (`perfbench/BASELINE.md`). At 10² the two were
+    * within noise of each other (0.268 against 0.250 s), less apart than
+    * the right-side `count` (0.05–0.09 s) the route needed to be chosen.
+    * Each left row filters its entity's whole right array, so its cost
+    * grows with the right side.
     */
   def auto(
       left: DataFrame,
@@ -308,9 +318,7 @@ object AsOfJoin {
       entity: String,
       valueCols: Seq[String],
       rightSeq: Column): DataFrame =
-    if (right.count() <= BroadcastRows)
-      asOfBroadcast(left, right, entity, valueCols, rightSeq)
-    else if (Route.skewed(Route.keyStats(left, entity), left.sparkSession))
+    if (Route.skewed(Route.keyStats(left, entity), left.sparkSession))
       asOfSkew(left, right, entity, valueCols, rightSeq)
     else
       asOf(left, right, entity, valueCols, rightSeq)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** Point-in-time / windowed feature kernel over transcripts.
   *
   * Every operator here is leakage-free by construction: frames end at the
@@ -16,7 +18,11 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB): all features over one entity key share ONE
   * `Window.partitionBy(conv_id)` exchange — Spark reuses the hash
   * partitioning across every window function with the same partition spec,
-  * so an arbitrarily wide feature select costs exactly one shuffle.
+  * so an arbitrarily wide feature select costs exactly one shuffle. The
+  * window functions of ONE projection that share the partitioning and the
+  * ordering also share one Window operator, while a `withColumn` per
+  * function can plan one each (each with classes to compile); so
+  * [[standardFeatures]] is one projection per dependency level, two in all.
   * Skewed conv_id is handled by event-time range buckets in [[AsOfJoin]]
   * (carry-in stitched for as-of, fringe-replicated for range aggregates)
   * and, for order-insensitive group aggregates, by [[groupByThenSalted]].
@@ -197,18 +203,34 @@ object WindowFeatures {
     else
       groupByThenWindowed(df, keyCol, value, prefix)
 
-  /** All standard per-turn features of the minimum slice (SURVEY §7.2) in one
-    * select — single shuffle on `conv_id`.
+  /** All standard per-turn features of the minimum slice (SURVEY §7.2):
+    * appends `text_len`, `gap_secs`, `prev_role`, `roll5_mean_len`,
+    * `session_id`, `run_mean_len` and `last_tool`, in that order (an input
+    * column of the same name is replaced in place).
+    *
+    * One exchange, one sort and two Window operators: the first select
+    * evaluates every window function over the input in one operator, with
+    * one `lag(ts)` whose microsecond gap `gap_secs` holds until the second
+    * select turns it into seconds and into the session-start flag; the
+    * flag's running sum, `session_id`, is the second operator. Both share
+    * the partitioning and the ordering, so the second needs neither an
+    * exchange nor a sort.
     */
   def standardFeatures(transcripts: DataFrame, sessionGapSeconds: Long = 1800L): DataFrame = {
     val textLen = length(col("text")).cast("double")
+    val gapMicros = col("gap_secs")
     transcripts
-      .withColumn("text_len", textLen)
-      .withColumn("gap_secs", gapSecs())
-      .withColumn("prev_role", lagCol(col("role"), 1))
-      .withColumn("roll5_mean_len", rollingRows(avg, textLen, 5))
-      .withColumn("session_id", sessionId(sessionGapSeconds))
-      .withColumn("run_mean_len", groupByThenAtOrBefore(avg, textLen))
-      .withColumn("last_tool", backfill(col("tool")))
+      .withColumns(ListMap(
+        "text_len" -> textLen,
+        "gap_secs" -> (unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(convWindow()))),
+        "prev_role" -> lagCol(col("role"), 1),
+        "roll5_mean_len" -> rollingRows(avg, textLen, 5),
+        "session_id" -> lit(0), // holds the slot; the second select fills it
+        "run_mean_len" -> groupByThenAtOrBefore(avg, textLen),
+        "last_tool" -> backfill(col("tool"))))
+      .withColumns(ListMap(
+        "gap_secs" -> gapMicros.cast("double") / 1e6,
+        "session_id" -> sum(when(gapMicros > sessionGapSeconds * 1000000L, 1).otherwise(0))
+          .over(atOrBefore()).cast("int")))
   }
 }

@@ -16,6 +16,23 @@ class PlanSpec extends SparkSpec {
   private def countOccurrences(s: String, sub: String): Int =
     s.sliding(sub.length).count(_ == sub)
 
+  /** Physical operators named `op` in a plan string (tree prefixes stripped). */
+  private def operators(p: String, op: String): Int =
+    p.linesIterator.count(_.replaceFirst("^[\\s:+|-]*", "").matches(s"$op(\\s.*)?"))
+
+  /** Turns with every column `standardFeatures` reads, from a local scan:
+    * no exchange of their own, so every exchange in a plan over them is the
+    * operator's.
+    */
+  private def localTurns(): DataFrame =
+    spark.range(0, 2000, 1, 4).select(
+      concat(lit("c"), pmod(col("id"), lit(17L)).cast("string")).as("conv_id"),
+      col("id").cast("int").as("turn_idx"),
+      when(pmod(col("id"), lit(3L)) === 0, "tool").otherwise("user").as("role"),
+      repeat(lit("w "), pmod(col("id"), lit(9L)).cast("int")).as("text"),
+      when(pmod(col("id"), lit(3L)) === 0, "search").as("tool"),
+      timestamp_micros(lit(1704067200000000L) + col("id") * 600000000L).as("ts"))
+
   test("standardFeatures: ALL window features share ONE exchange on conv_id") {
     val t = Transcripts.fromEvents(Tables.events(spark, sf0001))
     val p = plan(WindowFeatures.standardFeatures(t))
@@ -23,6 +40,14 @@ class PlanSpec extends SparkSpec {
     // hashpartitioning appears once per distinct partitioning
     val exchanges = countOccurrences(p, "Exchange hashpartitioning")
     assert(exchanges <= 2, s"expected <=2 exchanges (derive + conv window), got $exchanges:\n$p")
+  }
+
+  test("standardFeatures plans one exchange, one Sort and at most two Window operators") {
+    val p = plan(WindowFeatures.standardFeatures(localTurns()))
+    assert(countOccurrences(p, "Exchange hashpartitioning") == 1, p)
+    assert(operators(p, "Sort") == 1, p)
+    val windows = operators(p, "Window")
+    assert(windows >= 1 && windows <= 2, s"got $windows Window operators:\n$p")
   }
 
   test("asOf union+window plan: exactly one hash exchange, no join node") {
@@ -203,9 +228,8 @@ class PlanSpec extends SparkSpec {
       s"the fp exchange must move (id, fp) only, but its input is:\n$child")
   }
 
-  test("AsOfJoin.auto routes to broadcast / plain / skew from input statistics") {
+  test("AsOfJoin.auto routes to plain / skew from the left key histogram") {
     import graft.windows.AsOfJoin
-    import spark.implicits._
     def turns(nConvs: Int, hotRows: Int): DataFrame =
       spark.range(3000).select(
         when(col("id") < hotRows, lit("hot"))
@@ -218,25 +242,22 @@ class PlanSpec extends SparkSpec {
       timestamp_micros(lit(1704067200000000L) + col("id") * 7000000L).as("ts"),
       col("id").as("seq"), col("id").cast("double").as("pval"))
 
-    // (a) dimension-sized right side -> broadcast shape, fact never shuffles
-    val pa = plan(AsOfJoin.auto(turns(40, 0), right, "conv_id", Seq("pval"), col("seq")))
-    assert(pa.contains("BroadcastHashJoin") && pa.toLowerCase.contains("asoflessorequal"),
-      s"expected the broadcast as-of shape:\n$pa")
-    // past the broadcast limit the left key histogram decides, and each
-    // route plans its shape:
-    // (b) uniform keys (75 rows each, fair share 3000/4) -> plain union+window
+    // (a) a dimension-sized right side takes no broadcast shape, which
+    // never beat the union+window by more than the probe that picked it
+    // (PERF_backfill_ops.json): uniform keys (75 rows each, fair share
+    // 3000/4) take the plain union+window
     val uniform = turns(40, 0)
     assert(Route.keyStats(uniform, "conv_id") == ((3000L, 75L)))
     assert(!Route.skewed(Route.keyStats(uniform, "conv_id"), spark))
-    val pb = plan(AsOfJoin.asOf(uniform, right, "conv_id", Seq("pval"), col("seq")))
-    assert(!pb.contains("Join") && !pb.contains("__bucket"),
-      s"expected the union+window shape:\n$pb")
-    // (c) one conversation owning 80% of rows -> skew buckets
+    val pa = plan(AsOfJoin.auto(uniform, right, "conv_id", Seq("pval"), col("seq")))
+    assert(!pa.contains("Join") && !pa.toLowerCase.contains("asoflessorequal") &&
+      !pa.contains("__bucket"), s"expected the union+window shape:\n$pa")
+    // (b) one conversation owning 80% of rows -> skew buckets
     val hot = turns(40, 2400)
     assert(Route.keyStats(hot, "conv_id") == ((3000L, 2400L)))
     assert(Route.skewed(Route.keyStats(hot, "conv_id"), spark))
-    val pc = plan(AsOfJoin.asOfSkew(hot, right, "conv_id", Seq("pval"), col("seq")))
-    assert(pc.contains("__bucket"), s"expected the skew-bucketed shape:\n$pc")
+    val pb = plan(AsOfJoin.auto(hot, right, "conv_id", Seq("pval"), col("seq")))
+    assert(pb.contains("__bucket"), s"expected the skew-bucketed shape:\n$pb")
   }
 
   test("rangeAgg is join-free: one union window, no pair materialization") {
@@ -252,6 +273,36 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), s"range agg must not materialize pairs:\n$p")
     val exchanges = countOccurrences(p, "Exchange hashpartitioning")
     assert(exchanges <= 2, s"got $exchanges exchanges:\n$p")
+  }
+
+  test("rangeAgg and rangeAggSkew with three aggregates plan one Window and one Sort") {
+    import graft.windows.AsOfJoin
+    val t = localTurns()
+    val left = t.select("conv_id", "turn_idx", "ts")
+    val right = t.select(col("conv_id"), col("ts"), col("turn_idx").cast("double").as("v"))
+    val aggs = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      "n" -> (c => count(c)), "s" -> (c => sum(c)), "m" -> (c => max(c)))
+    for ((name, out) <- Seq(
+        "rangeAgg" -> AsOfJoin.rangeAgg(left, right, "conv_id", "v", 3600L, aggs),
+        "rangeAggSkew" -> AsOfJoin.rangeAggSkew(left, right, "conv_id", "v", 3600L, aggs, 4))) {
+      val p = plan(out)
+      assert(operators(p, "Window") == 1 && operators(p, "Sort") == 1, s"$name:\n$p")
+    }
+  }
+
+  test("LSH and SimHash banding plan no Union") {
+    import graft.dedup.Dedup
+    import graft.text.TextFeatures
+    val docs = localTurns().select(col("turn_idx").cast("long").as("doc_id"),
+      concat_ws(" ", col("text"), col("conv_id"), col("role"), col("conv_id")).as("text"))
+    for ((name, out) <- Seq(
+        "lsh" -> Dedup.lshCandidates(Dedup.minhashSignatures(Dedup.shingles(docs))),
+        "lsh capped" -> Dedup.lshCandidates(Dedup.minhashSignatures(Dedup.shingles(docs)),
+          maxBucket = Some(10)),
+        "simhash" -> Dedup.simhashPairs(TextFeatures.simhash(TextFeatures.hashedTokens(docs))))) {
+      val p = plan(out)
+      assert(operators(p, "Union") == 0, s"$name:\n$p")
+    }
   }
 
   test("groupByThenSalted: fact rows never shuffle; aggregate broadcasts back") {

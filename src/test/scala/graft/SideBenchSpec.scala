@@ -16,10 +16,14 @@ class SideBenchSpec extends SparkSpec {
       val c = rec.take()
       assert(c.jobs == 2 && c.tasks == 8, c)
       assert(Seq(c.memSpilled, c.diskSpilled, c.gcMs, c.runMs, c.peakExecMem).forall(_ >= 0), c)
-      assert(rec.take() == SideBench.Counts(0, 0, 0, 0, 0, 0, 0))
+      assert(rec.take() == SideBench.Counts(0, 0, 0, 0, 0, 0, 0, 0))
       val sites = rec.callSites()
       assert(sites.map(_._2).sum == 2, sites)
       assert(sites.forall(_._1.startsWith("graft.SideBenchSpec")), sites)
+      // a literal no earlier plan held makes a new generated class
+      import org.apache.spark.sql.functions.{col, lit}
+      spark.range(10).select(col("id") + lit(System.nanoTime() % 1000000L + 7L)).collect()
+      assert(rec.take().compiles > 0)
     } finally rec.close()
   }
 

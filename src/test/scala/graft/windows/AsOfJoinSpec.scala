@@ -120,6 +120,31 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
+  test("a multi-aggregate rangeAgg equals one single-aggregate call per aggregate") {
+    val l = Transcripts.fromEvents(Tables.events(spark, sf0001))
+    val r = Tables.events(spark, sf0001)
+      .filter(col("event_type") === "purchase")
+      .select(concat(lit("c"), col("user_id").cast("string")).as("conv_id"),
+        col("ts").cast("timestamp").as("ts"), col("value"))
+    type Aggs = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)]
+    val aggs: Aggs = Seq("c1h" -> (c => count(c)), "s1h" -> (c => sum(c)), "mx1h" -> (c => max(c)))
+    val key = Seq("conv_id", "turn_idx")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(key.map(col): _*).collect().toSeq
+    val routes = Seq[(String, Aggs => org.apache.spark.sql.DataFrame)](
+      "rangeAgg" -> (a => AsOfJoin.rangeAgg(l, r, "conv_id", "value", 3600L, a)),
+      "rangeAggSkew" -> (a => AsOfJoin.rangeAggSkew(l, r, "conv_id", "value", 3600L, a, 8)))
+    for ((name, route) <- routes) {
+      val all = route(aggs)
+      assert(all.columns.toSeq == l.columns.toSeq ++ aggs.map(_._1), name)
+      val singles = aggs.map(a => route(Seq(a)).select((key :+ a._1).map(col): _*))
+        .reduce(_.join(_, key))
+      val got = rows(all.select((key ++ aggs.map(_._1)).map(col): _*))
+      assert(got.nonEmpty && got.exists(_.getLong(2) > 0), name)
+      assert(got == rows(singles), name)
+    }
+  }
+
   test("skew variants return empty on an empty time domain instead of NPEing") {
     // min/max over zero rows is NULL; the bucket math must short-circuit
     val l = left().filter(lit(false))

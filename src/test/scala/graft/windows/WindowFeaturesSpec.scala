@@ -50,6 +50,29 @@ class WindowFeaturesSpec extends SparkSpec {
     assert(got == Seq(2.0, 3.0, 4.0, 6.0))
   }
 
+  test("standardFeatures replaces an input column of an output's name in place") {
+    // the input already holds two output names, one early and one late
+    val in = Transcripts.fromEvents(Tables.events(spark, sf0001))
+      .withColumn("session_id", lit("stale")).withColumn("text_len", lit(-1.0))
+    val textLen = length(col("text")).cast("double")
+    // one column at a time from the single-feature helpers
+    val expected = in
+      .withColumn("text_len", textLen)
+      .withColumn("gap_secs", WindowFeatures.gapSecs())
+      .withColumn("prev_role", WindowFeatures.lagCol(col("role"), 1))
+      .withColumn("roll5_mean_len", WindowFeatures.rollingRows(avg, textLen, 5))
+      .withColumn("session_id", WindowFeatures.sessionId(1800L))
+      .withColumn("run_mean_len", WindowFeatures.groupByThenAtOrBefore(avg, textLen))
+      .withColumn("last_tool", WindowFeatures.backfill(col("tool")))
+    val got = WindowFeatures.standardFeatures(in)
+    assert(got.schema == expected.schema)
+    assert(got.columns.toSeq == in.columns.toSeq ++
+      Seq("gap_secs", "prev_role", "roll5_mean_len", "run_mean_len", "last_tool"))
+    val rows = got.orderBy("conv_id", "turn_idx").collect().toSeq
+    assert(rows.nonEmpty && rows.exists(_.getAs[Int]("session_id") > 0))
+    assert(rows == expected.orderBy("conv_id", "turn_idx").collect().toSeq)
+  }
+
   test("no temporal leakage: dropping later turns leaves earlier features unchanged") {
     val full = Transcripts.fromEvents(Tables.events(spark, sf0001))
     val feats = WindowFeatures.standardFeatures(full)
